@@ -2,6 +2,8 @@ package graft.core
 
 import java.util.concurrent.{Callable, ExecutionException, Executors, ThreadFactory}
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Overlap INDEPENDENT Spark actions from driver threads — the
@@ -19,14 +21,16 @@ import org.apache.spark.sql.SparkSession
   * Semantics: results return in INPUT order (never completion order), so
   * callers assemble deterministic outputs; the first failure propagates
   * its ORIGINAL exception (same observable behavior as the sequential
-  * loop it replaces) and best-effort CANCELS the sibling thunks'
-  * in-flight Spark jobs (each pool thread runs under a per-call job
-  * group; the failure path cancels the group before rethrowing, so a
-  * failed leg no longer leaves orphan sibling jobs writing to stores
-  * while the caller unwinds — sibling thunks themselves still run to
-  * their next action, which fails fast on the cancelled group). The pool
-  * is per-call and daemonized, so no state outlives the call and a JVM
-  * exit is never held up.
+  * loop it replaces) and CANCELS the sibling thunks' Spark jobs (each
+  * pool thread runs under a per-call job group; the failure path
+  * cancels the group's in-flight AND future jobs before rethrowing, so
+  * a failed leg leaves no orphan sibling jobs writing to stores while
+  * the caller unwinds — sibling thunks themselves still run to their
+  * next action, which fails fast on the cancelled group). Par calls
+  * nested inside a thunk are cancelled with it, including ones that
+  * start after the failure. The pool is per-call and daemonized, so a
+  * JVM exit is never held up; only a failed call's job-group id
+  * outlives the call.
   *
   * Spark-specific notes: concurrent actions on one SparkSession are a
   * supported, documented pattern (FIFO scheduling back-fills by default);
@@ -56,7 +60,12 @@ private[graft] object Par {
   private def configuredParallelism: Int =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .flatMap(_.conf.getOption(ParallelismConf))
-      .map(_.toInt)
+      .map { raw =>
+        val n = raw.trim.toIntOption.filter(_ >= 1)
+        require(n.nonEmpty,
+          s"$ParallelismConf must be an integer >= 1, got '$raw'")
+        n.get
+      }
       .getOrElse(DefaultParallelism)
 
   private val factory = new ThreadFactory {
@@ -70,6 +79,48 @@ private[graft] object Par {
 
   private val groupSeq = new java.util.concurrent.atomic.AtomicLong
 
+  /** Groups of failed calls, oldest first. Kept after the call returns,
+    * because a job a sibling submitted can outlive the sibling's thread;
+    * bounded like Spark's own set of cancelled job groups.
+    */
+  private val cancelledGroups = new java.util.LinkedHashSet[String]
+  private var listening: Option[SparkContext] = None
+
+  private def isCancelled(group: String): Boolean =
+    synchronized(cancelledGroups.contains(group))
+
+  /** Spark fails a cancelled group's later jobs at submission, but not
+    * the shuffle-map stages adaptive execution submits on its own, nor
+    * the jobs of Par calls nested in a thunk (their pool threads inherit
+    * the call's group as a job TAG, under a group of their own). This
+    * listener cancels both as they start.
+    */
+  private final class LateJobCanceller(sc: SparkContext)
+      extends SparkListener {
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(JobTagsProp)))
+        .toSeq.flatMap(_.split(',')).find(isCancelled)
+        .foreach(g => sc.cancelJob(e.jobId, s"Par call $g failed"))
+  }
+  private val JobTagsProp = "spark.job.tags"
+
+  /** Cancel a failed call's in-flight jobs, nested calls' included, and
+    * every job its threads and their nested calls submit later.
+    */
+  private def cancel(sc: SparkContext, group: String): Unit = {
+    synchronized {
+      if (!listening.contains(sc)) {
+        sc.addSparkListener(new LateJobCanceller(sc))
+        listening = Some(sc)
+      }
+      cancelledGroups.add(group)
+      if (cancelledGroups.size > 1000)
+        cancelledGroups.remove(cancelledGroups.iterator.next())
+    }
+    sc.cancelJobGroupAndFutureJobs(group)
+    sc.cancelJobsWithTag(group)
+  }
+
   def run[A](thunks: Seq[() => A],
       parallelism: Int = -1): Seq[A] = {
     if (thunks.lengthCompare(2) < 0) return thunks.map(t => t())
@@ -77,16 +128,19 @@ private[graft] object Par {
     val pool = Executors.newFixedThreadPool(
       math.min(width, thunks.size), factory)
     // one job group per call: the failure path cancels exactly this
-    // call's in-flight sibling jobs, never an outer caller's (nested
-    // Par calls get their own group — thread-local, set per pool thread)
+    // call's sibling jobs, never an outer caller's (job groups and tags
+    // are thread-local, set per pool thread; a nested call's threads
+    // inherit this call's tag)
     val session =
       SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val group = s"graft-par-${groupSeq.incrementAndGet()}"
     try {
       val fs = thunks.map(t => pool.submit(new Callable[A] {
         def call(): A = {
-          session.foreach(_.sparkContext
-            .setJobGroup(group, group, interruptOnCancel = false))
+          session.foreach { s =>
+            s.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
+            s.sparkContext.addJobTag(group)
+          }
           t()
         }
       }))
@@ -94,7 +148,7 @@ private[graft] object Par {
         try f.get()
         catch {
           case e: ExecutionException =>
-            session.foreach(_.sparkContext.cancelJobGroup(group))
+            session.foreach(s => cancel(s.sparkContext, group))
             throw e.getCause
         }
       }

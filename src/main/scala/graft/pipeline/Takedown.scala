@@ -75,7 +75,7 @@ object Takedown {
     */
   /** FAILURE CONTRACT (the legs run as concurrent driver threads since
     * round 15): a failing leg propagates its ORIGINAL exception, and the
-    * pool cancels the sibling legs' in-flight Spark jobs best-effort
+    * pool cancels the sibling legs' in-flight and later Spark jobs
     * ([[graft.core.Par]]'s per-call job group) — unlike the old
     * sequential loop, legs that started before the failure may have
     * completed their deletes. That is safe by construction: every leg is

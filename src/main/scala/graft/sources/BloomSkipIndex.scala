@@ -162,8 +162,8 @@ object BloomSkipIndex {
         // data files carry frozen PHYSICAL column names — after a
         // RENAME COLUMN the logical key must map through the manifest's
         // column mapping or this direct file read would fail
-        val physKey = VersionedTable.colMapAt(spark, tableDir, head)
-          .getOrElse(keyCol, keyCol)
+        val physKey = VersionedTable.manifestView(spark, tableDir, head)
+          .colMap.getOrElse(keyCol, keyCol)
         val frame = spark.read.format(tableFmt).load(newFiles: _*)
         (statsFor(frame, physKey), Some(frame.schema))
       }

@@ -626,8 +626,7 @@ final class GraftV2Table(val tableDir: String, val pinnedVersion: Option[Int])
   private[graft] def resolvedVersion: Int = pinnedVersion.getOrElse(
     VersionedTable.latestVersion(spark, tableDir))
 
-  private lazy val view: (Seq[String], Seq[String], Option[StructType],
-      Option[String], String) =
+  private lazy val view: VersionedTable.VManifest =
     VersionedTable.manifestView(spark, tableDir, resolvedVersion)
 
   /** The current partition spec as the public comma-joined string every
@@ -635,7 +634,7 @@ final class GraftV2Table(val tableDir: String, val pinnedVersion: Option[Int])
     * recorded spec) is refused loudly — a mutation must never guess the
     * grouping it rewrites under.
     */
-  private[graft] def specString: String = view._4.getOrElse(
+  private[graft] def specString: String = view.specOpt.getOrElse(
     throw new UnsupportedOperationException(
       s"table $tableDir has no recorded partition spec (legacy " +
         "manifest) — SQL DML needs one; run any append to record it"))
@@ -649,16 +648,15 @@ final class GraftV2Table(val tableDir: String, val pinnedVersion: Option[Int])
   override def name(): String = s"graft.`$tableDir`" +
     pinnedVersion.map(v => s"@v$v").getOrElse("")
 
-  override def schema(): StructType = view._3.getOrElse(
-    spark.read.format(view._5)
-      .load(view._1.map(l => s"$tableDir/$l"): _*).schema)
+  override def schema(): StructType = view.schemaOpt.getOrElse(
+    spark.read.format(view.fmt)
+      .load(view.leaves.map(l => s"$tableDir/$l"): _*).schema)
 
   override def partitioning(): Array[Transform] =
-    view._4.toSeq.flatMap(VersionedTable.specOf)
-      .map(GraftCatalog.spellingTransform).toArray
+    view.specCols.map(GraftCatalog.spellingTransform).toArray
 
   override def properties(): util.Map[String, String] =
-    Map("format" -> view._5, "location" -> tableDir,
+    Map("format" -> view.fmt, "location" -> tableDir,
       "version" -> resolvedVersion.toString).asJava
 
   /** The manifest's CHECK constraints, reported through the V2 surface
@@ -695,7 +693,7 @@ final class GraftV2Table(val tableDir: String, val pinnedVersion: Option[Int])
 
   override def partitionSchema(): StructType = {
     val bySchema = schema().fields.map(f => f.name -> f.dataType).toMap
-    StructType(view._4.toSeq.flatMap(_.split(',').toSeq).map(c =>
+    StructType(view.specOpt.toSeq.flatMap(_.split(',').toSeq).map(c =>
       org.apache.spark.sql.types.StructField(c,
         bySchema.getOrElse(c, org.apache.spark.sql.types.StringType),
         nullable = false)))
@@ -902,8 +900,7 @@ final class GraftMetadataTable(val tableDir: String, val kind: String)
       spark.createDataFrame(rows).toDF("name", "kind", "version")
     case "files" => VersionedTable.filesReport(spark, tableDir)
     case "partitions" =>
-      val head = VersionedTable.latestVersion(spark, tableDir)
-      val spec = VersionedTable.manifestView(spark, tableDir, head)._4
+      val spec = VersionedTable.recordedSpec(spark, tableDir)
         .map(sp => VersionedTable.specDirNames(VersionedTable.specOf(sp)))
         .getOrElse(throw new UnsupportedOperationException(
           s"table $tableDir has no recorded partition spec (legacy " +

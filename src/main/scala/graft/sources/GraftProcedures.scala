@@ -74,8 +74,7 @@ object GraftProcedures {
     * refuses legacy no-spec manifests loudly, like every mutator.
     */
   private def specOf(dir: String): String = {
-    val head = VersionedTable.latestVersion(spark, dir)
-    VersionedTable.manifestView(spark, dir, head)._4.getOrElse(
+    VersionedTable.recordedSpec(spark, dir).getOrElse(
       throw new UnsupportedOperationException(
         s"table $dir has no recorded partition spec (legacy manifest) — " +
           "maintenance procedures need one; run any append to record it"))

@@ -123,11 +123,10 @@ final class GraftSnapshotSource extends RelationProvider
     val ci = parameters.map { case (k, v) => (k.toLowerCase, v) }
     val tableDir = ci.getOrElse("path", throw new IllegalArgumentException(
       "graft-snapshot streaming requires a path"))
-    val head = VersionedTable.latestVersion(spark, tableDir)
-    val (leaves, _, schemaOpt, _, fmt) =
-      VersionedTable.manifestView(spark, tableDir, head)
-    val base = schemaOpt.getOrElse(
-      spark.read.format(fmt).load(leaves.map(l => s"$tableDir/$l"): _*).schema)
+    val m = VersionedTable.manifestView(spark, tableDir,
+      VersionedTable.latestVersion(spark, tableDir))
+    val base = m.schemaOpt.getOrElse(spark.read.format(m.fmt)
+      .load(m.leaves.map(l => s"$tableDir/$l"): _*).schema)
     val out =
       if (ci.get("readchangefeed").exists(_.trim.toBoolean)) {
         val f0 = VersionedChangeFeedSource.feedSchema(base)
@@ -190,25 +189,20 @@ final class GraftSnapshotSource extends RelationProvider
         else VersionedTable.resolveRef(spark, tableDir, v))
       .orElse(ci.get("timestampasof").map(versionAt(spark, tableDir, _)))
       .getOrElse(VersionedTable.latestVersion(spark, tableDir))
-    val (leaves, deletes, schemaOpt, specOpt, fmt) =
-      VersionedTable.manifestView(spark, tableDir, version)
-    if (deletes.nonEmpty) new SnapshotScanRelation(spark, tableDir, version)
+    val m = VersionedTable.manifestView(spark, tableDir, version)
+    if (m.deletes.nonEmpty) new SnapshotScanRelation(spark, tableDir, version)
     else {
-      val schema = schemaOpt.getOrElse(
-        spark.read.format(fmt).load(leaves.map(l => s"$tableDir/$l"): _*).schema)
-      // legacy manifests (no recorded schema) can carry no rename map
-      val colMap =
-        if (schemaOpt.isEmpty) Map.empty[String, String]
-        else VersionedTable.colMapAt(spark, tableDir, version)
-      val specCols = specOpt.map(VersionedTable.specOf).getOrElse(Nil)
+      val schema = m.schemaOpt.getOrElse(spark.read.format(m.fmt)
+        .load(m.leaves.map(l => s"$tableDir/$l"): _*).schema)
+      val colMap = m.colMap
       HadoopFsRelation(
-        location = new ManifestFileIndex(spark, tableDir, leaves, schema,
-          colMap, specCols),
+        location = new ManifestFileIndex(spark, tableDir, m.leaves, schema,
+          colMap, m.specCols),
         partitionSchema = new StructType(),
         dataSchema = schema,
         bucketSpec = None,
         fileFormat =
-          if (fmt == "orc") new ManifestOrcFormat(colMap)
+          if (m.fmt == "orc") new ManifestOrcFormat(colMap)
           else new ManifestParquetFormat(colMap),
         options = Map.empty)(spark)
     }
@@ -227,10 +221,7 @@ final class GraftSnapshotSource extends RelationProvider
         "graft-snapshot requires a path: df.write.format(\"graft-snapshot\").save(dir)"))
     val exists = VersionedTable.versions(spark, tableDir).nonEmpty
     val recordedSpec =
-      if (exists)
-        VersionedTable.manifestView(spark, tableDir,
-          VersionedTable.latestVersion(spark, tableDir))._4
-      else None
+      if (exists) VersionedTable.recordedSpec(spark, tableDir) else None
     lazy val partCol = ci.get("partitioncol").orElse(recordedSpec)
       .getOrElse(throw new IllegalArgumentException(
         "graft-snapshot write requires option(\"partitionCol\", …) when " +
@@ -1050,12 +1041,10 @@ final class VersionedChangeSource(sqlContext: SQLContext, tableDir: String,
         asStreaming(VersionedTable.readVersion(spark, tableDir, endV))
       case Some(f) if f >= endV => emptyBatch
       case Some(f) =>
-        val (fromLeaves, fromDeletes, _, _, _) =
-          VersionedTable.manifestView(spark, tableDir, f)
-        val (toLeaves, toDeletes, _, _, fmt) =
-          VersionedTable.manifestView(spark, tableDir, endV)
-        val removed = fromLeaves.toSet -- toLeaves.toSet
-        val vectorsGrew = (toDeletes.toSet -- fromDeletes.toSet).nonEmpty
+        val from = VersionedTable.manifestView(spark, tableDir, f)
+        val to = VersionedTable.manifestView(spark, tableDir, endV)
+        val removed = from.leaves.toSet -- to.leaves.toSet
+        val vectorsGrew = (to.deletes.toSet -- from.deletes.toSet).nonEmpty
         if ((removed.nonEmpty || vectorsGrew) && !ignoreChanges)
           throw new IllegalStateException(
             s"versions ${f + 1}..$endV at $tableDir contain a non-append " +
@@ -1065,19 +1054,18 @@ final class VersionedChangeSource(sqlContext: SQLContext, tableDir: String,
               "insert/delete change rows, restart from a fresh " +
               "checkpoint, or set ignoreChanges=true to re-emit " +
               "rewritten rows")
-        val added = toLeaves.filterNot(fromLeaves.toSet)
+        val added = to.leaves.filterNot(from.leaves.toSet)
         if (added.isEmpty) emptyBatch
         else {
           // RENAME COLUMN mapping: leaves carry frozen physical names.
           // A name absent from the map is its own physical name — which
           // also covers a stream pinned to pre-rename logical names
           // (those ARE the physical names).
-          val cm = scala.util.Try(
-            VersionedTable.colMapAt(spark, tableDir, endV))
+          val cm = scala.util.Try(to.colMap)
             .getOrElse(Map.empty[String, String])
           val raw = spark.read
             .schema(SnapshotConnector.physSchema(streamSchema, cm))
-            .format(fmt).load(added.map(l => s"$tableDir/$l"): _*)
+            .format(to.fmt).load(added.map(l => s"$tableDir/$l"): _*)
           asStreaming(
             if (cm.isEmpty) raw
             else raw.select(streamSchema.fields.toIndexedSeq.map(f =>
@@ -1208,7 +1196,7 @@ final class ChangeFeedRelation(spark: SparkSession, tableDir: String,
     spark.sqlContext
 
   override val schema: StructType = VersionedChangeFeedSource.feedSchema(
-    VersionedTable.manifestView(spark, tableDir, toV)._3.getOrElse(
+    VersionedTable.manifestView(spark, tableDir, toV).schemaOpt.getOrElse(
       VersionedTable.readVersion(spark, tableDir, toV).schema))
 
   override def buildScan(): RDD[Row] =

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampType}
+import org.json4s.{JArray, JInt, JNothing, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods
 
 import graft.pipeline.Locking
 
@@ -162,35 +164,31 @@ object VersionedTable {
     */
   private[graft] val NullPartSentinel = "__HIVE_DEFAULT_PARTITION__"
 
-  /** A version's full state: live data leaves, live position-delete dirs
-    * (merge-on-read — see [[deleteMergeOnRead]]), the subset of leaves
-    * any delete vector touches (`dirty`), the per-channel latest
-    * committed batch ids (`txns`, entries `channel=batchId` — the public
-    * Delta `txn` action shape backing [[appendOnce]]'s idempotence), and
-    * the table SCHEMA as of this version (encoded `name:type` entries —
-    * what makes add-nullable-column evolution safe: reads project every
-    * leaf through the manifest schema, so pre-evolution leaves fill the
-    * new columns with nulls instead of multi-root schema sampling
-    * deciding at random). Recording `dirty` in the manifest is what lets
-    * a snapshot read split clean leaves (plain scan, no join) from dirty
-    * ones (anti-join) without running a discovery job first.
+  /** A version's full state, the one value a commit writes: live data
+    * leaves, live position-delete dirs (merge-on-read — see
+    * [[deleteMergeOnRead]]), the subset of leaves any delete vector
+    * touches (`dirty`), the per-channel latest committed batch ids
+    * (`txns`, entries `channel=batchId` — the public Delta `txn` action
+    * shape backing [[appendOnce]]'s idempotence), the table SCHEMA as of
+    * this version (what makes add-nullable-column evolution safe: reads
+    * project every leaf through it), the partition spec, CHECK
+    * constraints, format plus feature markers, and the commit's `op`
+    * record. Recording `dirty` lets a snapshot read split clean leaves
+    * (plain scan) from dirty ones (anti-join) without a discovery job.
+    * Kernels derive the next version with `m.copy(...)`.
     */
-  private case class VManifest(leaves: Seq[String], deletes: Seq[String],
-      dirty: Seq[String], txns: Seq[String] = Nil,
-      schema: Seq[String] = Nil, partcol: Seq[String] = Nil,
-      constraints: Seq[String] = Nil, format: Seq[String] = Nil,
-      op: Seq[String] = Nil) {
+  private[sources] case class VManifest(leaves: Seq[String],
+      deletes: Seq[String] = Nil, dirty: Seq[String] = Nil,
+      txns: Seq[String] = Nil, schema: Seq[String] = Nil,
+      partcol: Seq[String] = Nil, constraints: Seq[String] = Nil,
+      format: Seq[String] = Nil, op: Seq[String] = Nil) {
     /** Data file format of every leaf ("parquet" default — legacy
       * manifests predate the field). One format per table: mixed-format
       * leaf sets are not a thing this design supports.
       */
     def fmt: String = format.headOption.getOrElse("parquet")
     /** ROW TRACKING enabled — the `format` array doubles as the
-      * table-feature list (entries past the head are feature markers):
-      * every commit kernel threads `m.format` verbatim, so a feature
-      * flag here can never be silently dropped by a kernel that was
-      * not taught about it — the property a dedicated manifest field
-      * would need 36 call sites to guarantee.
+      * table-feature list (entries past the head are feature markers).
       */
     def rowTracking: Boolean = format.contains(RowTrackingMarker)
     def dirtySet: Set[String] = dirty.toSet
@@ -218,7 +216,7 @@ object VersionedTable {
     def opKeys: Option[(String, Seq[String])] = op match {
       case Nil => None
       case entries =>
-        val d = entries.map(e => java.net.URLDecoder.decode(e, "UTF-8"))
+        val d = entries.map(urlDecode)
         Some((d.head, d.tail))
     }
     /** logical → physical NAME for RENAMEd columns and nested fields
@@ -260,11 +258,10 @@ object VersionedTable {
   final class ConstraintViolationException(msg: String)
     extends RuntimeException(msg)
 
-  /** Schema entries are URL-encoded `name:type` tokens: encoding keeps
-    * them clear of the manifest JSON separators (`"` `,` `]`) that
-    * [[writeManifest]] refuses, and of the ':' split char — a struct
-    * type's own colons arrive percent-encoded. Types round-trip through
-    * `catalogString` / `DataType.fromDDL`.
+  /** Schema entries are `name:type` tokens with each segment
+    * URL-encoded, which keeps them clear of the ':' split char — a
+    * struct type's own colons arrive percent-encoded. Types round-trip
+    * through `catalogString` / `DataType.fromDDL`.
     */
   private def encodeSchema(s: StructType): Seq[String] =
     s.fields.toSeq.map { f =>
@@ -324,25 +321,23 @@ object VersionedTable {
 
   private def encodeSchemaEntry(name: String, tpe: String,
       phys: Option[String], default: Option[String] = None): String = {
-    def enc(x: String) = java.net.URLEncoder.encode(x, "UTF-8")
     val p = phys.filter(_ != name)
-    val base = enc(name) + ":" + enc(tpe)
+    val base = urlEncode(name) + ":" + urlEncode(tpe)
     (p, default) match {
       case (None, None) => base
-      case (Some(ph), None) => base + ":" + enc(ph)
+      case (Some(ph), None) => base + ":" + urlEncode(ph)
       // an un-renamed column with a default keeps an EMPTY physical
       // segment so the default always sits at position 3
       case (ph, Some(d)) =>
-        base + ":" + ph.map(enc).getOrElse("") + ":" + enc(d)
+        base + ":" + ph.map(urlEncode).getOrElse("") + ":" + urlEncode(d)
     }
   }
 
   /** Encoded per-commit operation record: operation name followed by
-    * its pairing-key columns (all URL-encoded — names can carry the
-    * manifest's refused separators).
+    * its pairing-key columns, each URL-encoded.
     */
   private def encodeOp(name: String, keys: Seq[String]): Seq[String] =
-    (name +: keys).map(java.net.URLEncoder.encode(_, "UTF-8"))
+    (name +: keys).map(urlEncode)
 
   /** One decoded schema entry: (logical name, type,
     * physical-name-if-renamed, default-value-SQL-if-declared).
@@ -354,12 +349,12 @@ object VersionedTable {
   private def decodeSchemaEntries(entries: Seq[String])
       : Seq[(String, String, Option[String], Option[String])] =
     entries.map { e =>
-      def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-      def opt(s: String) = Some(s).filter(_.nonEmpty).map(dec)
+      def opt(s: String) = Some(s).filter(_.nonEmpty).map(urlDecode)
       e.split(':') match {
-        case Array(n, t) => (dec(n), dec(t), None, None)
-        case Array(n, t, p) => (dec(n), dec(t), opt(p), None)
-        case Array(n, t, p, d) => (dec(n), dec(t), opt(p), opt(d))
+        case Array(n, t) => (urlDecode(n), urlDecode(t), None, None)
+        case Array(n, t, p) => (urlDecode(n), urlDecode(t), opt(p), None)
+        case Array(n, t, p, d) =>
+          (urlDecode(n), urlDecode(t), opt(p), opt(d))
         case _ => throw new IllegalStateException(
           s"malformed manifest schema entry: '$e'")
       }
@@ -409,24 +404,44 @@ object VersionedTable {
     vs.last
   }
 
-  /** Fixed-shape parse of one named string array out of the manifest JSON.
-    * Exact only because [[writeManifest]] REFUSES any entry containing
-    * `"`/`,`/`]`: hive leaf encoding escapes most separators but NOT the
-    * comma, so a partition value containing one would otherwise corrupt
-    * the round-trip silently — the validation turns it into a loud
-    * commit-time error instead.
-    */
-  private def parseArray(text: String, key: String): Seq[String] = {
-    val marker = "\"" + key + "\":["
-    val i = text.indexOf(marker)
-    if (i < 0) Seq.empty
-    else {
-      val start = i + marker.length
-      val body = text.substring(start, text.indexOf(']', start)).trim
-      if (body.isEmpty) Seq.empty
-      else body.split(',').toSeq
-        .map(_.trim.stripPrefix("\"").stripSuffix("\""))
+  private def urlEncode(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+  private def urlDecode(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
+
+  private def jsonArray(xs: Seq[String]) = JArray(xs.map(JString(_)).toList)
+
+  /** An absent key (a manifest older than the key) reads as empty. */
+  private def stringsAt(json: JValue, key: String): Seq[String] =
+    json \ key match {
+      case JNothing => Nil
+      case JArray(xs) if xs.forall(_.isInstanceOf[JString]) =>
+        xs.collect { case JString(e) => e }
+      case other => throw new IllegalStateException(
+        s"'$key' is not a string array: ${JsonMethods.compact(other)}")
     }
+
+  /** `manifests/v<N>.json`: `version`, then the [[VManifest]] fields in
+    * order as string arrays, compact. `partcol` entries are stored
+    * URL-encoded; `schema`, `constraints` and `op` arrive encoded.
+    */
+  private[sources] def encodeManifest(version: Int, m: VManifest): String =
+    JsonMethods.compact(JObject(
+      "version" -> JInt(version),
+      "leaves" -> jsonArray(m.leaves), "deletes" -> jsonArray(m.deletes),
+      "dirty" -> jsonArray(m.dirty), "txns" -> jsonArray(m.txns),
+      "schema" -> jsonArray(m.schema),
+      "partcol" -> jsonArray(m.partcol.map(urlEncode)),
+      "constraints" -> jsonArray(m.constraints),
+      "format" -> jsonArray(m.format), "op" -> jsonArray(m.op)))
+
+  /** Inverse of [[encodeManifest]]; `version` is the file name's. A
+    * legacy un-encoded `partcol` entry decodes to itself.
+    */
+  private[sources] def decodeManifest(text: String): VManifest = {
+    val json = JsonMethods.parse(text)
+    def arr(key: String) = stringsAt(json, key)
+    VManifest(arr("leaves"), arr("deletes"), arr("dirty"), arr("txns"),
+      arr("schema"), arr("partcol").map(urlDecode), arr("constraints"),
+      arr("format"), arr("op"))
   }
 
   private def readManifestFull(spark: SparkSession, tableDir: String,
@@ -434,21 +449,11 @@ object VersionedTable {
     val f = fs(spark, tableDir)
     val p = new Path(s"${manifestsDir(tableDir)}/v$version.json")
     require(f.exists(p), s"version $version does not exist at $tableDir")
-    val in = f.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    // absent keys (older manifests) parse as empty — back-compatible
-    VManifest(parseArray(text, "leaves"), parseArray(text, "deletes"),
-      parseArray(text, "dirty"), parseArray(text, "txns"),
-      parseArray(text, "schema"),
-      // partcol entries are URL-encoded on write (a transform spelling
-      // like bucket(4,id) carries JSON separators); decoding a plain
-      // column name is the identity, so legacy manifests read unchanged
-      parseArray(text, "partcol")
-        .map(java.net.URLDecoder.decode(_, "UTF-8")),
-      parseArray(text, "constraints"), parseArray(text, "format"),
-      parseArray(text, "op"))
+    decodeManifest(readText(f, p))
   }
+
+  private def readHead(spark: SparkSession, tableDir: String): VManifest =
+    readManifestFull(spark, tableDir, latestVersion(spark, tableDir))
 
   /** The head manifest's recorded table schema, when present — the
     * authoritative full-table shape (evolution lands here first), which
@@ -457,8 +462,7 @@ object VersionedTable {
     */
   def headSchemaOpt(spark: SparkSession,
       tableDir: String): Option[StructType] =
-    readManifestFull(spark, tableDir,
-      latestVersion(spark, tableDir)).schemaOpt
+    readHead(spark, tableDir).schemaOpt
 
   /** Content identity of a committed manifest file — the uniqueness
     * token plan caches key on. A committed version's CONTENT is
@@ -488,7 +492,7 @@ object VersionedTable {
     * must read [[liveDataFiles]] entries with.
     */
   def headFormat(spark: SparkSession, tableDir: String): String =
-    readManifestFull(spark, tableDir, latestVersion(spark, tableDir)).fmt
+    readHead(spark, tableDir).fmt
 
   // ---- named refs: BRANCHES and TAGS over the version history -------
   //
@@ -523,20 +527,26 @@ object VersionedTable {
       : Seq[(String, String, Int)] = {
     val f = fs(spark, tableDir)
     refsFileVersions(f, tableDir).lastOption.toSeq.flatMap { n =>
-      val p = new Path(s"${manifestsDir(tableDir)}/refs-v$n.json")
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      parseArray(text, "refs").map { e =>
-        e.split(':') match {
-          case Array(name, kind, v) =>
-            (java.net.URLDecoder.decode(name, "UTF-8"), kind, v.toInt)
-          case _ =>
-            throw new IllegalStateException(s"malformed ref entry: '$e'")
-        }
-      }
+      decodeRefs(readText(f,
+        new Path(s"${manifestsDir(tableDir)}/refs-v$n.json")))
     }.sortBy(_._1)
   }
+
+  /** `refs-v<N>.json` text: `{"refs":[...]}`, one `name:kind:version`
+    * entry per ref ([[requireRefName]] keeps ':' out of names).
+    */
+  private[sources] def encodeRefs(refs: Seq[(String, String, Int)]): String =
+    JsonMethods.compact(JObject("refs" ->
+      jsonArray(refs.map { case (n, k, v) => s"$n:$k:$v" })))
+
+  private[sources] def decodeRefs(text: String): Seq[(String, String, Int)] =
+    stringsAt(JsonMethods.parse(text), "refs").map { e =>
+      e.split(':') match {
+        case Array(name, kind, v) => (name, kind, v.toInt)
+        case _ =>
+          throw new IllegalStateException(s"malformed ref entry: '$e'")
+      }
+    }
 
   /** Resolve a ref name to its version; loud on an unknown name. */
   def resolveRef(spark: SparkSession, tableDir: String, name: String): Int =
@@ -554,23 +564,9 @@ object VersionedTable {
       attempts += 1
       val cur = refsFileVersions(fsys, tableDir).lastOption.getOrElse(0)
       val next = f(tableRefs(spark, tableDir))
-      val entries = next.map { case (n, k, v) =>
-        java.net.URLEncoder.encode(n, "UTF-8") + ":" + k + ":" + v
-      }
-      entries.foreach(e => require(
-        !e.exists(c => c == '"' || c == ',' || c == ']'),
-        s"ref entry carries a JSON separator: $e"))
-      fsys.mkdirs(new Path(manifestsDir(tableDir)))
-      val staging = new Path(
-        s"${manifestsDir(tableDir)}/_staging_refs-v${cur + 1}-${nonce()}.json")
-      val json = s"""{"refs":[${entries.map("\"" + _ + "\"")
-        .mkString(",")}]}"""
-      val out = fsys.create(staging, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      val committed =
-        new Path(s"${manifestsDir(tableDir)}/refs-v${cur + 1}.json")
-      if (publishNoClobber(fsys, staging, committed)) return
-      fsys.delete(staging, false)
+      if (publishText(fsys,
+          new Path(s"${manifestsDir(tableDir)}/refs-v${cur + 1}.json"),
+          encodeRefs(next))) return
     }
     throw new IllegalStateException(
       s"ref update lost the CAS race 20 times at $tableDir")
@@ -679,38 +675,42 @@ object VersionedTable {
       } catch { case _: java.nio.file.FileAlreadyExistsException => false }
     } else !f.exists(committed) && f.rename(staging, committed)
 
-  private[sources] def writeManifest(spark: SparkSession, tableDir: String,
-      version: Int, leaves: Seq[String], deletes: Seq[String] = Nil,
-      dirty: Seq[String] = Nil, txns: Seq[String] = Nil,
-      schema: Seq[String] = Nil, partcol: Seq[String] = Nil,
-      constraints: Seq[String] = Nil, format: Seq[String] = Nil,
-      op: Seq[String] = Nil): Unit = {
-    // spec spellings may carry transform-call separators — encoded here,
-    // decoded at parse (identity for plain column names)
-    val partcolEnc = partcol.map(java.net.URLEncoder.encode(_, "UTF-8"))
-    (leaves ++ deletes ++ dirty ++ txns ++ schema ++ partcolEnc ++
-      constraints ++ format ++ op).foreach(e =>
-      require(!e.exists(c => c == '"' || c == ',' || c == ']'),
-        s"manifest entry contains a JSON separator (partition value with " +
-          s"',', '\"' or ']'?): $e"))
-    val f = fs(spark, tableDir)
-    f.mkdirs(new Path(manifestsDir(tableDir)))
+  /** Write `text` to `_staging_<name>-<nonce>.<ext>` beside `committed`,
+    * then [[publishNoClobber]] it; false (staging file removed) when
+    * `committed` already exists.
+    */
+  private def publishText(f: FileSystem, committed: Path,
+      text: String): Boolean = {
+    val name = committed.getName
+    val (base, ext) = name.splitAt(name.lastIndexOf('.'))
     val staging =
-      new Path(s"${manifestsDir(tableDir)}/_staging_v$version-${nonce()}.json")
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"version":$version,"leaves":${arr(leaves)},""" +
-      s""""deletes":${arr(deletes)},"dirty":${arr(dirty)},""" +
-      s""""txns":${arr(txns)},"schema":${arr(schema)},""" +
-      s""""partcol":${arr(partcolEnc)},"constraints":${arr(constraints)},""" +
-      s""""format":${arr(format)},"op":${arr(op)}}"""
+      new Path(committed.getParent, s"_staging_$base-${nonce()}$ext")
+    f.mkdirs(committed.getParent)
     val out = f.create(staging, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    val committed = new Path(s"${manifestsDir(tableDir)}/v$version.json")
-    if (!publishNoClobber(f, staging, committed)) {
-      f.delete(staging, false)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    val ok = publishNoClobber(f, staging, committed)
+    if (!ok) f.delete(staging, false)
+    ok
+  }
+
+  private def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  /** Commit `next` as `version`; losing the CAS to a concurrent
+    * committer raises [[CommitConflictException]]. The recorded `op`
+    * ([[encodeOp]]) is the argument, never `next.op`, so no commit
+    * inherits the operation of the manifest `next` was copied from.
+    */
+  private[sources] def writeManifest(spark: SparkSession, tableDir: String,
+      version: Int, next: VManifest, op: Seq[String] = Nil): Unit = {
+    if (!publishText(fs(spark, tableDir),
+        new Path(s"${manifestsDir(tableDir)}/v$version.json"),
+        encodeManifest(version, next.copy(op = op))))
       throw new CommitConflictException(
         s"version $version already committed at $tableDir")
-    }
     // periodic manifest CHECKPOINT (best-effort, never fails a commit):
     // folds every covered add-root's sidecars into one file so relation
     // builds read checkpoint + post-checkpoint tail instead of
@@ -718,7 +718,7 @@ object VersionedTable {
     // cost stops growing with its commit history (the Delta checkpoint
     // cadence; every 10th commit like Delta's default)
     if (version > 0 && version % CheckpointInterval == 0)
-      try writeCheckpoint(spark, tableDir, version, leaves)
+      try writeCheckpoint(spark, tableDir, version, next.leaves)
       catch { case _: Exception => () }
   }
 
@@ -745,15 +745,9 @@ object VersionedTable {
     FileStats.checkpointBody(f, tableDir, version, roots) match {
       case None => false
       case Some(body) =>
-        f.mkdirs(new Path(checkpointsDir(tableDir)))
-        val staging = new Path(
-          s"${checkpointsDir(tableDir)}/_staging_v$version-${nonce()}.tsv")
-        val out = f.create(staging, true)
-        try out.write(body.getBytes("UTF-8")) finally out.close()
-        val committed = new Path(s"${checkpointsDir(tableDir)}/v$version.tsv")
-        val ok = publishNoClobber(f, staging, committed)
-        if (!ok) f.delete(staging, false)
-        else f.listStatus(new Path(checkpointsDir(tableDir))).toSeq
+        val ok = publishText(f,
+          new Path(s"${checkpointsDir(tableDir)}/v$version.tsv"), body)
+        if (ok) f.listStatus(new Path(checkpointsDir(tableDir))).toSeq
           .foreach(st => st.getPath.getName match {
             case CheckpointRe(n) if n.toInt < version =>
               f.delete(st.getPath, false)
@@ -789,11 +783,8 @@ object VersionedTable {
         })
       if (versions.isEmpty) None
       else {
-        val p = new Path(dir, s"v${versions.max}.tsv")
-        val in = f.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        Some(FileStats.parseCheckpoint(text))
+        Some(FileStats.parseCheckpoint(
+          readText(f, new Path(dir, s"v${versions.max}.tsv"))))
       }
     }
     try attempt()
@@ -1202,13 +1193,13 @@ object VersionedTable {
     require(!rowTracking || format == "parquet",
       s"row tracking needs _metadata.row_index, which Spark exposes " +
         s"for parquet only — requested format '$format'")
-    writeManifest(df.sparkSession, tableDir, 0,
+    writeManifest(df.sparkSession, tableDir, 0, VManifest(
       writeDataDirCols(df, tableDir, 0, specOf(partCol), format,
         rowTrackingOverride = Some(rowTracking)),
       txns = txn.map { case (c, b) => s"$c=$b" }.toSeq,
       schema = encodeSchema(df.schema), partcol = specOf(partCol),
       format = Seq(format) ++
-        (if (rowTracking) Seq(RowTrackingMarker) else Nil))
+        (if (rowTracking) Seq(RowTrackingMarker) else Nil)))
   }
 
   /** Atomic-CTAS staging, step 1 ([[GraftStagedTable]]): write v0's
@@ -1234,9 +1225,9 @@ object VersionedTable {
     require(versions(spark, tableDir).isEmpty,
       s"concurrent create: a manifest appeared at $tableDir while this " +
         "CTAS was staging")
-    writeManifest(spark, tableDir, 0, leaves,
+    writeManifest(spark, tableDir, 0, VManifest(leaves,
       schema = encodeSchema(schema), partcol = specOf(partCol),
-      format = Seq(format))
+      format = Seq(format)))
   }
 
   /** REPLACE TABLE staging, step 1 ([[GraftStagedTable]]): write the
@@ -1263,9 +1254,9 @@ object VersionedTable {
   private[sources] def commitStagedReplace(spark: SparkSession,
       tableDir: String, leaves: Seq[String], schema: StructType,
       partCol: String, format: String, baseVersion: Int): Unit =
-    writeManifest(spark, tableDir, baseVersion + 1, leaves,
+    writeManifest(spark, tableDir, baseVersion + 1, VManifest(leaves,
       schema = encodeSchema(schema), partcol = specOf(partCol),
-      format = Seq(format))
+      format = Seq(format)))
 
   /** Append a batch as a new version: new leaves are ADDED to the live
     * list; existing leaves are untouched (same-partition batches coexist
@@ -1298,9 +1289,9 @@ object VersionedTable {
     val schema = resolveAppendSchema(df, spark, tableDir, m,
       allowEvolution = true)
     requireConstraints(df, m, "append")
-    writeManifest(spark, tableDir, v,
-      m.leaves ++ writeDataDirCols(df, tableDir, v, cols, m.fmt), m.deletes,
-      m.dirty, m.txns, schema, cols, m.constraints, m.format)
+    writeManifest(spark, tableDir, v, m.copy(
+      leaves = m.leaves ++ writeDataDirCols(df, tableDir, v, cols, m.fmt),
+      schema = schema, partcol = cols))
   }
 
   /** Schema contract for a batch against the table, returning the schema
@@ -1390,9 +1381,9 @@ object VersionedTable {
       val schema = resolveAppendSchema(df, spark, tableDir, m,
         allowEvolution = true)
       requireConstraints(df, m, "overwrite")
-      writeManifest(spark, tableDir, base + 1,
-        writeDataDirCols(df, tableDir, base + 1, cols, m.fmt), Nil, Nil,
-        m.txns, schema, cols, m.constraints, m.format)
+      writeManifest(spark, tableDir, base + 1, m.copy(
+        leaves = writeDataDirCols(df, tableDir, base + 1, cols, m.fmt),
+        deletes = Nil, dirty = Nil, schema = schema, partcol = cols))
     }
 
   /** DYNAMIC-partition overwrite as ONE manifest commit — the semantics
@@ -1421,8 +1412,7 @@ object VersionedTable {
       .map(r => cols.indices.map(r.getString): Seq[String]).toSet
     if (affected.isEmpty) {
       // empty input replaces nothing: a no-op commit, not a truncate
-      writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty,
-        m.txns, m.schema, m.partcol, m.constraints, m.format)
+      writeManifest(spark, tableDir, v, m)
       return
     }
     def inAffected(frame: DataFrame): Column = affected.toSeq.map(t =>
@@ -1453,9 +1443,8 @@ object VersionedTable {
           carriedKept.select(left.columns.toIndexedSeq.map(col): _*))
       }
     val newLeaves = writeDataDirCols(survivors, tableDir, v, cols, m.fmt)
-    writeManifest(spark, tableDir, v, kept ++ newLeaves, m.deletes,
-      m.dirty.filter(kept.contains), m.txns, m.schema, cols,
-      m.constraints, m.format)
+    writeManifest(spark, tableDir, v, m.copy(leaves = kept ++ newLeaves,
+      dirty = m.dirty.filter(kept.contains), partcol = cols))
   }
 
   /** A version's commit time = its manifest file's mtime — the clock
@@ -1507,9 +1496,10 @@ object VersionedTable {
         allowEvolution = true)
       val txns = m.txns.filterNot(_.startsWith(channel + "=")) :+ entry
       requireConstraints(df, m, "appendOnce")
-      writeManifest(spark, tableDir, base + 1,
-        m.leaves ++ writeDataDirCols(df, tableDir, base + 1, cols, m.fmt),
-        m.deletes, m.dirty, txns, schema, cols, m.constraints, m.format)
+      writeManifest(spark, tableDir, base + 1, m.copy(
+        leaves =
+          m.leaves ++ writeDataDirCols(df, tableDir, base + 1, cols, m.fmt),
+        txns = txns, schema = schema, partcol = cols))
     }
   }
 
@@ -1724,8 +1714,8 @@ object VersionedTable {
       .distinct().collect()
       .map(r => cols.indices.map(r.getString): Seq[String]).toSet
     if (affected.isEmpty) {
-      writeManifest(spark, tableDir, v, m.leaves ++ addLeaves(), m.deletes,
-        m.dirty, m.txns, m.schema, m.partcol, m.constraints, m.format)
+      writeManifest(spark, tableDir, v,
+        m.copy(leaves = m.leaves ++ addLeaves()))
       return
     }
     // spec-aware pruning: same-spec leaves prune by dir value; leaves
@@ -1749,9 +1739,9 @@ object VersionedTable {
     val survivors = keep(readView(spark, tableDir, m,
       onlyLeaves = Some(hit), withRowIds = m.rowTracking))
     val newLeaves = writeDataDirCols(survivors, tableDir, v, cols, m.fmt)
-    writeManifest(spark, tableDir, v, kept ++ newLeaves ++ addLeaves(),
-      m.deletes, m.dirty.filter(kept.contains), m.txns, m.schema, cols,
-      m.constraints, m.format)
+    writeManifest(spark, tableDir, v, m.copy(
+      leaves = kept ++ newLeaves ++ addLeaves(),
+      dirty = m.dirty.filter(kept.contains), partcol = cols))
   }
 
   /** REPLACE WHERE — the Delta `replaceWhere` / static
@@ -1766,8 +1756,7 @@ object VersionedTable {
   def replaceWhere(df: DataFrame, tableDir: String, partCol: String,
       pred: Column): Unit = {
     val spark = df.sparkSession
-    val m = readManifestFull(spark, tableDir,
-      latestVersion(spark, tableDir))
+    val m = readHead(spark, tableDir)
     resolveAppendSchema(df, spark, tableDir, m, allowEvolution = false)
     requireConstraints(df, m, "replaceWhere")
     val outside = df.filter(!coalesce(pred, lit(false))).count()
@@ -1898,8 +1887,7 @@ object VersionedTable {
         .distinct().collect()
         .map(r => cols.indices.map(r.getString): Seq[String]).toSet
       if (affected.isEmpty) {
-        writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty,
-          m.txns, m.schema, m.partcol, m.constraints, m.format)
+        writeManifest(spark, tableDir, v, m)
         return
       }
       val (sameSpec, foreign) =
@@ -1932,9 +1920,8 @@ object VersionedTable {
       // exact delete+insert representation
       val pairKey = view.columns.toSeq
         .filterNot(c => assignMap.contains(c) || c == RowIdCol)
-      writeManifest(spark, tableDir, v, kept ++ newLeaves, m.deletes,
-        m.dirty.filter(kept.contains), m.txns, m.schema, cols,
-        m.constraints, m.format,
+      writeManifest(spark, tableDir, v, m.copy(leaves = kept ++ newLeaves,
+        dirty = m.dirty.filter(kept.contains), partcol = cols),
         op = if (pairKey.isEmpty) Nil else encodeOp("update", pairKey))
     }
 
@@ -1972,8 +1959,7 @@ object VersionedTable {
         .distinct().collect()
         .map(r => cols.indices.map(r.getString): Seq[String]).toSet
       if (affected.isEmpty) {
-        writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty,
-          m.txns, m.schema, m.partcol, m.constraints, m.format)
+        writeManifest(spark, tableDir, v, m)
         return
       }
       val (sameSpec, foreign) =
@@ -1999,9 +1985,8 @@ object VersionedTable {
       val newLeaves = writeDataDirCols(updated, tableDir, v, cols, m.fmt)
       val pairKey = view.columns.toSeq
         .filterNot(c => assignMap.contains(c) || c == RowIdCol)
-      writeManifest(spark, tableDir, v, kept ++ newLeaves, m.deletes,
-        m.dirty.filter(kept.contains), m.txns, m.schema, cols,
-        m.constraints, m.format,
+      writeManifest(spark, tableDir, v, m.copy(leaves = kept ++ newLeaves,
+        dirty = m.dirty.filter(kept.contains), partcol = cols),
         op = if (pairKey.isEmpty) Nil else encodeOp("update", pairKey))
     }
 
@@ -2048,16 +2033,14 @@ object VersionedTable {
       .toSet
     if (touched.isEmpty) {
       fs(spark, tableDir).delete(new Path(s"$tableDir/$rel"), true)
-      writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty, m.txns,
-        m.schema, m.partcol, m.constraints, m.format)
+      writeManifest(spark, tableDir, v, m)
     } else
       // a commit failure (crash, concurrent-commit collision) must not
       // leave the vector dir as a permanent unreferenced orphan — no
       // manifest will ever point at it, so [[vacuum]]'s referenced-path
       // sweep would otherwise never collect it
-      try writeManifest(spark, tableDir, v, m.leaves, m.deletes :+ rel,
-        (m.dirtySet ++ touched).toSeq.sorted, m.txns, m.schema, m.partcol,
-        m.constraints, m.format)
+      try writeManifest(spark, tableDir, v, m.copy(deletes = m.deletes :+ rel,
+        dirty = (m.dirtySet ++ touched).toSeq.sorted))
       catch { case e: Throwable =>
         fs(spark, tableDir).delete(new Path(s"$tableDir/$rel"), true)
         throw e
@@ -2149,13 +2132,7 @@ object VersionedTable {
 
   private def readRowIdFloor(f: FileSystem, tableDir: String): Long = {
     val p = rowIdFloorPath(tableDir)
-    if (!f.exists(p)) 0L
-    else {
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      text.trim.toLong
-    }
+    if (!f.exists(p)) 0L else readText(f, p).trim.toLong
   }
 
   /** (tableDir-relative data file, base id) for every DERIVED-id file
@@ -2180,8 +2157,7 @@ object VersionedTable {
   /** Head-manifest row-tracking flag — the connector/catalog probe. */
   private[sources] def rowTrackingEnabled(spark: SparkSession,
       tableDir: String): Boolean =
-    readManifestFull(spark, tableDir,
-      latestVersion(spark, tableDir)).rowTracking
+    readHead(spark, tableDir).rowTracking
 
   private def rowTrackingForWrite(spark: SparkSession, tableDir: String,
       version: Int): Boolean =
@@ -2223,9 +2199,8 @@ object VersionedTable {
           FileStats.writeRowIds(f, rootP, entries)
         }
       }
-      writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty,
-        m.txns, m.schema, m.partcol, m.constraints,
-        m.format :+ RowTrackingMarker)
+      writeManifest(spark, tableDir, v,
+        m.copy(format = m.format :+ RowTrackingMarker))
     }
 
   /** Fallback file enumeration for a legacy add-root with no
@@ -2255,8 +2230,7 @@ object VersionedTable {
     require(m.rowTracking || {
       // pre-enable versions of a now-tracked table still answer (null
       // ids) — a table that NEVER tracked refuses loudly
-      readManifestFull(spark, tableDir,
-        latestVersion(spark, tableDir)).rowTracking
+      readHead(spark, tableDir).rowTracking
     }, s"table at $tableDir does not track row ids — enable with " +
       "enableRowTracking() or create(rowTracking = true)")
     readView(spark, tableDir, m, withRowIds = true)
@@ -2269,16 +2243,20 @@ object VersionedTable {
     * match disagree with manifest leaf paths and silently disable the
     * delete-vector anti-join). `_metadata.file_path` is a qualified URI
     * whose scheme/authority rendering varies by filesystem, so the anchor
-    * is the scheme-free normalized path, located then substringed.
+    * is the scheme-free normalized path, located then substringed. The
+    * URI is percent-decoded first, so a leaf whose directory name holds
+    * an escaped partition value (`p__p=z%5Dw`, `p__p=a b`) compares
+    * equal to its manifest path; a literal '+' is protected from
+    * `url_decode`'s form decoding, which would read it as a space.
     */
   private def withPositions(df: DataFrame, tableDir: String): DataFrame = {
     val marker =
       fs(df.sparkSession, tableDir).makeQualified(new Path(tableDir))
         .toUri.getPath + "/"
+    val path = url_decode(
+      regexp_replace(col("_metadata.file_path"), "\\+", "%2B"))
     df.withColumn(PosFile,
-        col("_metadata.file_path").substr(
-          locate(marker, col("_metadata.file_path")) + marker.length,
-          lit(Int.MaxValue)))
+        path.substr(locate(marker, path) + marker.length, lit(Int.MaxValue)))
       .withColumn(PosIdx, col("_metadata.row_index"))
   }
 
@@ -2360,25 +2338,11 @@ object VersionedTable {
     }
   }
 
-  /** Connector-facing view of one version's manifest ([[GraftSnapshotSource]]):
-    * live leaves, live delete-vector dirs (the connector falls back to
-    * the anti-join read path when any are pending; the change source
-    * diffs the list to detect non-append commits), the recorded schema,
-    * and the current partition spec.
+  /** Connector-facing read of one version's manifest
+    * ([[GraftSnapshotSource]], [[GraftV2Table]]).
     */
   private[sources] def manifestView(spark: SparkSession, tableDir: String,
-      version: Int): (Seq[String], Seq[String], Option[StructType],
-      Option[String], String) = {
-    val m = readManifestFull(spark, tableDir, version)
-    (m.leaves, m.deletes, m.schemaOpt, m.specOpt, m.fmt)
-  }
-
-  /** The version's logical→physical column mapping (RENAME COLUMN) —
-    * what connector-facing reads translate leaf scans through.
-    */
-  private[sources] def colMapAt(spark: SparkSession, tableDir: String,
-      version: Int): Map[String, String] =
-    readManifestFull(spark, tableDir, version).colMap
+      version: Int): VManifest = readManifestFull(spark, tableDir, version)
 
   private[sources] def leafPartColOf(leaf: String): String = leafPartCol(leaf)
   private[sources] def leafPartValueOf(leaf: String): String = leafPartValue(leaf)
@@ -2479,7 +2443,7 @@ object VersionedTable {
     */
   def liveDataFiles(spark: SparkSession, tableDir: String): Seq[String] = {
     val f = fs(spark, tableDir)
-    val m = readManifestFull(spark, tableDir, latestVersion(spark, tableDir))
+    val m = readHead(spark, tableDir)
     val byRoot = m.leaves.groupBy(addRootOf)
     val lists = fileListsFor(spark, tableDir, byRoot.keys.toSeq)
     byRoot.iterator.flatMap { case (root, ls) =>
@@ -2514,7 +2478,7 @@ object VersionedTable {
   def filesReport(spark: SparkSession, tableDir: String): DataFrame = {
     import spark.implicits._
     val f = fs(spark, tableDir)
-    val m = readManifestFull(spark, tableDir, latestVersion(spark, tableDir))
+    val m = readHead(spark, tableDir)
     val byRoot = m.leaves.groupBy(addRootOf)
     val lists = fileListsFor(spark, tableDir, byRoot.keys.toSeq)
     val VRe = "add-v(\\d+)-.*".r
@@ -2608,10 +2572,10 @@ object VersionedTable {
          .join(batchKeys, keyCols, "left_anti")
          .unionByName(
            if (m.rowTracking) withNullRowId(batch) else batch))
-    writeManifest(spark, tableDir, v,
-      kept ++ writeDataDirCols(rewritten, tableDir, v, cols, m.fmt),
-      m.deletes, m.dirty.filter(kept.contains), m.txns, schema, cols,
-      m.constraints, m.format, op = encodeOp("merge", keyCols))
+    writeManifest(spark, tableDir, v, m.copy(
+      leaves = kept ++ writeDataDirCols(rewritten, tableDir, v, cols, m.fmt),
+      dirty = m.dirty.filter(kept.contains), schema = schema,
+      partcol = cols), op = encodeOp("merge", keyCols))
   }
 
   /** Generalized MERGE — the Delta clause family over the same COW
@@ -2862,10 +2826,10 @@ object VersionedTable {
     if (hasUpdate || insert.isDefined ||
         bySource.exists(b => !b._2 && b._3.nonEmpty))
       requireConstraints(rewritten, m, "mergeInto")
-    writeManifest(spark, tableDir, v,
-      kept ++ writeDataDirCols(rewritten, tableDir, v, cols, m.fmt),
-      m.deletes, m.dirty.filter(kept.contains), m.txns, m.schema, cols,
-      m.constraints, m.format, op = encodeOp("merge", keyCols))
+    writeManifest(spark, tableDir, v, m.copy(
+      leaves = kept ++ writeDataDirCols(rewritten, tableDir, v, cols, m.fmt),
+      dirty = m.dirty.filter(kept.contains), partcol = cols),
+      op = encodeOp("merge", keyCols))
   }
 
   /** CDC between two snapshots: full-outer join on `keyCol`, content
@@ -3215,8 +3179,7 @@ object VersionedTable {
     withCommitRetry {
       val m = readManifestFull(spark, tableDir, toVersion)
       val v = latestVersion(spark, tableDir) + 1
-      writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty, m.txns,
-        m.schema, m.partcol, m.constraints, m.format)
+      writeManifest(spark, tableDir, v, m)
     }
 
   /** PARTITION-SPEC EVOLUTION (the Iceberg capability Delta lacks): a
@@ -3240,8 +3203,7 @@ object VersionedTable {
       cols.foreach(c => require(names.contains(c),
         s"cannot evolve partition spec to '$c': not a table column"))
     }
-    writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty, m.txns,
-      m.schema, cols, m.constraints, m.format)
+    writeManifest(spark, tableDir, v, m.copy(partcol = cols))
   }
 
   /** ALTER TABLE ADD COLUMNS as a METADATA-ONLY evolution commit: the
@@ -3325,8 +3287,7 @@ object VersionedTable {
       (n, dt.catalogString)
     }).map { case (n, t) => encodeSchemaEntry(n, t, physOf.get(n),
       defaultOf.get(n).orElse(storedDefault.get(n))) }
-    writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty, m.txns,
-      widened, m.partcol, m.constraints, m.format)
+    writeManifest(spark, tableDir, v, m.copy(schema = widened))
   }
 
   /** Lossless type WIDENINGS `ALTER COLUMN … TYPE` accepts: integral
@@ -3388,8 +3349,7 @@ object VersionedTable {
         encodeSchemaEntry(n, newType.catalogString, p, d)
       case (n, t, p, d) => encodeSchemaEntry(n, t, p, d)
     }
-    writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty, m.txns,
-      widened, m.partcol, m.constraints, m.format)
+    writeManifest(spark, tableDir, v, m.copy(schema = widened))
   }
 
   /** RENAME COLUMN — a metadata-only commit through the schema entry's
@@ -3468,8 +3428,7 @@ object VersionedTable {
         encodeSchemaEntry(newName, t, buildPhysSeg(top, pnested), d)
       case (n, t, phys, d) => encodeSchemaEntry(n, t, phys, d)
     }
-    writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty, m.txns,
-      renamed, m.partcol, m.constraints, m.format)
+    writeManifest(spark, tableDir, v, m.copy(schema = renamed))
   }
 
   /** DROP COLUMN — the schema-level complement of the takedown story:
@@ -3522,11 +3481,8 @@ object VersionedTable {
         }
         val narrowed = table.filterNot(t => dropping.contains(t._1))
         require(narrowed.nonEmpty, "cannot drop every column")
-        writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty,
-          m.txns,
-          narrowed.map { case (n, t, p, d) =>
-            encodeSchemaEntry(n, t, p, d) },
-          m.partcol, m.constraints, m.format)
+        writeManifest(spark, tableDir, v, m.copy(schema =
+          narrowed.map { case (n, t, p, d) => encodeSchemaEntry(n, t, p, d) }))
       }
     }
 
@@ -3648,8 +3604,7 @@ object VersionedTable {
         encodeSchemaEntry(n, nt.catalogString, p, d)
       case (n, t, p, d) => encodeSchemaEntry(n, t, p, d)
     }
-    writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty,
-      m.txns, rewritten, m.partcol, m.constraints, m.format)
+    writeManifest(spark, tableDir, v, m.copy(schema = rewritten))
   }
 
   /** DROP a nested struct field — the metadata-only narrowing commit at
@@ -3685,8 +3640,7 @@ object VersionedTable {
         encodeSchemaEntry(n, nt.catalogString, buildPhysSeg(top, kept), d)
       case (n, t, p, d) => encodeSchemaEntry(n, t, p, d)
     }
-    writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty,
-      m.txns, rewritten, m.partcol, m.constraints, m.format)
+    writeManifest(spark, tableDir, v, m.copy(schema = rewritten))
   }
 
   /** WIDEN a nested struct field's type — [[widenColumnType]] one tree
@@ -3724,8 +3678,7 @@ object VersionedTable {
         encodeSchemaEntry(n, nt.catalogString, p, d)
       case (n, t, p, d) => encodeSchemaEntry(n, t, p, d)
     }
-    writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty,
-      m.txns, rewritten, m.partcol, m.constraints, m.format)
+    writeManifest(spark, tableDir, v, m.copy(schema = rewritten))
   }
 
   /** RENAME a nested struct field — the column-mapping commit one tree
@@ -3796,8 +3749,7 @@ object VersionedTable {
           buildPhysSeg(top, withSelf), d)
       case (n, t, p, d) => encodeSchemaEntry(n, t, p, d)
     }
-    writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty,
-      m.txns, rewritten, m.partcol, m.constraints, m.format)
+    writeManifest(spark, tableDir, v, m.copy(schema = rewritten))
   }
 
   /** ADD CONSTRAINT — record a named CHECK constraint (a boolean SQL
@@ -3827,13 +3779,12 @@ object VersionedTable {
     // error on an unknown column) and pins its type to boolean
     require(head.select(expr(check)).schema.head.dataType == BooleanType,
       s"CHECK expression is not boolean: $check")
-    val entry = java.net.URLEncoder.encode(name, "UTF-8") + ":" +
-      java.net.URLEncoder.encode(check, "UTF-8")
+    val entry = urlEncode(name) + ":" + urlEncode(check)
     requireConstraints(head,
       VManifest(Nil, Nil, Nil, constraints = Seq(entry)),
       s"ADD CONSTRAINT '$name' (existing rows already violate it)")
-    writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty, m.txns,
-      m.schema, m.partcol, m.constraints :+ entry, m.format)
+    writeManifest(spark, tableDir, v,
+      m.copy(constraints = m.constraints :+ entry))
   }
 
   /** DROP CONSTRAINT — metadata-only commit removing a named CHECK
@@ -3847,8 +3798,7 @@ object VersionedTable {
       s"no constraint '$name' at $tableDir")
     val kept = m.constraints.filterNot(e =>
       decodeSchemaPairs(Seq(e)).head._1 == name)
-    writeManifest(spark, tableDir, v, m.leaves, m.deletes, m.dirty, m.txns,
-      m.schema, m.partcol, kept)
+    writeManifest(spark, tableDir, v, m.copy(constraints = kept))
   }
 
   /** The head manifest's recorded partition spec (the comma-joined
@@ -3858,14 +3808,13 @@ object VersionedTable {
     * its table commits under.
     */
   def recordedSpec(spark: SparkSession, tableDir: String): Option[String] =
-    readManifestFull(spark, tableDir,
-      latestVersion(spark, tableDir)).specOpt
+    readHead(spark, tableDir).specOpt
 
   /** The head's live leaf dirs, relative to the table dir — the ops
     * probe [[binpack]]'s by-reference guarantees are asserted against.
     */
   def liveLeaves(spark: SparkSession, tableDir: String): Seq[String] =
-    readManifestFull(spark, tableDir, latestVersion(spark, tableDir)).leaves
+    readHead(spark, tableDir).leaves
 
   /** The head's distinct partition VALUE TUPLES (current spec order) —
     * the SHOW PARTITIONS answer. Same-spec leaves answer from the
@@ -3878,7 +3827,7 @@ object VersionedTable {
     */
   def partitionTuples(spark: SparkSession, tableDir: String)
       : Seq[Seq[String]] = {
-    val m = readManifestFull(spark, tableDir, latestVersion(spark, tableDir))
+    val m = readHead(spark, tableDir)
     val cols = m.specCols
     require(cols.nonEmpty,
       s"table $tableDir has no recorded partition spec (legacy manifest)")
@@ -3897,7 +3846,7 @@ object VersionedTable {
   /** The head's (name, check-expression) constraint pairs. */
   def checkConstraints(spark: SparkSession, tableDir: String)
       : Seq[(String, String)] =
-    readManifestFull(spark, tableDir, latestVersion(spark, tableDir))
+    readHead(spark, tableDir)
       .constraintPairs
 
   /** Split a batch by the table's HEAD constraints: (clean rows, labeled
@@ -3942,7 +3891,7 @@ object VersionedTable {
   def appendQuarantine(df: DataFrame, tableDir: String, partCol: String,
       quarantineDir: String): (Long, Long) = {
     val spark = df.sparkSession
-    val m = readManifestFull(spark, tableDir, latestVersion(spark, tableDir))
+    val m = readHead(spark, tableDir)
     val cs = m.constraintPairs
     if (cs.isEmpty) {
       val n = df.count()
@@ -3985,7 +3934,7 @@ object VersionedTable {
   def constraintViolations(df: DataFrame, tableDir: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val m = readManifestFull(spark, tableDir, latestVersion(spark, tableDir))
+    val m = readHead(spark, tableDir)
     constraintViolationCounts(df, m)
       .map { case (n, e, c) => (n, e, c) }
       .toDF("constraint", "check_expr", "violations")
@@ -4008,10 +3957,11 @@ object VersionedTable {
     val cols = specOf(partCol)
     requireSpec(m, cols, "compact")
     val folded = readView(spark, tableDir, m, withRowIds = m.rowTracking)
-    writeManifest(spark, tableDir, v,
-      writeDataDirCols(folded, tableDir, v, cols, m.fmt), txns = m.txns,
+    writeManifest(spark, tableDir, v, m.copy(
+      leaves = writeDataDirCols(folded, tableDir, v, cols, m.fmt),
+      deletes = Nil, dirty = Nil,
       schema = if (m.schema.nonEmpty) m.schema else encodeSchema(folded.schema),
-      partcol = cols, constraints = m.constraints, format = m.format)
+      partcol = cols))
   }
 
   /** FORMAT MIGRATION — rewrite the head into a new data-file format
@@ -4038,13 +3988,12 @@ object VersionedTable {
         "cannot convert a row-tracked table away from parquet — fresh " +
           "row-id derivation needs _metadata.row_index (parquet-only)")
       val folded = readView(spark, tableDir, m, withRowIds = m.rowTracking)
-      writeManifest(spark, tableDir, v,
-        writeDataDirCols(folded, tableDir, v, cols, newFormat),
-        txns = m.txns,
+      writeManifest(spark, tableDir, v, m.copy(
+        leaves = writeDataDirCols(folded, tableDir, v, cols, newFormat),
+        deletes = Nil, dirty = Nil,
         schema =
           if (m.schema.nonEmpty) m.schema else encodeSchema(folded.schema),
-        partcol = cols, constraints = m.constraints,
-        format = Seq(newFormat))
+        partcol = cols, format = Seq(newFormat)))
     })
 
   /** OPTIMIZE (bin-packing) — the Delta OPTIMIZE / Iceberg
@@ -4102,9 +4051,9 @@ object VersionedTable {
         val folded = readView(spark, tableDir, m, onlyLeaves = Some(fold),
           withRowIds = m.rowTracking)
         val newLeaves = writeDataDirCols(folded, tableDir, v, cols, m.fmt)
-        writeManifest(spark, tableDir, v, (kept ++ newLeaves).sorted,
-          m.deletes, m.dirty.filter(kept.contains), m.txns, m.schema,
-          cols, m.constraints, m.format)
+        writeManifest(spark, tableDir, v, m.copy(
+          leaves = (kept ++ newLeaves).sorted,
+          dirty = m.dirty.filter(kept.contains), partcol = cols))
         (fold.size, newLeaves.size)
       }
     }
@@ -4243,12 +4192,12 @@ object VersionedTable {
       // drop from the manifest (the whole-table case keeps its clean
       // post-OPTIMIZE manifest)
       val keptDirty = m.dirty.filter(kept.contains)
-      writeManifest(spark, tableDir, v, (kept ++ newLeaves).sorted,
+      writeManifest(spark, tableDir, v, m.copy(
+        leaves = (kept ++ newLeaves).sorted,
         deletes = if (keptDirty.isEmpty) Nil else m.deletes,
-        dirty = keptDirty, txns = m.txns,
+        dirty = keptDirty,
         schema = if (m.schema.nonEmpty) m.schema else encodeSchema(folded.schema),
-        partcol = cols, constraints = m.constraints,
-        format = m.format)
+        partcol = cols))
       }
     }
 
@@ -4438,7 +4387,7 @@ object VersionedTable {
       orphanGraceMs: Long = DefaultOrphanGraceMs): Boolean =
     Locking.withStoreLock(spark, tableDir) {
       require(maxLeavesPerPartition >= 1, "maxLeavesPerPartition must be >= 1")
-      val m = readManifestFull(spark, tableDir, latestVersion(spark, tableDir))
+      val m = readHead(spark, tableDir)
       requireSpec(m, specOf(partCol), "maintain")
       val worst =
         if (m.leaves.isEmpty) 0
@@ -6103,8 +6052,7 @@ object VersionedTable {
       val out = f.create(rowIdFloorPath(dstDir), true)
       try out.write(floor.toString.getBytes("UTF-8")) finally out.close()
     }
-    writeManifest(spark, dstDir, 0, m.leaves, m.deletes, m.dirty, m.txns,
-      m.schema, m.partcol, m.constraints, m.format)
+    writeManifest(spark, dstDir, 0, m)
     (linkedN, copiedN)
   }
 
@@ -6161,7 +6109,7 @@ object VersionedTable {
     * a silently wrong count is worse than a scan.
     */
   def countMeta(spark: SparkSession, tableDir: String): Seq[(String, Long)] = {
-    val m = readManifestFull(spark, tableDir, latestVersion(spark, tableDir))
+    val m = readHead(spark, tableDir)
     val f = fs(spark, tableDir)
     val byRoot = m.leaves.groupBy(addRootOf)
     // file enumeration from the _files.tsv sidecars / checkpoint (zero
@@ -6240,7 +6188,7 @@ object VersionedTable {
     */
   def boundsMeta(spark: SparkSession, tableDir: String, cols: Seq[String])
       : Seq[(String, Option[String], Option[String], Long)] = {
-    val m = readManifestFull(spark, tableDir, latestVersion(spark, tableDir))
+    val m = readHead(spark, tableDir)
     require(m.deletes.isEmpty, "boundsMeta: pending delete vectors may " +
       "have removed an extremum — compact first, then bounds are sound")
     val sch = m.schemaOpt.getOrElse(throw new IllegalStateException(

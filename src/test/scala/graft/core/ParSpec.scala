@@ -1,7 +1,13 @@
 package graft.core
 
+import java.util.concurrent.CountDownLatch
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.concurrent.{Await, Promise, TimeoutException}
+import scala.concurrent.duration._
+import scala.util.Try
+
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.testkit.SparkTestSession
@@ -72,5 +78,64 @@ class ParSpec extends AnyFunSuite {
         "job-group cancellation did not reach it")
     val waited = (System.nanoTime() - t0) / 1e9
     assert(waited < 60, f"drain took $waited%.1f s")
+  }
+
+  test("a malformed spark.graft.par.parallelism names the setting") {
+    // a session of its own, so no other caller sees the bad values
+    val iso = SparkTestSession.isolated()
+    SparkSession.setActiveSession(iso)
+    try for (bad <- Seq("eight", "0", "-2", "")) {
+      iso.conf.set(Par.ParallelismConf, bad)
+      val e = intercept[IllegalArgumentException] {
+        Par.run(Seq(() => 1, () => 2))
+      }
+      assert(e.getMessage.contains(Par.ParallelismConf), bad)
+    } finally SparkSession.setActiveSession(spark)
+  }
+
+  test("after a failure, a sibling's next action fails fast, " +
+      "also inside a nested Par.run") {
+    spark // Par takes the session (and its job groups) from the active one
+    val lateTag = "par-spec-late"
+    for (nested <- Seq(false, true)) {
+      val released = new CountDownLatch(1)
+      val unwound = new CountDownLatch(1)
+      val outcome = Promise[Long]()
+      // a sibling between actions when the failure lands: it ignores
+      // the pools' shutdown interrupts (as code outside a Spark wait
+      // does) and submits its next action, an aggregate whose adaptive
+      // plan starts with a shuffle-map stage, after Par.run rethrew
+      val late = () => {
+        var waiting = true
+        while (waiting)
+          try { released.await(); waiting = false }
+          catch { case _: InterruptedException => () }
+        spark.sparkContext.addJobTag(lateTag)
+        outcome.complete(Try(spark.range(0, 1000000L, 1, 4)
+          .filter((id: java.lang.Long) => { Thread.sleep(1); id % 2 == 0 })
+          .count()))
+        ()
+      }
+      val sibling =
+        if (nested) () =>
+          try { Par.run[Unit](Seq(late, () => ())); () }
+          finally unwound.countDown()
+        else late
+      intercept[IllegalStateException] {
+        Par.run[Unit](Seq(
+          () => throw new IllegalStateException("die"), sibling))
+      }
+      // release only once the nested call has shut its pool down, so no
+      // interrupt reaches the sibling's Spark wait
+      if (nested) unwound.await()
+      released.countDown()
+      try {
+        val got = Try(Await.result(outcome.future, 30.seconds))
+        assert(got.isFailure &&
+            !got.failed.get.isInstanceOf[TimeoutException],
+          s"nested=$nested: the sibling's post-failure job was not " +
+            s"cancelled as a future job of the failed call: $got")
+      } finally spark.sparkContext.cancelJobsWithTag(lateTag)
+    }
   }
 }

@@ -127,6 +127,20 @@ class ConstraintSpec extends AnyFunSuite {
     val _ = constrainedV // rollback-style reads use readVersion; detail is head-only
   }
 
+  test("dropping a constraint keeps the table's format and feature markers") {
+    val orc = Files.createTempDirectory("graft-ck-drop-orc").toString
+    VersionedTable.create(fixture(), orc, "pdate", format = "orc")
+    val tracked = Files.createTempDirectory("graft-ck-drop-rt").toString
+    VersionedTable.create(fixture(), tracked, "pdate", rowTracking = true)
+    for (dir <- Seq(orc, tracked)) {
+      VersionedTable.addCheckConstraint(spark, dir, "amount_pos", "amount > 0")
+      VersionedTable.dropCheckConstraint(spark, dir, "amount_pos")
+    }
+    assert(VersionedTable.headFormat(spark, orc) === "orc")
+    assert(VersionedTable.readLatest(spark, orc).count() === 4)
+    assert(VersionedTable.rowTrackingEnabled(spark, tracked))
+  }
+
   test("quarantine routing: every row lands in exactly one table, labeled") {
     val dir = mkTable("quar")
     VersionedTable.addCheckConstraint(spark, dir, "kind_known", "kind IN ('a','b')")

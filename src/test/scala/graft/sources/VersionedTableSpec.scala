@@ -198,17 +198,44 @@ class VersionedTableSpec extends AnyFunSuite {
       .select("id").as[Long].collect().sorted.toSeq === Seq(1L, 3L, 4L, 6L))
   }
 
-  test("a partition value containing a manifest separator is refused loudly") {
-    val dir = Files.createTempDirectory("graft-vt-comma").toString
-    val bad = Seq((1L, "a", "2024-01-01,x", 10L))
-      .toDF("id", "kind", "pdate", "amount")
-    // hive path escaping does NOT escape ',' — without the writeManifest
-    // validation this would commit a manifest whose round-trip silently
-    // splits one leaf path into two
-    val e = intercept[IllegalArgumentException] {
-      VersionedTable.create(bad, dir, "pdate")
+  test("partition values carrying JSON separators (, \" ]) round-trip " +
+      "through create, append, delete, update, MoR delete and compact") {
+    val dir = Files.createTempDirectory("graft-vt-sep").toString
+    val parts = Seq("a,b", "x\"y", "z]w")
+    def rows(ids: Range) = ids.map(i => (i.toLong, parts(i % 3), i * 10L))
+    type R = (Long, String, Long)
+    def sorted(rs: Seq[R]) = rs.sortBy(_._1)
+    def read(df: org.apache.spark.sql.DataFrame): Seq[R] =
+      sorted(df.select("id", "p", "amount").as[(Long, String, Long)]
+        .collect().toSeq)
+    // the model: each version's rows, derived by plain Scala from the
+    // previous version's
+    val model = scala.collection.mutable.ArrayBuffer.empty[Seq[R]]
+    def commit(next: Seq[R]): Unit = {
+      model += sorted(next)
+      assert(read(VersionedTable.readLatest(spark, dir)) === model.last,
+        s"head after version ${model.size - 1}")
     }
-    assert(e.getMessage.contains("separator"))
+    VersionedTable.create(rows(1 to 9).toDF("id", "p", "amount"), dir, "p")
+    commit(rows(1 to 9))
+    VersionedTable.append(rows(10 to 15).toDF("id", "p", "amount"), dir, "p")
+    commit(model.last ++ rows(10 to 15))
+    VersionedTable.delete(spark, dir, "p", $"p" === "a,b" && $"id" < 7L)
+    commit(model.last.filterNot(r => r._2 == "a,b" && r._1 < 7L))
+    VersionedTable.update(spark, dir, "p", $"p" === "x\"y",
+      Seq("amount" -> ($"amount" + 1L)))
+    commit(model.last.map(r => if (r._2 == "x\"y") r.copy(_3 = r._3 + 1L)
+      else r))
+    VersionedTable.deleteMergeOnRead(spark, dir, $"id" % 2L === 0L)
+    commit(model.last.filterNot(_._1 % 2L == 0L))
+    VersionedTable.compact(spark, dir, "p")
+    commit(model.last)
+    assert(VersionedTable.latestVersion(spark, dir) === model.size - 1)
+    model.indices.foreach(v => assert(read(spark.sql(
+      s"SELECT * FROM graft.`$dir` VERSION AS OF $v")) === model(v),
+      s"VERSION AS OF $v"))
+    assert(VersionedTable.partitionTuples(spark, dir) ===
+      parts.sorted.map(Seq(_)))
   }
 
   test("optimistic commits: a stale attempt conflicts, the retry loses no delta") {
@@ -442,7 +469,8 @@ class VersionedTableSpec extends AnyFunSuite {
     for (w <- 0 until 8) pool.execute { () =>
       start.await()
       try {
-        VersionedTable.writeManifest(spark, dir, 1, Seq(s"data/fake-w$w"))
+        VersionedTable.writeManifest(spark, dir, 1,
+          VersionedTable.VManifest(Seq(s"data/fake-w$w")))
         won.add(w)
       } catch { case _: VersionedTable.CommitConflictException => lost.add(w) }
     }

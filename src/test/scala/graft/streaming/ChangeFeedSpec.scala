@@ -90,6 +90,20 @@ class ChangeFeedSpec extends AnyFunSuite {
       ("update_preimage", 20L)))
   }
 
+  test("an unkeyed commit after a keyed UPDATE keeps delete+insert — " +
+      "no commit inherits its base's operation record") {
+    val dir = newTable((1L, "2024-01-01", 10L), (2L, "2024-01-01", 20L))
+    VersionedTable.update(spark, dir, "pdate", $"id" === 2L,
+      Seq("amount" -> lit(222L))) // v1: records update on (id, pdate)
+    // v2 removes id=2 and re-adds it with a new amount; REPLACE WHERE
+    // records no pairing key, so nothing may pair its rows
+    VersionedTable.replaceWhere(
+      Seq((2L, "2024-01-01", 999L)).toDF("id", "pdate", "amount"),
+      dir, "pdate", $"id" === 2L)
+    assert(triples(VersionedTable.changeFeed(spark, dir, 1, 2))
+      === Seq(("delete", 2L, 2L), ("insert", 2L, 2L)))
+  }
+
   test("MERGE change rows pair on the merge key: matched updates as " +
       "pre/postimage, fresh keys as plain inserts") {
     val dir = newTable((1L, "2024-01-01", 10L), (2L, "2024-01-01", 20L),
