@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Cast, EqualTo, Exists, Expression, InSubquery, ListQuery, Literal, Not, OuterReference, ScalarSubquery, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -444,15 +444,15 @@ private[plans] object GraftDml {
     * nested-loop cap in a single pass) against the persisted frame the
     * kernel reuses.
     */
-  def resolveNotIn(frames: Seq[(Seq[String], org.apache.spark.sql.DataFrame)])
-      : (Seq[(Seq[String], org.apache.spark.sql.DataFrame)], Option[Column],
-        Boolean, Seq[(Seq[String], org.apache.spark.sql.DataFrame)]) = {
+  def resolveNotIn(frames: Seq[(Seq[String], DataFrame)])
+      : (Seq[(Seq[String], DataFrame)], Option[Column],
+        Boolean, Seq[(Seq[String], DataFrame)]) = {
     import org.apache.spark.sql.functions.{col => fcol}
     var poisoned = false
     var notNull: Option[Column] = None
-    val anti = Seq.newBuilder[(Seq[String], org.apache.spark.sql.DataFrame)]
+    val anti = Seq.newBuilder[(Seq[String], DataFrame)]
     val nullAware =
-      Seq.newBuilder[(Seq[String], org.apache.spark.sql.DataFrame)]
+      Seq.newBuilder[(Seq[String], DataFrame)]
     frames.foreach { case (ks, f) =>
       // ONE aggregate answers all three probes (emptiness, all-NULL
       // tuple presence, nested-loop cap) over the persisted frame —
@@ -491,6 +491,61 @@ private[plans] object GraftDml {
       }
     }
     (anti.result(), notNull, poisoned, nullAware.result())
+  }
+
+  /** Run a membership statement over its frames: materialize each
+    * subquery once, persisted for the command's duration — the kernel
+    * reads each frame up to three times (affected-tuple probe,
+    * foreign-leaf discovery, rewrite) — resolve the NOT IN sets
+    * ([[resolveNotIn]]), fold the residual, and unpersist afterwards.
+    * When every join conjunct resolved away (empty NOT IN sets) the
+    * statement is the plain-predicate form and `plain` runs on the
+    * folded residual; otherwise `joined` gets the key, anti-key,
+    * null-aware tuple-NOT-IN and correlated-scalar frames with it.
+    */
+  def withMembership(spark: SparkSession,
+      keys: Seq[(Seq[String], LogicalPlan)],
+      antiKeys: Seq[(Seq[String], LogicalPlan)],
+      notInKeys: Seq[(Seq[String], LogicalPlan)],
+      probes: Seq[(LogicalPlan, Boolean)],
+      residual: Option[Expression],
+      scalars: Seq[(Seq[String], LogicalPlan, String)])(
+      plain: Column => Unit)(
+      joined: (Seq[(Seq[String], DataFrame)], Option[Column],
+        Seq[(Seq[String], DataFrame)], Seq[(Seq[String], DataFrame)],
+        Seq[(Seq[String], DataFrame, String)]) => Unit): Unit = {
+    import org.apache.spark.sql.functions.lit
+    def materialize(ks: Seq[(Seq[String], LogicalPlan)]) =
+      ks.map { case (k, plan) =>
+        k -> GraftSqlBridge.ofRows(spark, plan).toDF(k: _*).persist()
+      }
+    val frames = materialize(keys)
+    val antiFrames = materialize(antiKeys)
+    val notInFrames = materialize(notInKeys)
+    // correlated-scalar frames: grouped aggregates keyed on the outer
+    // columns, one value column each
+    val scalarFrames = scalars.map { case (ks, plan, gen) =>
+      (ks, GraftSqlBridge.ofRows(spark, plan)
+        .toDF((ks :+ gen): _*).persist(), gen)
+    }
+    try {
+      val (notInAnti, notNull, poisoned, nullAware) = resolveNotIn(notInFrames)
+      val res: Option[Column] =
+        if (!probesPass(spark, probes) || poisoned) Some(lit(false))
+        else {
+          val base = residual.map(r => rebound(resolveScalars(spark, r)))
+          (base, notNull) match {
+            case (Some(a), Some(b)) => Some(a && b)
+            case (a, b) => a.orElse(b)
+          }
+        }
+      val allAnti = antiFrames ++ notInAnti
+      if (frames.isEmpty && allAnti.isEmpty && nullAware.isEmpty &&
+          scalarFrames.isEmpty) plain(res.getOrElse(lit(true)))
+      else joined(frames, res, allAnti, nullAware, scalarFrames)
+    } finally ((frames ++ antiFrames ++ notInFrames).map(_._2) ++
+      scalarFrames.map(_._2))
+      .foreach(_.unpersist(blocking = false))
   }
 
   /** Row cap for tuple NOT IN's broadcast-nested-loop set side. */
@@ -780,51 +835,9 @@ case class GraftDeleteMatchingCommand(tableDir: String, spec: String,
     scalars: Seq[(Seq[String], LogicalPlan, String)] = Nil)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.lit
-    // the kernel reads each key frame up to three times (affected-tuple
-    // probe, foreign-leaf discovery, survivor rewrite) — persist for the
-    // command's duration so the subquery runs once, not per action
-    def materialize(ks: Seq[(Seq[String], LogicalPlan)]) =
-      ks.map { case (k, plan) =>
-        k -> GraftSqlBridge.ofRows(spark, plan).toDF(k: _*).persist()
-      }
-    val frames = materialize(keys)
-    val antiFrames = materialize(antiKeys)
-    val notInFrames = materialize(notInKeys)
-    // correlated-scalar frames: grouped aggregates keyed on the outer
-    // columns, one value column each — persisted for the same
-    // probe/discover/rewrite reuse as the membership frames
-    val scalarFrames = scalars.map { case (ks, plan, gen) =>
-      (ks, GraftSqlBridge.ofRows(spark, plan)
-        .toDF((ks :+ gen): _*).persist(), gen)
-    }
-    try {
-      val (notInAnti, notNull, poisoned, nullAware) =
-        GraftDml.resolveNotIn(notInFrames)
-      val res: Option[Column] =
-        if (!GraftDml.probesPass(spark, probes) || poisoned)
-          Some(lit(false))
-        else {
-          val base = residual.map(r =>
-            GraftDml.rebound(GraftDml.resolveScalars(spark, r)))
-          (base, notNull) match {
-            case (Some(a), Some(b)) => Some(a && b)
-            case (a, b) => a.orElse(b)
-          }
-        }
-      val allAnti = antiFrames ++ notInAnti
-      // every join conjunct resolved away (empty NOT IN sets): the
-      // statement is the plain-predicate delete
-      if (frames.isEmpty && allAnti.isEmpty && nullAware.isEmpty &&
-          scalarFrames.isEmpty)
-        VersionedTable.delete(spark, tableDir, spec,
-          res.getOrElse(lit(true)))
-      else
-        VersionedTable.deleteMatching(spark, tableDir, spec, frames, res,
-          allAnti, nullAware, scalarFrames)
-    } finally ((frames ++ antiFrames ++ notInFrames).map(_._2) ++
-      scalarFrames.map(_._2))
-      .foreach(_.unpersist(blocking = false))
+    GraftDml.withMembership(spark, keys, antiKeys, notInKeys, probes,
+      residual, scalars)(VersionedTable.delete(spark, tableDir, spec, _))(
+      VersionedTable.deleteMatching(spark, tableDir, spec, _, _, _, _, _))
     Seq.empty
   }
 }
@@ -843,48 +856,14 @@ case class GraftUpdateMatchingCommand(tableDir: String, spec: String,
     scalars: Seq[(Seq[String], LogicalPlan, String)] = Nil)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.lit
-    // persisted for the same probe/discover/rewrite reuse as the
-    // delete-matching command
-    def materialize(ks: Seq[(Seq[String], LogicalPlan)]) =
-      ks.map { case (k, plan) =>
-        k -> GraftSqlBridge.ofRows(spark, plan).toDF(k: _*).persist()
-      }
-    val frames = materialize(keys)
-    val antiFrames = materialize(antiKeys)
-    val notInFrames = materialize(notInKeys)
-    val scalarFrames = scalars.map { case (ks, plan, gen) =>
-      (ks, GraftSqlBridge.ofRows(spark, plan)
-        .toDF((ks :+ gen): _*).persist(), gen)
+    lazy val boundAssigns = assignments.map { case (n, e) =>
+      n -> GraftDml.rebound(GraftDml.resolveScalars(spark, e))
     }
-    try {
-      val (notInAnti, notNull, poisoned, nullAware) =
-        GraftDml.resolveNotIn(notInFrames)
-      val res: Option[Column] =
-        if (!GraftDml.probesPass(spark, probes) || poisoned)
-          Some(lit(false))
-        else {
-          val base = residual.map(r =>
-            GraftDml.rebound(GraftDml.resolveScalars(spark, r)))
-          (base, notNull) match {
-            case (Some(a), Some(b)) => Some(a && b)
-            case (a, b) => a.orElse(b)
-          }
-        }
-      val boundAssigns = assignments.map { case (n, e) =>
-        n -> GraftDml.rebound(GraftDml.resolveScalars(spark, e))
-      }
-      val allAnti = antiFrames ++ notInAnti
-      if (frames.isEmpty && allAnti.isEmpty && nullAware.isEmpty &&
-          scalarFrames.isEmpty)
-        VersionedTable.update(spark, tableDir, spec,
-          res.getOrElse(lit(true)), boundAssigns)
-      else
-        VersionedTable.updateMatching(spark, tableDir, spec, frames, res,
-          boundAssigns, allAnti, nullAware, scalarFrames)
-    } finally ((frames ++ antiFrames ++ notInFrames).map(_._2) ++
-      scalarFrames.map(_._2))
-      .foreach(_.unpersist(blocking = false))
+    GraftDml.withMembership(spark, keys, antiKeys, notInKeys, probes,
+      residual, scalars)(
+      VersionedTable.update(spark, tableDir, spec, _, boundAssigns))(
+      VersionedTable.updateMatching(spark, tableDir, spec, _, _,
+        boundAssigns, _, _, _))
     Seq.empty
   }
 }

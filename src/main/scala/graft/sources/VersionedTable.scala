@@ -158,7 +158,7 @@ object VersionedTable {
       SpecField.parse(c).valueIn(df).cast("string")): _*)
 
   /** Hive's directory spelling for a NULL partition value. The write
-    * path refuses to create such a leaf ([[writeDataDir]]); readers
+    * path refuses to create such a leaf ([[writeDataDirCols]]); readers
     * treat one conservatively (never pruned, disqualifies value-exact
     * metadata rewrites) in case a foreign layout carries it.
     */
@@ -794,35 +794,12 @@ object VersionedTable {
     }
   }
 
-  /** Write a frame as a new immutable data dir, return its leaf paths
-    * (relative to tableDir). The partition column stays in the data; its
-    * duplicate drives the directory layout.
-    */
-  private def writeDataDir(df: DataFrame, tableDir: String, version: Int,
-      partCol: String): Seq[String] =
-    writeDataDirCols(df, tableDir, version, specOf(partCol))
-
   /** Data file formats a versioned table can commit. ORC is first-class
     * (the reference engine is ORC-native): the writer emits `.orc`
     * leaves, [[FileStats.write]] harvests ORC file statistics for the
     * same sidecars, and the read path scans through Spark's ORC format.
     */
   private[sources] val SupportedFormats = Set("parquet", "orc")
-
-  /** The prior manifest's logical→physical column mapping for a write
-    * landing as `version` — empty at table birth and for tables never
-    * renamed. One tiny JSON read; keeping the lookup here means none of
-    * the 16 commit kernels had to learn about column mapping.
-    */
-  private def colMapForWrite(spark: SparkSession, tableDir: String,
-      version: Int): Map[String, String] =
-    if (version == 0) Map.empty
-    // read failures MUST propagate: swallowing one here would silently
-    // write leaves under LOGICAL names on a RENAMEd table — the renamed
-    // column then reads null from those leaves (quiet corruption). A
-    // loud write failure is the correct outcome; the commit retry /
-    // caller surfaces it.
-    else readManifestFull(spark, tableDir, version - 1).colMap
 
   /** Rename RENAMEd columns back to their frozen physical names right
     * before file bytes land — identity when the table has no mapping.
@@ -843,23 +820,24 @@ object VersionedTable {
       }: _*)
     }
 
+  /** Write a frame as a new immutable data dir landing as `version` and
+    * return its leaf paths (relative to tableDir). `base` is the
+    * manifest the commit derives from — its format, row-tracking flag
+    * and column mapping shape the files; create and REPLACE pass the
+    * manifest they are about to publish. The spec columns stay in the
+    * data; their duplicates drive the directory layout.
+    */
   private def writeDataDirCols(df: DataFrame, tableDir: String,
-      version: Int, partCols: Seq[String],
-      fmt: String = "parquet",
-      colMapOverride: Option[Map[String, String]] = None,
-      rowTrackingOverride: Option[Boolean] = None): Seq[String] = {
+      version: Int, partCols: Seq[String], base: VManifest): Seq[String] = {
+    val fmt = base.fmt
     require(SupportedFormats.contains(fmt),
       s"unsupported versioned-table format '$fmt' — one of " +
         SupportedFormats.mkString("/"))
     val spark = df.sparkSession
-    val rt = rowTrackingOverride.getOrElse(
-      rowTrackingForWrite(spark, tableDir, version))
+    val rt = base.rowTracking
     // leaves always carry PHYSICAL column names (spec columns are
-    // unrenamable, so the dir layout never maps). REPLACE TABLE
-    // overrides with the empty map: its columns are born fresh
-    // (logical == physical), whatever the old definition mapped.
-    val physMapped = toPhysical(df, colMapOverride.getOrElse(
-      colMapForWrite(spark, tableDir, version)))
+    // unrenamable, so the dir layout never maps)
+    val physMapped = toPhysical(df, base.colMap)
     // row tracking, rewrite form: the kernel's frame carries the id
     // column (survivors/updates keep theirs); rows the commit CREATES
     // (merge inserts, replaceWhere adds riding a kernel frame) hold
@@ -1193,13 +1171,13 @@ object VersionedTable {
     require(!rowTracking || format == "parquet",
       s"row tracking needs _metadata.row_index, which Spark exposes " +
         s"for parquet only — requested format '$format'")
-    writeManifest(df.sparkSession, tableDir, 0, VManifest(
-      writeDataDirCols(df, tableDir, 0, specOf(partCol), format,
-        rowTrackingOverride = Some(rowTracking)),
+    val born = VManifest(Nil,
       txns = txn.map { case (c, b) => s"$c=$b" }.toSeq,
       schema = encodeSchema(df.schema), partcol = specOf(partCol),
       format = Seq(format) ++
-        (if (rowTracking) Seq(RowTrackingMarker) else Nil)))
+        (if (rowTracking) Seq(RowTrackingMarker) else Nil))
+    writeManifest(df.sparkSession, tableDir, 0, born.copy(leaves =
+      writeDataDirCols(df, tableDir, 0, born.partcol, born)))
   }
 
   /** Atomic-CTAS staging, step 1 ([[GraftStagedTable]]): write v0's
@@ -1211,7 +1189,8 @@ object VersionedTable {
       partCol: String, format: String): Seq[String] = {
     require(versions(df.sparkSession, tableDir).isEmpty,
       s"table already exists at $tableDir")
-    writeDataDirCols(df, tableDir, 0, specOf(partCol), format)
+    writeDataDirCols(df, tableDir, 0, specOf(partCol),
+      VManifest(Nil, format = Seq(format)))
   }
 
   /** Atomic-CTAS staging, step 2: publish the v0 manifest over the
@@ -1234,12 +1213,13 @@ object VersionedTable {
     * replacement's data files under the EXISTING table's next-version
     * add-dir, no manifest yet — readers keep seeing the old head until
     * the commit step. The new definition's columns are born fresh
-    * (logical == physical), so any old rename mapping is not applied.
+    * (logical == physical) and untracked, so neither the old rename
+    * mapping nor its row tracking applies.
     */
   private[sources] def stageReplaceData(df: DataFrame, tableDir: String,
       partCol: String, format: String, baseVersion: Int): Seq[String] =
     writeDataDirCols(df, tableDir, baseVersion + 1, specOf(partCol),
-      format, colMapOverride = Some(Map.empty))
+      VManifest(Nil, format = Seq(format)))
 
   /** REPLACE TABLE staging, step 2: publish the replacement manifest as
     * version `base + 1` — truncate-and-load that keeps every prior
@@ -1290,7 +1270,7 @@ object VersionedTable {
       allowEvolution = true)
     requireConstraints(df, m, "append")
     writeManifest(spark, tableDir, v, m.copy(
-      leaves = m.leaves ++ writeDataDirCols(df, tableDir, v, cols, m.fmt),
+      leaves = m.leaves ++ writeDataDirCols(df, tableDir, v, cols, m),
       schema = schema, partcol = cols))
   }
 
@@ -1382,7 +1362,7 @@ object VersionedTable {
         allowEvolution = true)
       requireConstraints(df, m, "overwrite")
       writeManifest(spark, tableDir, base + 1, m.copy(
-        leaves = writeDataDirCols(df, tableDir, base + 1, cols, m.fmt),
+        leaves = writeDataDirCols(df, tableDir, base + 1, cols, m),
         deletes = Nil, dirty = Nil, schema = schema, partcol = cols))
     }
 
@@ -1406,10 +1386,7 @@ object VersionedTable {
     val cols = specOf(partCol)
     requireSpec(m, cols, "overwritePartitions")
     requireConstraints(df, m, "overwritePartitions")
-    val affected: Set[Seq[String]] = df
-      .transform(specTupleFrame(cols))
-      .distinct().collect()
-      .map(r => cols.indices.map(r.getString): Seq[String]).toSet
+    val affected = specTuples(cols, Seq(df))
     if (affected.isEmpty) {
       // empty input replaces nothing: a no-op commit, not a truncate
       writeManifest(spark, tableDir, v, m)
@@ -1419,22 +1396,18 @@ object VersionedTable {
       cols.zip(t).map { case (c, value) =>
         SpecField.parse(c).valueIn(frame).cast("string") === lit(value)
       }.reduce(_ && _)).reduce(_ || _)
-    val (sameSpec, foreign) =
-      m.leaves.partition(l => leafPartPairs(l).map(_._1) == specDirNames(cols))
     // replaced same-spec leaves simply drop out of the manifest — df's
-    // rows are their replacement
-    val keptSame = sameSpec
-      .filterNot(l => affected.contains(leafPartPairs(l).map(_._2)))
-    val hitForeign = leavesContaining(spark, tableDir, m, foreign,
+    // rows are their replacement, so unlike [[rewriteCommit]] they are
+    // never read
+    val split = splitLeaves(spark, tableDir, m, cols, affected,
       f => f.filter(inAffected(f)))
-    val kept = keptSame ++ foreign.filterNot(hitForeign.toSet)
     // foreign-leaf rows OUTSIDE the replaced tuples survive and migrate
     // to the current spec; replaced-tuple rows are dropped in favor of df
     val survivors =
-      if (hitForeign.isEmpty) df
+      if (split.hitForeign.isEmpty) df
       else {
         val carried = readView(spark, tableDir, m,
-          onlyLeaves = Some(hitForeign), withRowIds = m.rowTracking)
+          onlyLeaves = Some(split.hitForeign), withRowIds = m.rowTracking)
         val carriedKept = carried.filter(!inAffected(carried))
         // replaced rows are REPLACED: df's rows take fresh ids, the
         // migrating out-of-slice rows keep theirs
@@ -1442,9 +1415,8 @@ object VersionedTable {
         left.unionByName(
           carriedKept.select(left.columns.toIndexedSeq.map(col): _*))
       }
-    val newLeaves = writeDataDirCols(survivors, tableDir, v, cols, m.fmt)
-    writeManifest(spark, tableDir, v, m.copy(leaves = kept ++ newLeaves,
-      dirty = m.dirty.filter(kept.contains), partcol = cols))
+    writeManifest(spark, tableDir, v, split.next(m, cols,
+      writeDataDirCols(survivors, tableDir, v, cols, m)))
   }
 
   /** A version's commit time = its manifest file's mtime — the clock
@@ -1498,7 +1470,7 @@ object VersionedTable {
       requireConstraints(df, m, "appendOnce")
       writeManifest(spark, tableDir, base + 1, m.copy(
         leaves =
-          m.leaves ++ writeDataDirCols(df, tableDir, base + 1, cols, m.fmt),
+          m.leaves ++ writeDataDirCols(df, tableDir, base + 1, cols, m),
         txns = txns, schema = schema, partcol = cols))
     }
   }
@@ -1510,18 +1482,15 @@ object VersionedTable {
     * survivor leaf — the drop-partition path. Prior versions still read
     * the deleted rows: takedown-grade erasure additionally requires
     * [[vacuum]] of the pre-delete versions (physical removal), the same
-    * two-step contract as Delta's DELETE + VACUUM.
+    * two-step contract as Delta's DELETE + VACUUM. Survivors are the
+    * rows where `pred` is NOT definitely true — SQL DELETE semantics: a
+    * NULL-predicate row survives, as it does under
+    * [[deleteMergeOnRead]].
     */
   def delete(spark: SparkSession, tableDir: String, partCol: String,
       pred: Column): Unit =
-    deleteCore(spark, tableDir, partCol, _.filter(pred),
-      // survivors are the rows where pred is NOT definitely true — SQL
-      // DELETE semantics: a NULL-predicate row survives. `!pred` alone
-      // would drop NULL rows from rewritten leaves while identical rows
-      // in untouched leaves carried over — silently wrong, and
-      // inconsistent with [[deleteMergeOnRead]] (whose filter(pred)
-      // vector write keeps NULL rows by construction).
-      df => df.filter(!coalesce(pred, lit(false))))
+    rewriteCommit(spark, tableDir, partCol, "delete")(
+      deletePlan(spark, tableDir, Membership(pred)))
 
   /** Copy-on-write delete keyed on MEMBERSHIP: rows whose `keys`
     * column tuples each appear in the paired frame (AND all residual
@@ -1541,77 +1510,122 @@ object VersionedTable {
       antiKeys: Seq[(Seq[String], DataFrame)] = Nil,
       notInTuples: Seq[(Seq[String], DataFrame)] = Nil,
       scalarJoins: Seq[(Seq[String], DataFrame, String)] = Nil): Unit = {
-    require(keys.nonEmpty || antiKeys.nonEmpty || notInTuples.nonEmpty ||
-        scalarJoins.nonEmpty,
-      "deleteMatching needs at least one key frame")
-    require((keys ++ antiKeys ++ notInTuples).forall(_._1.nonEmpty) &&
-        scalarJoins.forall(_._1.nonEmpty),
-      "a key frame needs key columns")
-    val res = residual.getOrElse(lit(true))
-    // antiKeys are NON-membership: a row hits only when its tuple
-    // appears in NO anti frame — the `NOT EXISTS (… WHERE s.k = t.k)`
-    // shape as a left-anti join (equality correlation never matches a
-    // NULL key, so a NULL-keyed row has no match and DOES hit — exactly
-    // NOT EXISTS semantics, distinct from NOT IN's any-NULL poison)
+    val sel = Membership.of("deleteMatching", keys, residual, antiKeys,
+      notInTuples, scalarJoins)
+    rewriteCommit(spark, tableDir, partCol, "delete")(
+      deletePlan(spark, tableDir, sel))
+  }
+
+  /** Row selection by tuple MEMBERSHIP — the WHERE clause of every
+    * copy-on-write DELETE/UPDATE, the plain predicate form included (no
+    * frames, `residual` = the predicate). A row is HIT when the
+    * residual is definitely true, its tuple appears in every `keys`
+    * frame, in no `antiKeys` frame (NOT EXISTS: an equality
+    * correlation never matches a NULL key, so a NULL-keyed row DOES
+    * hit — distinct from NOT IN's any-NULL poison), and no
+    * `notInTuples` frame null-aware-matches it (tuple NOT IN). The
+    * correlated-scalar frames LEFT-join first, because the residual
+    * references their value columns; every output projects back to the
+    * input's own columns, so helper columns never reach a data file.
+    */
+  private final case class Membership(residual: Column,
+      keys: Seq[(Seq[String], DataFrame)] = Nil,
+      antiKeys: Seq[(Seq[String], DataFrame)] = Nil,
+      notInTuples: Seq[(Seq[String], DataFrame)] = Nil,
+      scalarJoins: Seq[(Seq[String], DataFrame, String)] = Nil) {
+
+    /** LEFT-join each correlated-scalar grouped frame on its outer key
+      * columns — one value column per scalar; a key with no subquery
+      * rows reads NULL (the SQL scalar-subquery empty result).
+      */
+    private def withScalars(df: DataFrame): DataFrame =
+      scalarJoins.foldLeft(df) { case (acc, (ks, f, _)) =>
+        acc.join(f, ks, "left")
+      }
+
+    private def distinctKeys(ks: Seq[String], kdf: DataFrame): DataFrame =
+      kdf.select(ks.map(col): _*).distinct()
+
+    /** The hit rows: residual filter, then one semi / anti / null-aware
+      * anti join per frame (each preserves the left multiset).
+      */
     def hits(df: DataFrame): DataFrame = {
-      // correlated-scalar value columns join in FIRST (one grouped row
-      // per key, LEFT so missing keys read the aggregate's empty-group
-      // value — NULL, or the 0 a count's residual coalesces), because
-      // the residual references them; the final project drops them so
-      // the hit frame keeps the table's own schema (exceptAll and the
-      // rewrite both rely on that)
-      val withS = applyScalarJoins(df, scalarJoins)
-      val semi = keys.foldLeft(withS.filter(res)) { case (acc, (ks, kdf)) =>
-        acc.join(kdf.select(ks.map(col): _*).distinct(), ks, "left_semi")
+      val semi = keys.foldLeft(withScalars(df).filter(residual)) {
+        case (acc, (ks, kdf)) => acc.join(distinctKeys(ks, kdf), ks, "left_semi")
       }
       val anti = antiKeys.foldLeft(semi) { case (acc, (ks, kdf)) =>
-        acc.join(kdf.select(ks.map(col): _*).distinct(), ks, "left_anti")
+        acc.join(distinctKeys(ks, kdf), ks, "left_anti")
       }
       notInTuples.foldLeft(anti) { case (acc, (ks, kdf)) =>
         acc.join(notInRight(ks, kdf), notInMatch(ks), "left_anti")
       }.select(df.columns.toIndexedSeq.map(col): _*)
     }
-    // survivor iff NOT (residual definitely true AND every key matched
-    // AND no anti key matched): one left-join marker per frame, a
-    // single pass over hit leaves. With tuple-NOT-IN frames the marker
-    // form is unavailable (one row can null-aware-match several set
-    // rows, which would duplicate survivors), so survivors come from
-    // [[notInKeep]]'s disjoint semi/anti branches — the exact multiset
-    // complement of the definite hits without exceptAll's full-row
-    // exchange.
-    def keep(df: DataFrame): DataFrame =
-      if (notInTuples.nonEmpty)
-        notInKeep(df, res, keys, antiKeys, notInTuples, scalarJoins)
+
+    /** `df` with one LEFT-join marker per key frame (against DISTINCT
+      * keys: one output row per input row) and the condition over it
+      * that holds exactly on the rows the residual, keys and anti keys
+      * hit. Tuple NOT IN has no marker form — a row can
+      * null-aware-match several set tuples — so [[keep]] finishes it.
+      */
+    def marked(df: DataFrame): (DataFrame, Column) = {
+      var acc = withScalars(df)
+      val cond = (keys.map(_ -> false) ++ antiKeys.map(_ -> true))
+        .zipWithIndex.foldLeft(residual) { case (c, (((ks, kdf), anti), i)) =>
+          val mCol = s"__vt_in_hit_$i"
+          acc = acc.join(distinctKeys(ks, kdf).withColumn(mCol, lit(1)), ks,
+            "left")
+          c && (if (anti) col(mCol).isNull else col(mCol).isNotNull)
+        }
+      (acc, cond)
+    }
+
+    /** The exact per-row COMPLEMENT of [[hits]] — keep ∪ hits is the
+      * input multiset and keep ∩ hits = ∅ row-for-row, so SQL 3VL holds
+      * by construction (a row neither definitely hit nor kept cannot
+      * exist), with no `exceptAll` full-row exchange. Disjoint branches:
+      * rows the marker condition does not definitely hold on, plus, per
+      * tuple-NOT-IN frame, the rows that pass every earlier stage but
+      * null-aware-MATCH that frame (a left-semi cascade, each branch
+      * restricted to the previous frames' anti side).
+      */
+    def keep(df: DataFrame): DataFrame = {
+      val out = df.columns.toIndexedSeq.map(col)
+      val (acc, cond) = marked(df)
+      val isHit = coalesce(cond, lit(false))
+      val failEarly = acc.filter(!isHit).select(out: _*)
+      if (notInTuples.isEmpty) failEarly
       else {
-        val out = df.columns.toIndexedSeq
-        var acc = applyScalarJoins(df, scalarJoins)
-        val markers = (keys.map(_ -> false) ++ antiKeys.map(_ -> true))
-          .zipWithIndex.map { case (((ks, kdf), anti), i) =>
-            val mCol = s"__vt_in_hit_$i"
-            acc = acc.join(
-              kdf.select(ks.map(col): _*).distinct().withColumn(mCol, lit(1)),
-              ks, "left")
-            (mCol, anti)
-          }
-        val matchedAll = markers.map { case (m, anti) =>
-          if (anti) col(m).isNull else col(m).isNotNull
-        }.reduceOption(_ && _).getOrElse(lit(true))
-        acc.filter(!(coalesce(res, lit(false)) && matchedAll))
-          .select(out.map(col): _*) // using-joins reorder; restore schema order
+        var pass = acc.filter(isHit).select(out: _*)
+        val branches = notInTuples.map { case (ks, kdf) =>
+          val matched =
+            pass.join(notInRight(ks, kdf), notInMatch(ks), "left_semi")
+          pass = pass.join(notInRight(ks, kdf), notInMatch(ks), "left_anti")
+          matched
+        }
+        (failEarly +: branches).reduce(_ unionByName _)
       }
-    deleteCore(spark, tableDir, partCol, hits, keep)
+    }
   }
 
-  /** LEFT-join each correlated-scalar grouped frame on its outer key
-    * columns — one value column per scalar, referenced by the rewritten
-    * residual; a key with no subquery rows reads NULL (the SQL scalar-
-    * subquery empty result).
-    */
-  private def applyScalarJoins(df: DataFrame,
-      scalarJoins: Seq[(Seq[String], DataFrame, String)]): DataFrame =
-    scalarJoins.foldLeft(df) { case (acc, (ks, f, _)) =>
-      acc.join(f, ks, "left")
+  private object Membership {
+    /** The membership form of a statement: at least one frame, each
+      * with key columns; an absent residual is TRUE.
+      */
+    def of(what: String, keys: Seq[(Seq[String], DataFrame)],
+        residual: Option[Column],
+        antiKeys: Seq[(Seq[String], DataFrame)],
+        notInTuples: Seq[(Seq[String], DataFrame)],
+        scalarJoins: Seq[(Seq[String], DataFrame, String)]): Membership = {
+      require(keys.nonEmpty || antiKeys.nonEmpty || notInTuples.nonEmpty ||
+          scalarJoins.nonEmpty,
+        s"$what needs at least one key frame")
+      require((keys ++ antiKeys ++ notInTuples).forall(_._1.nonEmpty) &&
+          scalarJoins.forall(_._1.nonEmpty),
+        "a key frame needs key columns")
+      Membership(residual.getOrElse(lit(true)), keys, antiKeys, notInTuples,
+        scalarJoins)
     }
+  }
 
   /** Tuple `NOT IN (subquery)` as a NULL-AWARE anti join (the SQL-spec
     * 3VL, no approximation): a row passes the conjunct iff EVERY set
@@ -1632,117 +1646,124 @@ object VersionedTable {
     ks.map(k => col(k) <=> col(s"__vt_nit_$k") ||
       col(k).isNull || col(s"__vt_nit_$k").isNull).reduce(_ && _)
 
-  /** The exact per-row COMPLEMENT of a tuple-NOT-IN hit chain — the
-    * survivors of `filter(res) → semi(keys…) → anti(antiKeys…) →
-    * null-aware-anti(notInTuples…)` WITHOUT `exceptAll`. The old
-    * `df.exceptAll(hits(df))` form re-evaluated the hit chain AND paid
-    * a full-row-keyed exchange (Spark rewrites EXCEPT ALL to a
-    * group-by over every column); classification is per-row
-    * deterministic, so the complement decomposes into disjoint
-    * multiset-exact branches instead (guide §2.3 "shuffle fewer
-    * bytes" / §2.4 "remove shuffles outright"):
-    *
-    *   - rows failing the residual/keys/antiKeys stage — the marker
-    *     form [[deleteMatching]] already uses when no tuple frame is
-    *     present (left-join markers against DISTINCT key frames: one
-    *     output row per input row);
-    *   - rows passing that stage but null-aware-MATCHING some tuple
-    *     frame — a left-semi cascade (semi/anti preserve the left
-    *     multiset exactly; one branch per frame, each restricted to
-    *     the previous frames' anti side, so branches are disjoint).
-    *
-    * keep ∪ hits = the input multiset and keep ∩ hits = ∅ row-for-row,
-    * which is precisely the exceptAll contract (SQL 3VL: a row neither
-    * definitely hit nor kept cannot exist).
+  /** One copy-on-write statement over its base manifest, as
+    * [[rewriteCommit]] executes it:
+    *   - `probe`: frames whose spec-value tuples are the affected set;
+    *   - `foreign`: selects the rows that make a leaf written under an
+    *     EARLIER partition spec hit (its dir value cannot be pruned
+    *     against the current spec);
+    *   - `rewrite`: maps the vector-applied view of the hit leaves to
+    *     their replacement rows;
+    *   - `add`: rows the statement creates — they ride the same write
+    *     and land even when nothing is hit;
+    *   - `check`: validate the written rows against the table's CHECK
+    *     constraints before any file lands (statements that synthesize
+    *     row values; survivors of a delete never re-validate);
+    *   - `schema`: schema entries to record instead of the base's;
+    *   - `op`: the commit's operation record ([[encodeOp]]).
     */
-  private def notInKeep(df: DataFrame, res: Column,
-      keys: Seq[(Seq[String], DataFrame)],
-      antiKeys: Seq[(Seq[String], DataFrame)],
-      notInTuples: Seq[(Seq[String], DataFrame)],
-      scalarJoins: Seq[(Seq[String], DataFrame, String)]): DataFrame = {
-    val out = df.columns.toIndexedSeq
-    var acc = applyScalarJoins(df, scalarJoins)
-    val markers = (keys.map(_ -> false) ++ antiKeys.map(_ -> true))
-      .zipWithIndex.map { case (((ks, kdf), anti), i) =>
-        val mCol = s"__vt_in_hit_$i"
-        acc = acc.join(
-          kdf.select(ks.map(col): _*).distinct().withColumn(mCol, lit(1)),
-          ks, "left")
-        (mCol, anti)
-      }
-    val matchedAll = markers.map { case (m, anti) =>
-      if (anti) col(m).isNull else col(m).isNotNull
-    }.reduceOption(_ && _).getOrElse(lit(true))
-    val failEarly = acc.filter(!(coalesce(res, lit(false)) && matchedAll))
-      .select(out.map(col): _*)
-    var pass = acc.filter(coalesce(res, lit(false)) && matchedAll)
-      .select(out.map(col): _*)
-    val branches = Seq.newBuilder[DataFrame]
-    notInTuples.foreach { case (ks, kdf) =>
-      branches += pass.join(notInRight(ks, kdf), notInMatch(ks), "left_semi")
-      pass = pass.join(notInRight(ks, kdf), notInMatch(ks), "left_anti")
-    }
-    (failEarly +: branches.result()).reduce(_ unionByName _)
+  private final case class Rewrite(probe: Seq[DataFrame],
+      foreign: DataFrame => DataFrame,
+      rewrite: DataFrame => DataFrame,
+      add: Option[DataFrame] = None,
+      check: Boolean = false,
+      schema: Option[Seq[String]] = None,
+      op: Seq[String] = Nil)
+
+  /** Where a rewrite's affected tuples fall: same-spec leaves hit by dir
+    * value (driver metadata, no scan), leaves of an EARLIER spec hit by
+    * a scan restricted to exactly them — their survivors rewrite under
+    * the CURRENT spec, so every rewrite incrementally migrates old-spec
+    * data (the Iceberg spec-evolution cost model) — and the rest, which
+    * carry by reference.
+    */
+  private final case class LeafSplit(hitSame: Seq[String],
+      hitForeign: Seq[String], kept: Seq[String]) {
+    def hit: Seq[String] = hitSame ++ hitForeign
+    /** The rewrite's next manifest: kept leaves plus the new ones. Delete
+      * vectors stay; entries pointing at rewritten leaves become inert
+      * ([[compact]]/[[vacuum]] fold and erase them).
+      */
+    def next(m: VManifest, cols: Seq[String],
+        newLeaves: Seq[String]): VManifest =
+      m.copy(leaves = kept ++ newLeaves, dirty = m.dirty.filter(kept.contains),
+        partcol = cols)
   }
 
-  /** The COW delete kernel shared by [[delete]] (predicate form) and
-    * [[deleteMatching]] (key-membership form): `hits` selects the rows
-    * to remove (drives the affected-tuple probe and foreign-leaf
-    * discovery), `keep` selects the survivors of a hit leaf — the two
-    * must partition every row between them under SQL's three-valued
-    * logic (a row neither definitely hit nor kept would vanish).
-    */
-  private def deleteCore(spark: SparkSession, tableDir: String,
-      partCol: String, hits: DataFrame => DataFrame,
-      keep: DataFrame => DataFrame,
-      alsoAdd: Option[DataFrame] = None): Unit = withCommitRetry {
-    val v = latestVersion(spark, tableDir) + 1
-    val m = readManifestFull(spark, tableDir, v - 1)
-    val cols = specOf(partCol)
-    requireSpec(m, cols, "delete")
-    val current = readView(spark, tableDir, m, withRowIds = m.rowTracking)
-    // the replace-where form ([[replaceWhere]]) adds its new rows in the
-    // SAME commit the old slice disappears in — no delete/insert
-    // visibility gap
-    def addLeaves(): Seq[String] = alsoAdd.toSeq.flatMap(df =>
-      writeDataDirCols(df, tableDir, v, cols, m.fmt))
-    // affected partition VALUE TUPLES (one value per spec column, spec
-    // order): metadata-sized driver list (the reference core's
-    // identifyAffectedPartitions shape)
-    val affected: Set[Seq[String]] = hits(current)
-      .transform(specTupleFrame(cols))
-      .distinct().collect()
-      .map(r => cols.indices.map(r.getString): Seq[String]).toSet
-    if (affected.isEmpty) {
-      writeManifest(spark, tableDir, v,
-        m.copy(leaves = m.leaves ++ addLeaves()))
-      return
+  private def splitLeaves(spark: SparkSession, tableDir: String,
+      m: VManifest, cols: Seq[String], affected: Set[Seq[String]],
+      foreign: DataFrame => DataFrame): LeafSplit =
+    if (affected.isEmpty) LeafSplit(Nil, Nil, m.leaves)
+    else {
+      val (sameSpec, foreignLeaves) =
+        m.leaves.partition(l => leafPartPairs(l).map(_._1) == specDirNames(cols))
+      val (hitSame, keptSame) =
+        sameSpec.partition(l => affected.contains(leafPartPairs(l).map(_._2)))
+      val hitForeign = leavesContaining(spark, tableDir, m, foreignLeaves,
+        foreign)
+      LeafSplit(hitSame, hitForeign,
+        keptSame ++ foreignLeaves.filterNot(hitForeign.toSet))
     }
-    // spec-aware pruning: same-spec leaves prune by dir value; leaves
-    // written under an EARLIER partition spec cannot (their dir value is
-    // a different column) — those are selected by a scan restricted to
-    // exactly them, and their survivors rewrite under the CURRENT spec
-    // (every delete incrementally migrates old-spec data — the Iceberg
-    // spec-evolution cost model)
-    val (sameSpec, foreign) =
-      m.leaves.partition(l => leafPartPairs(l).map(_._1) == specDirNames(cols))
-    val (hitSame, keptSame) =
-      sameSpec.partition(l => affected.contains(leafPartPairs(l).map(_._2)))
-    val hitForeign = leavesContaining(spark, tableDir, m, foreign, hits)
-    val hit = hitSame ++ hitForeign
-    val kept = keptSame ++ foreign.filterNot(hitForeign.toSet)
-    // survivors come from the VECTOR-APPLIED view of the hit leaves — a
-    // copy-on-write rewrite must not resurrect rows a prior merge-on-read
-    // delete already removed. Vector entries pointing at the rewritten
-    // (now-unreferenced) leaves become inert; [[compact]]/[[vacuum]] fold
-    // and erase them.
-    val survivors = keep(readView(spark, tableDir, m,
-      onlyLeaves = Some(hit), withRowIds = m.rowTracking))
-    val newLeaves = writeDataDirCols(survivors, tableDir, v, cols, m.fmt)
-    writeManifest(spark, tableDir, v, m.copy(
-      leaves = kept ++ newLeaves ++ addLeaves(),
-      dirty = m.dirty.filter(kept.contains), partcol = cols))
-  }
+
+  /** The distinct partition VALUE TUPLES (one value per spec column, spec
+    * order) of `frames`' rows in ONE collect — a metadata-sized driver
+    * set; of a rewrite's probe frames, its affected set (the reference
+    * core's identifyAffectedPartitions shape).
+    */
+  private def specTuples(cols: Seq[String],
+      frames: Seq[DataFrame]): Set[Seq[String]] =
+    frames.map(specTupleFrame(cols)).reduceOption(_ union _)
+      .map(_.distinct().collect()
+        .map(r => cols.indices.map(r.getString): Seq[String]).toSet)
+      .getOrElse(Set.empty)
+
+  /** The copy-on-write kernel every DML statement commits through: read
+    * the head, let `plan` describe the statement over it ([[Rewrite]]),
+    * probe the affected tuples, split the leaves, rewrite the hit
+    * leaves' VECTOR-APPLIED view (a rewrite must not resurrect rows a
+    * merge-on-read delete already removed) together with the created
+    * rows in ONE data dir, and commit once. A statement that hits
+    * nothing and creates nothing commits the base manifest unchanged.
+    * A lost CAS re-runs the whole kernel, `plan` included.
+    */
+  private def rewriteCommit(spark: SparkSession, tableDir: String,
+      partCol: String, what: String)(plan: VManifest => Rewrite): Unit =
+    withCommitRetry {
+      val v = latestVersion(spark, tableDir) + 1
+      val m = readManifestFull(spark, tableDir, v - 1)
+      val cols = specOf(partCol)
+      requireSpec(m, cols, what)
+      val r = plan(m)
+      val affected = specTuples(cols, r.probe)
+      if (affected.isEmpty && r.add.isEmpty) {
+        writeManifest(spark, tableDir, v, m)
+        return
+      }
+      val split = splitLeaves(spark, tableDir, m, cols, affected, r.foreign)
+      val replaced =
+        if (split.hit.isEmpty) None
+        else Some(r.rewrite(readView(spark, tableDir, m,
+          onlyLeaves = Some(split.hit), withRowIds = m.rowTracking)))
+      // beside id-carrying rewritten rows, created rows take fresh ids
+      val added = r.add.map(a =>
+        if (replaced.isDefined && m.rowTracking) withNullRowId(a) else a)
+      val newLeaves = (replaced ++ added).reduceOption(_ unionByName _)
+        .toSeq.flatMap { rows =>
+          if (r.check) requireConstraints(rows, m, what)
+          writeDataDirCols(rows, tableDir, v, cols, m)
+        }
+      val next = split.next(m, cols, newLeaves)
+      writeManifest(spark, tableDir, v,
+        r.schema.fold(next)(s => next.copy(schema = s)), op = r.op)
+    }
+
+  /** A delete's [[Rewrite]]: the hit rows drive the probe and foreign
+    * discovery, the survivors of a hit leaf are [[Membership.keep]].
+    */
+  private def deletePlan(spark: SparkSession, tableDir: String,
+      sel: Membership, add: Option[DataFrame] = None)(m: VManifest): Rewrite =
+    Rewrite(Seq(sel.hits(readView(spark, tableDir, m,
+      withRowIds = m.rowTracking))), sel.hits, sel.keep, add)
 
   /** REPLACE WHERE — the Delta `replaceWhere` / static
     * `INSERT OVERWRITE t PARTITION (…)` semantics as ONE commit: rows
@@ -1764,9 +1785,8 @@ object VersionedTable {
       s"replaceWhere violation: $outside incoming rows do not satisfy " +
         "the replaced-slice predicate — the statement would clobber " +
         "data it never named")
-    deleteCore(spark, tableDir, partCol, _.filter(pred),
-      keepDf => keepDf.filter(!coalesce(pred, lit(false))),
-      alsoAdd = Some(df))
+    rewriteCommit(spark, tableDir, partCol, "delete")(
+      deletePlan(spark, tableDir, Membership(pred), add = Some(df)))
   }
 
   /** Copy-on-write UPDATE — the SQL `UPDATE t SET c = e WHERE p` shape,
@@ -1783,14 +1803,17 @@ object VersionedTable {
     */
   def update(spark: SparkSession, tableDir: String, partCol: String,
       cond: Column, assignments: Seq[(String, Column)]): Unit =
-    updateCore(spark, tableDir, partCol, df => (df, cond), assignments)
+    rewriteCommit(spark, tableDir, partCol, "update")(
+      updatePlan(spark, tableDir, Membership(cond), assignments))
 
   /** Copy-on-write UPDATE keyed on MEMBERSHIP — the SQL
     * `UPDATE t SET … WHERE k IN (SELECT …) [AND …]` shape: rows whose
     * `keys` column values each appear in the paired frame (AND all
     * residual conjuncts) take the assignments, every other row carries
-    * verbatim. Membership is a JOIN (left-join markers), never a
-    * collected IN-list — same scale contract as [[deleteMatching]].
+    * verbatim. Membership is a JOIN, never a collected IN-list — same
+    * scale contract as [[deleteMatching]]; with tuple-NOT-IN frames the
+    * hit rows take the assignments and [[Membership.keep]]'s exact
+    * complement carries verbatim.
     */
   def updateMatching(spark: SparkSession, tableDir: String,
       partCol: String, keys: Seq[(Seq[String], DataFrame)],
@@ -1799,196 +1822,53 @@ object VersionedTable {
       antiKeys: Seq[(Seq[String], DataFrame)] = Nil,
       notInTuples: Seq[(Seq[String], DataFrame)] = Nil,
       scalarJoins: Seq[(Seq[String], DataFrame, String)] = Nil): Unit = {
-    require(keys.nonEmpty || antiKeys.nonEmpty || notInTuples.nonEmpty ||
-        scalarJoins.nonEmpty,
-      "updateMatching needs at least one key frame")
-    require((keys ++ antiKeys ++ notInTuples).forall(_._1.nonEmpty) &&
-        scalarJoins.forall(_._1.nonEmpty),
-      "a key frame needs key columns")
-    if (notInTuples.nonEmpty) {
-      // tuple NOT IN has no per-row marker form (a row can null-aware-
-      // match several set tuples) — route through the split kernel:
-      // definite hits take the assignments, the exact multiset
-      // complement carries verbatim
-      def hitFn(df: DataFrame): DataFrame = {
-        val res = residual.getOrElse(lit(true))
-        val withS = applyScalarJoins(df, scalarJoins)
-        val semi = keys.foldLeft(withS.filter(res)) {
-          case (acc, (ks, kdf)) =>
-            acc.join(kdf.select(ks.map(col): _*).distinct(), ks,
-              "left_semi")
-        }
-        val anti = antiKeys.foldLeft(semi) { case (acc, (ks, kdf)) =>
-          acc.join(kdf.select(ks.map(col): _*).distinct(), ks, "left_anti")
-        }
-        notInTuples.foldLeft(anti) { case (acc, (ks, kdf)) =>
-          acc.join(notInRight(ks, kdf), notInMatch(ks), "left_anti")
-        }.select(df.columns.toIndexedSeq.map(col): _*)
-      }
-      def keepFn(df: DataFrame): DataFrame = {
-        val res0 = residual.getOrElse(lit(true))
-        notInKeep(df, res0, keys, antiKeys, notInTuples, scalarJoins)
-      }
-      return updateCoreSplit(spark, tableDir, partCol, hitFn, keepFn,
-        assignments)
-    }
-    val res = residual.getOrElse(lit(true))
-    def prepare(df: DataFrame): (DataFrame, Column) = {
-      // scalar value columns first (the condition references them); the
-      // kernel's final projection back to the table's columns drops them
-      var acc = applyScalarJoins(df, scalarJoins)
-      // anti markers invert ([[deleteMatching]]'s NOT EXISTS rule): the
-      // row matches only when the anti frame holds NO equal tuple
-      val markers = (keys.map(_ -> false) ++ antiKeys.map(_ -> true))
-        .zipWithIndex.map { case (((ks, kdf), anti), i) =>
-          val mCol = s"__vt_in_hit_$i"
-          acc = acc.join(
-            kdf.select(ks.map(col): _*).distinct().withColumn(mCol, lit(1)),
-            ks, "left")
-          (mCol, anti)
-        }
-      val matchedAll = markers.map { case (m, anti) =>
-        if (anti) col(m).isNull else col(m).isNotNull
-      }.reduceOption(_ && _).getOrElse(lit(true))
-      (acc, res && matchedAll)
-    }
-    updateCore(spark, tableDir, partCol, prepare, assignments)
+    val sel = Membership.of("updateMatching", keys, residual, antiKeys,
+      notInTuples, scalarJoins)
+    rewriteCommit(spark, tableDir, partCol, "update")(
+      updatePlan(spark, tableDir, sel, assignments))
   }
 
-  /** The COW update kernel shared by [[update]] and [[updateMatching]]:
-    * `prepare` maps the table frame to (an augmented frame, the
-    * effective condition column over it) — the predicate form augments
-    * nothing; the membership form adds join markers. The final select
-    * projects exactly the table's own columns, so helper columns never
-    * reach a data file.
+  /** An update's [[Rewrite]]: hit rows take the assignments — in place
+    * through [[Membership.marked]]'s condition, or, when tuple NOT IN
+    * leaves no marker form, as the hit rows beside their exact
+    * complement. The written rows re-validate the constraints, and the
+    * change feed pairs this commit's removed × added rows on the
+    * NON-assigned columns (they carry verbatim) — an update assigning
+    * every column records nothing and keeps the exact delete+insert
+    * representation.
     */
-  private def updateCore(spark: SparkSession, tableDir: String,
-      partCol: String, prepare: DataFrame => (DataFrame, Column),
-      assignments: Seq[(String, Column)]): Unit =
-    withCommitRetry {
-      val v = latestVersion(spark, tableDir) + 1
-      val m = readManifestFull(spark, tableDir, v - 1)
-      val cols = specOf(partCol)
-      requireSpec(m, cols, "update")
-      require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-      val assignMap = assignments.toMap
-      require(assignMap.size == assignments.size,
-        s"duplicate assignment targets in ${assignments.map(_._1)}")
-      assignMap.keys.foreach(n => require(!n.startsWith("__vt_"),
-        s"cannot assign engine-internal column '$n'"))
-      val current = readView(spark, tableDir, m,
-        withRowIds = m.rowTracking)
-      assignMap.keys.foreach(n => require(current.columns.contains(n),
-        s"UPDATE target column '$n' is not in the table schema " +
-          s"${current.columns.mkString("(", ", ", ")")}"))
-      val (probe, probeCond) = prepare(current)
-      val affected: Set[Seq[String]] = probe.filter(probeCond)
-        .transform(specTupleFrame(cols))
-        .distinct().collect()
-        .map(r => cols.indices.map(r.getString): Seq[String]).toSet
-      if (affected.isEmpty) {
-        writeManifest(spark, tableDir, v, m)
-        return
-      }
-      val (sameSpec, foreign) =
-        m.leaves.partition(l => leafPartPairs(l).map(_._1) == specDirNames(cols))
-      val (hitSame, keptSame) =
-        sameSpec.partition(l => affected.contains(leafPartPairs(l).map(_._2)))
-      val hitForeign = leavesContaining(spark, tableDir, m, foreign,
-        df => { val (f, c) = prepare(df); f.filter(c) })
-      val hit = hitSame ++ hitForeign
-      val kept = keptSame ++ foreign.filterNot(hitForeign.toSet)
-      val view = readView(spark, tableDir, m, onlyLeaves = Some(hit),
-        withRowIds = m.rowTracking)
+  private def updatePlan(spark: SparkSession, tableDir: String,
+      sel: Membership, assignments: Seq[(String, Column)])(
+      m: VManifest): Rewrite = {
+    require(assignments.nonEmpty, "UPDATE needs at least one assignment")
+    val assignMap = assignments.toMap
+    require(assignMap.size == assignments.size,
+      s"duplicate assignment targets in ${assignments.map(_._1)}")
+    assignMap.keys.foreach(n => require(!n.startsWith("__vt_"),
+      s"cannot assign engine-internal column '$n'"))
+    val current = readView(spark, tableDir, m, withRowIds = m.rowTracking)
+    assignMap.keys.foreach(n => require(current.columns.contains(n),
+      s"UPDATE target column '$n' is not in the table schema " +
+        s"${current.columns.mkString("(", ", ", ")")}"))
+    def rewrite(view: DataFrame): DataFrame = {
       val types = view.schema.fields.map(f => f.name -> f.dataType).toMap
-      val (aug, cond) = prepare(view)
-      val outCols = view.columns.toIndexedSeq.map { c =>
-        assignMap.get(c) match {
-          case Some(value) =>
-            when(cond, value.cast(types(c))).otherwise(col(c)).as(c)
-          case None => col(c)
+      def assigned(cond: Option[Column]) = view.columns.toIndexedSeq.map { c =>
+        assignMap.get(c).fold(col(c)) { v =>
+          val value = v.cast(types(c))
+          cond.fold(value)(when(_, value).otherwise(col(c))).as(c)
         }
       }
-      // projecting the VIEW's columns only: helper (marker) columns the
-      // membership form joined on never reach a data file
-      val updated = aug.select(outCols: _*)
-      requireConstraints(updated, m, "update")
-      val newLeaves = writeDataDirCols(updated, tableDir, v, cols, m.fmt)
-      // the change feed pairs this commit's removed x added rows on the
-      // NON-assigned columns (they carry verbatim through the update) —
-      // an update assigning every column records nothing and keeps the
-      // exact delete+insert representation
-      val pairKey = view.columns.toSeq
-        .filterNot(c => assignMap.contains(c) || c == RowIdCol)
-      writeManifest(spark, tableDir, v, m.copy(leaves = kept ++ newLeaves,
-        dirty = m.dirty.filter(kept.contains), partcol = cols),
-        op = if (pairKey.isEmpty) Nil else encodeOp("update", pairKey))
+      if (sel.notInTuples.isEmpty) {
+        val (aug, cond) = sel.marked(view)
+        aug.select(assigned(Some(cond)): _*)
+      } else
+        sel.keep(view).unionByName(sel.hits(view).select(assigned(None): _*))
     }
-
-  /** The SPLIT update kernel — [[updateCore]]'s sibling for condition
-    * shapes with no per-row marker form (tuple NOT IN's null-aware
-    * anti): `hitFn` selects the rows that take the assignments, and
-    * `keepFn` their exact multiset complement ([[notInKeep]]'s disjoint
-    * semi/anti branches — no exceptAll full-row exchange), so SQL 3VL
-    * holds by construction — a row neither definitely hit nor kept
-    * cannot exist. Same probe/discovery/commit obligations as
-    * [[updateCore]], including the change feed's pairing-key record.
-    */
-  private def updateCoreSplit(spark: SparkSession, tableDir: String,
-      partCol: String, hitFn: DataFrame => DataFrame,
-      keepFn: DataFrame => DataFrame,
-      assignments: Seq[(String, Column)]): Unit =
-    withCommitRetry {
-      val v = latestVersion(spark, tableDir) + 1
-      val m = readManifestFull(spark, tableDir, v - 1)
-      val cols = specOf(partCol)
-      requireSpec(m, cols, "update")
-      require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-      val assignMap = assignments.toMap
-      require(assignMap.size == assignments.size,
-        s"duplicate assignment targets in ${assignments.map(_._1)}")
-      assignMap.keys.foreach(n => require(!n.startsWith("__vt_"),
-        s"cannot assign engine-internal column '$n'"))
-      val current = readView(spark, tableDir, m,
-        withRowIds = m.rowTracking)
-      assignMap.keys.foreach(n => require(current.columns.contains(n),
-        s"UPDATE target column '$n' is not in the table schema " +
-          s"${current.columns.mkString("(", ", ", ")")}"))
-      val affected: Set[Seq[String]] = hitFn(current)
-        .transform(specTupleFrame(cols))
-        .distinct().collect()
-        .map(r => cols.indices.map(r.getString): Seq[String]).toSet
-      if (affected.isEmpty) {
-        writeManifest(spark, tableDir, v, m)
-        return
-      }
-      val (sameSpec, foreign) =
-        m.leaves.partition(l => leafPartPairs(l).map(_._1) == specDirNames(cols))
-      val (hitSame, keptSame) =
-        sameSpec.partition(l => affected.contains(leafPartPairs(l).map(_._2)))
-      val hitForeign = leavesContaining(spark, tableDir, m, foreign, hitFn)
-      val hit = hitSame ++ hitForeign
-      val kept = keptSame ++ foreign.filterNot(hitForeign.toSet)
-      val view = readView(spark, tableDir, m, onlyLeaves = Some(hit),
-        withRowIds = m.rowTracking)
-      val types = view.schema.fields.map(f => f.name -> f.dataType).toMap
-      val hitRows = hitFn(view)
-      val outCols = view.columns.toIndexedSeq.map { c =>
-        assignMap.get(c) match {
-          case Some(value) => value.cast(types(c)).as(c)
-          case None => col(c)
-        }
-      }
-      val updated = keepFn(view)
-        .unionByName(hitRows.select(outCols: _*))
-      requireConstraints(updated, m, "update")
-      val newLeaves = writeDataDirCols(updated, tableDir, v, cols, m.fmt)
-      val pairKey = view.columns.toSeq
-        .filterNot(c => assignMap.contains(c) || c == RowIdCol)
-      writeManifest(spark, tableDir, v, m.copy(leaves = kept ++ newLeaves,
-        dirty = m.dirty.filter(kept.contains), partcol = cols),
-        op = if (pairKey.isEmpty) Nil else encodeOp("update", pairKey))
-    }
+    val pairKey = current.columns.toSeq
+      .filterNot(c => assignMap.contains(c) || c == RowIdCol)
+    Rewrite(Seq(sel.hits(current)), sel.hits, rewrite, check = true,
+      op = if (pairKey.isEmpty) Nil else encodeOp("update", pairKey))
+  }
 
   /** Merge-on-read delete (position delete vectors — the public
     * Iceberg/Delta deletion-vector design): instead of rewriting any data
@@ -2158,11 +2038,6 @@ object VersionedTable {
   private[sources] def rowTrackingEnabled(spark: SparkSession,
       tableDir: String): Boolean =
     readHead(spark, tableDir).rowTracking
-
-  private def rowTrackingForWrite(spark: SparkSession, tableDir: String,
-      version: Int): Boolean =
-    version > 0 &&
-      readManifestFull(spark, tableDir, version - 1).rowTracking
 
   /** Enable row tracking on an existing table: backfill `_rowids.tsv`
     * bases for every live add-root (footer row counts — metadata-only,
@@ -2534,48 +2409,27 @@ object VersionedTable {
     * Delta `ON t.a = s.a AND t.b = s.b` upsert).
     */
   def mergeKeys(batch: DataFrame, tableDir: String, partCol: String,
-      keyCols: Seq[String]): Unit = withCommitRetry {
+      keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val spark = batch.sparkSession
-    val v = latestVersion(spark, tableDir) + 1
-    val m = readManifestFull(spark, tableDir, v - 1)
-    // merge rewrites the union of batch and surviving rows, so the batch
-    // must match the table schema exactly — evolution goes through
-    // append() first (allowEvolution=false keeps a widened batch loud)
-    val schema = resolveAppendSchema(batch, spark, tableDir, m,
-      allowEvolution = false)
-    val cols = specOf(partCol)
-    requireSpec(m, cols, "merge")
-    requireConstraints(batch, m, "merge") // before any rewrite work
-    val current = readView(spark, tableDir, m)
-    val batchKeys = batch.select(keyCols.map(col): _*).distinct()
-    val affected: Set[Seq[String]] = (
-      current.join(batchKeys, keyCols)
-        .transform(specTupleFrame(cols)) unionByName
-      batch.transform(specTupleFrame(cols))
-    ).distinct().collect()
-      .map(r => cols.indices.map(r.getString): Seq[String]).toSet
-    // spec-aware: foreign-spec leaves holding a batch key are rewritten
-    // (delete's migration rule, key-selected instead of predicate-selected)
-    val (sameSpec, foreignM) =
-      m.leaves.partition(l => leafPartPairs(l).map(_._1) == specDirNames(cols))
-    val (hitSame, keptSame) =
-      sameSpec.partition(l => affected.contains(leafPartPairs(l).map(_._2)))
-    val hitForeign = leavesContaining(spark, tableDir, m, foreignM,
-      _.join(batchKeys, keyCols, "left_semi"))
-    val hit = hitSame ++ hitForeign
-    val kept = keptSame ++ foreignM.filterNot(hitForeign.toSet)
-    val rewritten =
-      (if (hit.isEmpty) batch
-       else readView(spark, tableDir, m, onlyLeaves = Some(hit),
-           withRowIds = m.rowTracking)
-         .join(batchKeys, keyCols, "left_anti")
-         .unionByName(
-           if (m.rowTracking) withNullRowId(batch) else batch))
-    writeManifest(spark, tableDir, v, m.copy(
-      leaves = kept ++ writeDataDirCols(rewritten, tableDir, v, cols, m.fmt),
-      dirty = m.dirty.filter(kept.contains), schema = schema,
-      partcol = cols), op = encodeOp("merge", keyCols))
+    rewriteCommit(spark, tableDir, partCol, "merge") { m =>
+      // merge rewrites the union of batch and surviving rows, so the
+      // batch must match the table schema exactly — evolution goes
+      // through append() first (allowEvolution=false keeps a widened
+      // batch loud)
+      val schema = resolveAppendSchema(batch, spark, tableDir, m,
+        allowEvolution = false)
+      requireConstraints(batch, m, "merge") // before any rewrite work
+      val batchKeys = batch.select(keyCols.map(col): _*).distinct()
+      // affected = partitions holding a batch key ∪ the batch rows' own;
+      // foreign-spec leaves holding a batch key are rewritten (delete's
+      // migration rule, key-selected instead of predicate-selected)
+      Rewrite(Seq(readView(spark, tableDir, m).join(batchKeys, keyCols), batch),
+        _.join(batchKeys, keyCols, "left_semi"),
+        _.join(batchKeys, keyCols, "left_anti"),
+        add = Some(batch), schema = Some(schema),
+        op = encodeOp("merge", keyCols))
+    }
   }
 
   /** Generalized MERGE — the Delta clause family over the same COW
@@ -2635,7 +2489,7 @@ object VersionedTable {
       insert: Option[(Option[Column], Seq[(String, Column)])],
       bySource: Seq[(Option[Column], Boolean, Seq[(String, Column)])] = Nil,
       onResidual: Option[Column] = None)
-      : Unit = withCommitRetry {
+      : Unit = {
     require(matched.nonEmpty || insert.isDefined || bySource.nonEmpty,
       "mergeInto needs at least one clause")
     require(keyCols.nonEmpty, "mergeInto needs at least one key column")
@@ -2650,48 +2504,6 @@ object VersionedTable {
       (keyCols.map(k => col(s"__t.$k") === col(s"__s.$k")) ++
         onResidual.toSeq).reduce(_ && _)
     val spark = batch.sparkSession
-    val v = latestVersion(spark, tableDir) + 1
-    val m = readManifestFull(spark, tableDir, v - 1)
-    val cols = specOf(partCol)
-    requireSpec(m, cols, "mergeInto")
-    keyCols.foreach(k => require(batch.columns.contains(k),
-      s"merge source has no key column '$k' " +
-        s"(${batch.columns.mkString(", ")})"))
-    val hasUpdate = matched.exists(!_._2)
-    val current = readView(spark, tableDir, m, withRowIds = m.rowTracking)
-    val tableCols = current.columns.toIndexedSeq
-    val types = current.schema.fields.map(f => f.name -> f.dataType).toMap
-    if (matched.nonEmpty)
-      require(batch.groupBy(keyCols.map(col): _*).count()
-          .filter(col("count") > 1).isEmpty,
-        s"merge source has several rows sharing a " +
-          s"'${keyCols.mkString(",")}' value — with matched clauses " +
-          "the applied clause would be row-arbitrary; de-duplicate the " +
-          "source first")
-    val batchKeys = batch.select(keyCols.map(col): _*).distinct()
-    // NOT MATCHED = the key is absent from the WHOLE table, so the
-    // insert side pays one key-projected anti-join against the current
-    // view; the insert condition (source-only by SQL rules) filters
-    // before the join. Assignments build the inserted row column-wise
-    // (each cast to its declared type — the output is schema-exact by
-    // construction); a column no assignment names inserts as NULL.
-    val insertRows: Option[DataFrame] = insert.map { case (condOpt, assigns) =>
-      val assignMap = assigns.toMap
-      val src = condOpt.foldLeft(batch.alias("__s"))(_ filter _)
-      val unmatched = onResidual match {
-        case None => src.join(
-          current.select(keyCols.map(col): _*).distinct(), keyCols,
-          "left_anti")
-        // the residual references target columns, so the anti join runs
-        // against the aliased view — Catalyst prunes it to the columns
-        // the condition actually names
-        case Some(_) => src.join(current.alias("__t"), onCond, "left_anti")
-      }
-      unmatched.select(tableCols.map { c =>
-        assignMap.get(c).map(_.cast(types(c)))
-          .getOrElse(lit(null).cast(types(c))).as(c)
-      }: _*)
-    }
     // clause conditions follow SQL three-valued logic: a clause APPLIES
     // only when its condition is definitely TRUE (a NULL condition must
     // not fire a DELETE — the raw `holds && !prior` would otherwise
@@ -2704,42 +2516,62 @@ object VersionedTable {
     val anyBySource: Option[Column] =
       if (bySource.isEmpty) None
       else Some(bySource.map(c => definitely(c._1)).reduce(_ || _))
-    // only partitions holding a MATCHED key (or a by-source hit) rewrite;
-    // insert rows land as new leaves without touching existing ones
-    val affectedMatched: Set[Seq[String]] =
-      if (matched.isEmpty) Set.empty
-      else {
-        val probe = onResidual match {
+    rewriteCommit(spark, tableDir, partCol, "mergeInto") { m =>
+      keyCols.foreach(k => require(batch.columns.contains(k),
+        s"merge source has no key column '$k' " +
+          s"(${batch.columns.mkString(", ")})"))
+      val current = readView(spark, tableDir, m, withRowIds = m.rowTracking)
+      val tableCols = current.columns.toIndexedSeq
+      val types = current.schema.fields.map(f => f.name -> f.dataType).toMap
+      if (matched.nonEmpty)
+        require(batch.groupBy(keyCols.map(col): _*).count()
+            .filter(col("count") > 1).isEmpty,
+          s"merge source has several rows sharing a " +
+            s"'${keyCols.mkString(",")}' value — with matched clauses " +
+            "the applied clause would be row-arbitrary; de-duplicate the " +
+            "source first")
+      val batchKeys = batch.select(keyCols.map(col): _*).distinct()
+      // NOT MATCHED = the key is absent from the WHOLE table, so the
+      // insert side pays one key-projected anti-join against the current
+      // view; the insert condition (source-only by SQL rules) filters
+      // before the join. Assignments build the inserted row column-wise
+      // (each cast to its declared type — the output is schema-exact by
+      // construction); a column no assignment names inserts as NULL.
+      val insertRows: Option[DataFrame] = insert.map { case (condOpt, assigns) =>
+        val assignMap = assigns.toMap
+        val src = condOpt.foldLeft(batch.alias("__s"))(_ filter _)
+        val unmatched = onResidual match {
+          case None => src.join(
+            current.select(keyCols.map(col): _*).distinct(), keyCols,
+            "left_anti")
+          // the residual references target columns, so the anti join
+          // runs against the aliased view — Catalyst prunes it to the
+          // columns the condition actually names
+          case Some(_) => src.join(current.alias("__t"), onCond, "left_anti")
+        }
+        unmatched.select(tableCols.map { c =>
+          assignMap.get(c).map(_.cast(types(c)))
+            .getOrElse(lit(null).cast(types(c))).as(c)
+        }: _*)
+      }
+      // only partitions holding a MATCHED key (or a by-source hit)
+      // rewrite; insert rows land as new leaves without touching
+      // existing ones. Probes alias the target frame as `__t`: by-source
+      // conditions are pre-qualified to `__t.<col>` by the SQL
+      // translation.
+      val probeMatched =
+        if (matched.isEmpty) None
+        else Some(onResidual match {
           case None => current.join(batchKeys, keyCols)
           case Some(_) =>
-            current.alias("__t").join(batch.alias("__s"), onCond,
-              "left_semi")
-        }
-        probe.transform(specTupleFrame(cols))
-          .distinct().collect()
-          .map(r => cols.indices.map(r.getString): Seq[String]).toSet
-      }
-    // probes alias the target frame as `__t`: by-source conditions are
-    // pre-qualified to `__t.<col>` by the SQL translation
-    val affectedBySource: Set[Seq[String]] = anyBySource.map { cond =>
-      (onResidual match {
-        case None => current.alias("__t").join(batchKeys, keyCols,
-          "left_anti")
+            current.alias("__t").join(batch.alias("__s"), onCond, "left_semi")
+        })
+      val probeBySource = anyBySource.map(cond => (onResidual match {
+        case None => current.alias("__t").join(batchKeys, keyCols, "left_anti")
         case Some(_) => current.alias("__t").join(batch.alias("__s"),
           onCond, "left_anti")
-      }).filter(cond)
-        .transform(specTupleFrame(cols))
-        .distinct().collect()
-        .map(r => cols.indices.map(r.getString): Seq[String]).toSet
-    }.getOrElse(Set.empty)
-    val affected = affectedMatched ++ affectedBySource
-    val (sameSpec, foreignM) =
-      m.leaves.partition(l => leafPartPairs(l).map(_._1) == specDirNames(cols))
-    val (hitSame, keptSame) =
-      sameSpec.partition(l => affected.contains(leafPartPairs(l).map(_._2)))
-    val hitForeign =
-      if (matched.isEmpty && bySource.isEmpty) Seq.empty[String]
-      else leavesContaining(spark, tableDir, m, foreignM, df =>
+      }).filter(cond))
+      def foreignHits(df: DataFrame): DataFrame =
         (anyBySource, onResidual) match {
           case (None, None) => df.join(batchKeys, keyCols, "left_semi")
           case (None, Some(_)) =>
@@ -2758,14 +2590,9 @@ object VersionedTable {
               else col("__vt_merge_k").isNotNull ||
                 (col("__vt_merge_k").isNull && cond)
             marked.filter(hitExpr)
-        })
-    val hit = hitSame ++ hitForeign
-    val kept = keptSame ++ foreignM.filterNot(hitForeign.toSet)
-    val survivors =
-      if (hit.isEmpty) current.limit(0)
-      else {
-        val t = readView(spark, tableDir, m, onlyLeaves = Some(hit),
-          withRowIds = m.rowTracking).alias("__t")
+        }
+      def survivors(view: DataFrame): DataFrame = {
+        val t = view.alias("__t")
         val s = batch.withColumn("__vt_merge_m", lit(true)).alias("__s")
         val j = t.join(s, onCond, "left_outer")
         val isMatched = coalesce(col("__s.__vt_merge_m"), lit(false))
@@ -2819,17 +2646,15 @@ object VersionedTable {
         j.filter(!anyOf(isDelete = true) && !anyOfB(isDelete = true))
           .select(outCols: _*)
       }
-    val rewritten = insertRows.foldLeft(survivors)(_ unionByName _)
-    // UPDATE/INSERT clauses synthesize row values — validate the
-    // OUTPUT rows (what actually lands), the same guarantee the update
-    // kernel gives; a delete-only merge skips the extra pass
-    if (hasUpdate || insert.isDefined ||
-        bySource.exists(b => !b._2 && b._3.nonEmpty))
-      requireConstraints(rewritten, m, "mergeInto")
-    writeManifest(spark, tableDir, v, m.copy(
-      leaves = kept ++ writeDataDirCols(rewritten, tableDir, v, cols, m.fmt),
-      dirty = m.dirty.filter(kept.contains), partcol = cols),
-      op = encodeOp("merge", keyCols))
+      // UPDATE/INSERT clauses synthesize row values — validate the
+      // OUTPUT rows (what actually lands), the same guarantee the update
+      // kernel gives; a delete-only merge skips the extra pass
+      Rewrite(probeMatched.toSeq ++ probeBySource, foreignHits, survivors,
+        add = insertRows,
+        check = matched.exists(!_._2) || insert.isDefined ||
+          bySource.exists(b => !b._2 && b._3.nonEmpty),
+        op = encodeOp("merge", keyCols))
+    }
   }
 
   /** CDC between two snapshots: full-outer join on `keyCol`, content
@@ -3834,12 +3659,10 @@ object VersionedTable {
     val (sameSpec, foreign) =
       m.leaves.partition(l => leafPartPairs(l).map(_._1) == specDirNames(cols))
     val metaTuples = sameSpec.map(l => leafPartPairs(l).map(_._2))
-    val scanned: Seq[Seq[String]] =
-      if (foreign.isEmpty) Nil
-      else readView(spark, tableDir, m, onlyLeaves = Some(foreign))
-        .transform(specTupleFrame(cols))
-        .distinct().collect()
-        .map(r => cols.indices.map(r.getString): Seq[String]).toSeq
+    val scanned =
+      if (foreign.isEmpty) Set.empty[Seq[String]]
+      else specTuples(cols,
+        Seq(readView(spark, tableDir, m, onlyLeaves = Some(foreign))))
     (metaTuples ++ scanned).distinct.sortBy(_.mkString("\u0000"))
   }
 
@@ -3958,7 +3781,7 @@ object VersionedTable {
     requireSpec(m, cols, "compact")
     val folded = readView(spark, tableDir, m, withRowIds = m.rowTracking)
     writeManifest(spark, tableDir, v, m.copy(
-      leaves = writeDataDirCols(folded, tableDir, v, cols, m.fmt),
+      leaves = writeDataDirCols(folded, tableDir, v, cols, m),
       deletes = Nil, dirty = Nil,
       schema = if (m.schema.nonEmpty) m.schema else encodeSchema(folded.schema),
       partcol = cols))
@@ -3989,7 +3812,8 @@ object VersionedTable {
           "row-id derivation needs _metadata.row_index (parquet-only)")
       val folded = readView(spark, tableDir, m, withRowIds = m.rowTracking)
       writeManifest(spark, tableDir, v, m.copy(
-        leaves = writeDataDirCols(folded, tableDir, v, cols, newFormat),
+        leaves = writeDataDirCols(folded, tableDir, v, cols,
+          m.copy(format = newFormat +: m.format.drop(1))),
         deletes = Nil, dirty = Nil,
         schema =
           if (m.schema.nonEmpty) m.schema else encodeSchema(folded.schema),
@@ -4050,7 +3874,7 @@ object VersionedTable {
         // files match nothing by construction
         val folded = readView(spark, tableDir, m, onlyLeaves = Some(fold),
           withRowIds = m.rowTracking)
-        val newLeaves = writeDataDirCols(folded, tableDir, v, cols, m.fmt)
+        val newLeaves = writeDataDirCols(folded, tableDir, v, cols, m)
         writeManifest(spark, tableDir, v, m.copy(
           leaves = (kept ++ newLeaves).sorted,
           dirty = m.dirty.filter(kept.contains), partcol = cols))
