@@ -1,15 +1,14 @@
 package graft.backup
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.slf4j.LoggerFactory
 
-import graft.catalog.CatalogOps
+import graft.core.{PartitionCensus, PartitionHandler}
 import graft.model.{JobConfig, Metrics}
 
-/** Backup facade: validate partitions exist → strategy backup → count
-  * equality check → metrics (reference: backup/BackupManager.java;
-  * SURVEY.md §2.7 C6/C7/C12).
+/** Backup facade: validate partitions exist → strategy backup → source
+  * census → count equality check → metrics (reference:
+  * backup/BackupManager.java; SURVEY.md §2.7 C6/C7/C12).
   */
 final class BackupManager(strategy: BackupStrategy, metrics: Metrics) {
   private val logger = LoggerFactory.getLogger(classOf[BackupManager])
@@ -18,21 +17,41 @@ final class BackupManager(strategy: BackupStrategy, metrics: Metrics) {
   /** C6: snapshot the affected partitions before deletion; returns the
     * backup identifier (table name or path).
     */
-  def createBackup(spark: SparkSession, config: JobConfig, partitions: Seq[String]): String = {
+  def createBackup(spark: SparkSession, config: JobConfig, partitions: Seq[String]): String =
+    createBackupWithCensus(spark, config, partitions)._1
+
+  /** [[createBackup]], also returning the census of the source partitions
+    * taken right after the copy — the one the backup is validated
+    * against, and the workflow's pre-deletion census.
+    */
+  def createBackupWithCensus(spark: SparkSession, config: JobConfig,
+      partitions: Seq[String]): (String, PartitionCensus) = {
     logger.info(s"Starting backup creation for ${partitions.size} partitions")
     audit.info(s"BACKUP_START - Table: ${config.fullTableName}, Partitions: $partitions")
     val start = System.currentTimeMillis()
+    val handler = new PartitionHandler(spark, config)
     try {
-      validatePartitionsExist(spark, config, partitions)
+      handler.validatePartitionsExist(partitions)
       val location = strategy.createBackup(spark, config, partitions)
-      val expected = countRecords(spark, config, partitions)
+      val census =
+        try handler.census(partitions)
+        catch {
+          case e: Exception =>
+            // The copy has committed and nothing is deleted yet. A census
+            // that cannot be taken (e.g. a predicate that fails at run
+            // time) fails the run after the backup: the copy is recorded
+            // as the run's backup, so the workflow restores from it.
+            metrics.markBackupCreated(location)
+            throw e
+        }
+      val expected = census.total
       if (!strategy.validateBackup(spark, config, location, expected))
         throw new RuntimeException("Backup validation failed")
       val ms = System.currentTimeMillis() - start
       logger.info(s"Backup created successfully in $ms ms. Location: $location")
       audit.info(s"BACKUP_SUCCESS - Location: $location, Records: $expected, Duration: $ms ms")
       metrics.markBackupCreated(location)
-      location
+      (location, census)
     } catch {
       case e: Exception =>
         audit.error(s"BACKUP_FAILED - Table: ${config.fullTableName}, Error: ${e.getMessage}")
@@ -64,14 +83,6 @@ final class BackupManager(strategy: BackupStrategy, metrics: Metrics) {
     try strategy.cleanupOldBackups(spark, config)
     catch { case e: Exception => logger.warn(s"Failed to cleanup old backups: ${e.getMessage}") }
   }
-
-  // one definition each — PartitionHandler owns partition existence checks
-  // and partition-scoped counting; a private copy here would drift
-  private def validatePartitionsExist(spark: SparkSession, config: JobConfig, partitions: Seq[String]): Unit =
-    new graft.core.PartitionHandler(spark, config).validatePartitionsExist(partitions)
-
-  private def countRecords(spark: SparkSession, config: JobConfig, partitions: Seq[String]): Long =
-    new graft.core.PartitionHandler(spark, config).recordCount(partitions)
 }
 
 object BackupManager {

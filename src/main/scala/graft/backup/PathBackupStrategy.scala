@@ -11,17 +11,19 @@ import graft.catalog.CatalogOps
 import graft.model.JobConfig
 
 /** Path-based backup: partitioned ORC under
-  * `<base>/<yyyyMMdd_HHmmss>` plus a dot-prefixed provenance file
+  * `<base>/<yyyyMMdd_HHmmssSSS>` plus a dot-prefixed provenance file
   * ([[PathBackupStrategy.MetadataFileName]]);
   * base defaults to `/backup/<db>/<table>`
   * (reference: backup/HDFSBackupStrategy.java). Works on any Hadoop
   * filesystem (HDFS, file://, s3a://...) via the Path-scoped FS lookup.
+  * Like [[TableBackupStrategy]], names have millisecond resolution and the
+  * write refuses an existing directory.
   */
 final class PathBackupStrategy extends BackupStrategy {
   import PathBackupStrategy.MetadataFileName
 
   private val logger = LoggerFactory.getLogger(classOf[PathBackupStrategy])
-  private val tsFormat = new SimpleDateFormat("yyyyMMdd_HHmmss")
+  private val tsFormat = new SimpleDateFormat("yyyyMMdd_HHmmssSSS")
   private val metaFormat = new SimpleDateFormat("yyyy-MM-dd HH:mm:ss")
 
   private def basePath(config: JobConfig): String =
@@ -34,7 +36,7 @@ final class PathBackupStrategy extends BackupStrategy {
     spark.table(config.fullTableName)
       .where(col(config.partitionColumn).isin(partitions: _*))
       .write
-      .mode(SaveMode.Overwrite)
+      .mode(SaveMode.ErrorIfExists)
       .format("orc")
       .partitionBy(config.partitionColumn)
       .save(backupPath)

@@ -10,9 +10,12 @@ import org.slf4j.LoggerFactory
 import graft.catalog.CatalogOps
 import graft.model.JobConfig
 
-/** Backup into a sibling catalog table `<table>_backup_yyyyMMdd_HHmmss`,
+/** Backup into a sibling catalog table `<table>_backup_yyyyMMdd_HHmmssSSS`,
   * partitioned like the source, tagged with provenance TBLPROPERTIES
-  * (reference: backup/HiveTableBackupStrategy.java).
+  * (reference: backup/HiveTableBackupStrategy.java). The name has
+  * millisecond resolution and the write refuses an existing table, so two
+  * runs against one table never share a backup: a clash fails the run
+  * instead of replacing the other run's recovery point.
   *
   * Scale note: the backup write is a straight partition-pruned scan →
   * partitioned write with no shuffle (no groupBy/join on the path), so cost
@@ -20,7 +23,7 @@ import graft.model.JobConfig
   */
 final class TableBackupStrategy extends BackupStrategy {
   private val logger = LoggerFactory.getLogger(classOf[TableBackupStrategy])
-  private val tsFormat = new SimpleDateFormat("yyyyMMdd_HHmmss")
+  private val tsFormat = new SimpleDateFormat("yyyyMMdd_HHmmssSSS")
   private val propFormat = new SimpleDateFormat("yyyy-MM-dd HH:mm:ss")
 
   override def createBackup(spark: SparkSession, config: JobConfig, partitions: Seq[String]): String = {
@@ -30,7 +33,7 @@ final class TableBackupStrategy extends BackupStrategy {
     spark.table(config.fullTableName)
       .where(col(config.partitionColumn).isin(partitions: _*))
       .write
-      .mode(SaveMode.Overwrite)
+      .mode(SaveMode.ErrorIfExists)
       .format("orc")
       .partitionBy(config.partitionColumn)
       .saveAsTable(backupTable)

@@ -1,8 +1,7 @@
 package graft.catalog
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.slf4j.LoggerFactory
 
 import graft.partition.PartitionId
@@ -13,7 +12,10 @@ import graft.partition.PartitionId
   *
   * Everything here is driver-side metadata work: single-digit-row results,
   * NameNode/metastore RPCs. None of it touches table data, so it is
-  * scale-independent — correctness-first, no tuning needed.
+  * scale-independent — correctness-first, no tuning needed. A command's
+  * rows are collected and filtered on the driver: collecting an eagerly
+  * run command's result schedules no Spark job, while a Catalyst
+  * `count`/`filter`/`select` over it schedules one per lookup.
   */
 final class CatalogOps(spark: SparkSession) {
   private val logger = LoggerFactory.getLogger(classOf[CatalogOps])
@@ -37,7 +39,7 @@ final class CatalogOps(spark: SparkSession) {
     try {
       spark.sql(
         s"SHOW PARTITIONS ${q(table)} PARTITION (${PartitionId.partitionSpec(partitionColumn, value)})")
-        .count() > 0
+        .collect().nonEmpty
     } catch { case _: Exception => false }
 
   /** D3: table existence/access probe (reference issues DESCRIBE TABLE —
@@ -51,16 +53,12 @@ final class CatalogOps(spark: SparkSession) {
     * (reference: deletion/DeletionExecutor.java:173-186). Must be read
     * BEFORE the partition is dropped — unreadable after (SURVEY.md §7.4).
     */
-  def partitionLocation(table: String, partitionColumn: String, value: String): Option[String] = {
-    val info = spark.sql(
+  def partitionLocation(table: String, partitionColumn: String, value: String): Option[String] =
+    spark.sql(
       s"DESCRIBE FORMATTED ${q(table)} PARTITION (${PartitionId.partitionSpec(partitionColumn, value)})")
-    info.filter(col("col_name") === "Location")
-      .select("data_type")
       .collect()
-      .headOption
-      .map(_.getString(0))
+      .collectFirst { case r if r.getAs[String]("col_name") == "Location" => r.getAs[String]("data_type") }
       .filter(_.nonEmpty)
-  }
 
   /** D5: drop a partition's metastore entry. For EXTERNAL tables this does
     * NOT remove data files — pair with [[deleteDirectory]]
@@ -87,15 +85,15 @@ final class CatalogOps(spark: SparkSession) {
     */
   def listTables(database: String): Seq[String] =
     spark.sql(s"SHOW TABLES IN `$database`")
-      .select("tableName").collect().map(_.getString(0)).toSeq
+      .collect().map(_.getAs[String]("tableName")).toSeq
 
   /** D8: read one table property (backup timestamp for retention GC —
     * backup/HiveTableBackupStrategy.java:117-128).
     */
   def tableProperty(table: String, key: String): Option[String] =
     spark.sql(s"SHOW TBLPROPERTIES ${q(table)}")
-      .filter(col("key") === key)
-      .select("value").collect().headOption.map(_.getString(0))
+      .collect()
+      .collectFirst { case r if r.getAs[String]("key") == key => r.getAs[String]("value") }
 
   /** D9 */
   def dropTable(table: String): Unit =

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.slf4j.LoggerFactory
 
@@ -21,11 +21,12 @@ final case class DeletionResult(recordsDeleted: Long, droppedPartitions: Set[Str
   * Spark-first / scale re-design vs the reference kernel
   * (DeletionExecutor.java:139-230):
   *
-  *   - **One probe pass instead of two counts.** The reference runs
-  *     COUNT(*) then builds the retained scan and counts it again — three
-  *     full scans of the batch including the write. We compute per-partition
-  *     (total, retained) in a single grouped aggregation, then write — two
-  *     scans.
+  *   - **No count scans of its own.** The reference runs COUNT(*) then
+  *     builds the retained scan and counts it again — three full scans of
+  *     the batch including the write. The executor takes the workflow's
+  *     pre-deletion [[PartitionCensus]] (per-partition total and matching,
+  *     one grouped aggregate shared with the backup check and step 4), so
+  *     the write is its only scan.
   *   - **Per-partition branch, not per-batch.** The reference branches on
   *     batch-TOTAL retained: if a batch mixes a fully-emptied partition with
   *     partially-deleted ones, dynamic partition overwrite writes no rows
@@ -37,7 +38,7 @@ final case class DeletionResult(recordsDeleted: Long, droppedPartitions: Set[Str
   *     entirely (the reference pointlessly rewrites those).
   *   - **No double execution of the retained plan** (§3.2): the retained
   *     DataFrame is executed exactly once, by the write; counts come from
-  *     the separate single probe pass.
+  *     the census.
   *
   * At 100 TB the rewrite cost is proportional to the affected partitions
   * only: partition pruning via `isin` on the partition column reaches the
@@ -54,9 +55,10 @@ final class DeletionExecutor(spark: SparkSession, config: JobConfig, metrics: Me
 
   /** C3: entry. Returns records deleted plus the partitions removed by the
     * whole-partition fast path (the post-validation structure check must
-    * not expect those to still exist — SURVEY.md §7.4 / C11).
+    * not expect those to still exist — SURVEY.md §7.4 / C11). `census`
+    * is the pre-deletion census of `partitions`.
     */
-  def executeDeletion(partitions: Seq[String]): DeletionResult = {
+  def executeDeletion(partitions: Seq[String], census: PartitionCensus): DeletionResult = {
     logger.info(s"Starting deletion execution for ${partitions.size} partitions")
     audit.info(s"DELETION_START - Table: ${config.fullTableName}, " +
       s"Partitions: $partitions, Criteria: ${config.deletionCriteria}")
@@ -65,8 +67,8 @@ final class DeletionExecutor(spark: SparkSession, config: JobConfig, metrics: Me
       val result =
         if (config.dryRun) {
           logger.info("DRY RUN MODE - no deletion performed")
-          DeletionResult(performDryRun(partitions), Set.empty)
-        } else performActualDeletion(partitions)
+          DeletionResult(performDryRun(partitions, census), Set.empty)
+        } else performActualDeletion(partitions, census)
       val ms = System.currentTimeMillis() - start
       logger.info(s"Deletion completed. Records deleted: ${result.recordsDeleted}, Duration: $ms ms")
       audit.info(s"DELETION_SUCCESS - Records deleted: ${result.recordsDeleted}, Duration: $ms ms")
@@ -79,26 +81,25 @@ final class DeletionExecutor(spark: SparkSession, config: JobConfig, metrics: Me
     }
   }
 
-  /** C5: dry run — would-delete / would-retain counts, no mutation.
-    * One single-pass conditional aggregation (reference runs two COUNT
-    * queries — DeletionExecutor.java:84-96).
+  /** C5: dry run — would-delete / would-retain counts, no mutation, read
+    * off the census (reference runs two COUNT queries —
+    * DeletionExecutor.java:84-96).
     */
-  def performDryRun(partitions: Seq[String]): Long = {
-    val Counts(total, retained) = probeCounts(partitions).values
-      .foldLeft(Counts(0, 0))(_ + _)
-    val toDelete = total - retained
+  def performDryRun(partitions: Seq[String], census: PartitionCensus): Long = {
+    val toDelete = census.matching
+    val retained = census.retained
     logger.info(s"DRY RUN RESULTS: delete=$toDelete retain=$retained partitions=$partitions")
     audit.info(s"DRY_RUN - Would delete $toDelete records, retain $retained records")
     toDelete
   }
 
-  private def performActualDeletion(partitions: Seq[String]): DeletionResult = {
+  private def performActualDeletion(partitions: Seq[String], census: PartitionCensus): DeletionResult = {
     val batchSize = math.min(config.partitionParallelism, math.max(partitions.size, 1))
     val batches = partitions.grouped(batchSize).toSeq
     logger.info(s"Processing ${partitions.size} partitions in ${batches.size} batches")
     batches.zipWithIndex.map { case (batch, i) =>
       logger.info(s"Processing batch ${i + 1}/${batches.size} with ${batch.size} partitions")
-      val r = processBatch(batch)
+      val r = processBatch(batch, census)
       // count PARTITIONS, not batches — the summary metric must agree with
       // the per-partition detail entries
       metrics.incrementPartitionsProcessed(batch.size)
@@ -106,38 +107,19 @@ final class DeletionExecutor(spark: SparkSession, config: JobConfig, metrics: Me
     }.foldLeft(DeletionResult(0, Set.empty))(_ + _)
   }
 
-  private case class Counts(total: Long, retained: Long) {
-    def +(o: Counts): Counts = Counts(total + o.total, retained + o.retained)
-  }
-
-  /** Single-pass per-partition (total, retained) counts. */
-  private def probeCounts(partitions: Seq[String]): Map[String, Counts] = {
-    val retain = config.deletionCriteria.retainPredicate
-      .getOrElse(throw new IllegalStateException("Deletion criteria is empty"))
-    spark.table(config.fullTableName)
-      .where(col(pc).isin(partitions: _*))
-      .groupBy(col(pc))
-      .agg(
-        count(lit(1)).as("total"),
-        count(when(retain, 1)).as("retained"))
-      .collect()
-      .map(r => r.getString(0) -> Counts(r.getLong(1), r.getLong(2)))
-      .toMap
-  }
-
   /** C4: the deletion kernel for one batch of partitions. */
-  private def processBatch(batch: Seq[String]): DeletionResult = {
-    val counts = probeCounts(batch)
-    val before = counts.values.map(_.total).sum
+  private def processBatch(batch: Seq[String], census: PartitionCensus): DeletionResult = {
+    val counts = census.over(batch)
+    val before = counts.total
     metrics.recordRecordsRead(before)
 
-    // Per-partition decision (see class doc). Partitions absent from
-    // `counts` hold zero rows — nothing to delete or drop.
-    val emptied  = batch.filter(p => counts.get(p).exists(c => c.total > 0 && c.retained == 0))
-    val rewritten = batch.filter(p => counts.get(p).exists(c => c.retained > 0 && c.retained < c.total))
-    val untouched = batch.filter(p => counts.get(p).forall(c => c.retained == c.total))
+    // Per-partition decision (see class doc). Partitions absent from the
+    // census hold zero rows — nothing to delete or drop.
+    val emptied = batch.filter { p => val c = census(p); c.total > 0 && c.retained == 0 }
+    val rewritten = batch.filter { p => val c = census(p); c.retained > 0 && c.retained < c.total }
+    val untouched = batch.filter(p => census(p).matching == 0)
 
-    val retainedTotal = counts.values.map(_.retained).sum
+    val retainedTotal = counts.retained
     metrics.recordRecordsRetained(retainedTotal)
     logger.info(s"Batch: $before records before, $retainedTotal to retain, " +
       s"${before - retainedTotal} to delete " +
@@ -160,7 +142,7 @@ final class DeletionExecutor(spark: SparkSession, config: JobConfig, metrics: Me
       audit.info(s"PARTITIONS_REWRITTEN - ${rewritten.mkString(",")}")
     }
 
-    batch.foreach(p => metrics.recordPartitionMetric(p, counts.get(p).map(_.retained).getOrElse(0L)))
+    batch.foreach(p => metrics.recordPartitionMetric(p, census(p).retained))
     DeletionResult(before - retainedTotal, emptied.toSet)
   }
 

@@ -119,17 +119,21 @@ final class PartitionHandler(spark: SparkSession, config: JobConfig) {
     logger.info(s"All ${partitions.size} partitions validated successfully")
   }
 
-  /** A1: record count in the given partitions. */
-  def recordCount(partitions: Seq[String]): Long =
-    if (partitions.isEmpty) 0L
-    else table.where(col(pc).isin(partitions: _*)).count()
-
-  /** A1: records matching the deletion criteria in the given partitions. */
-  def matchingRecordCount(partitions: Seq[String]): Long =
-    if (partitions.isEmpty) 0L
+  /** A1: the [[PartitionCensus]] of the given partitions — one grouped
+    * aggregate, `count(1)` and `count(when(deletePredicate, 1))` per
+    * partition, in a single partition-pruned scan.
+    */
+  def census(partitions: Seq[String]): PartitionCensus =
+    if (partitions.isEmpty) PartitionCensus.Empty
     else {
       val pred = config.deletionCriteria.deletePredicate
         .getOrElse(throw new IllegalStateException("Deletion criteria is empty"))
-      table.where(col(pc).isin(partitions: _*)).where(pred).count()
+      PartitionCensus(table
+        .where(col(pc).isin(partitions: _*))
+        .groupBy(col(pc))
+        .agg(count(lit(1)), count(when(pred, 1)))
+        .collect()
+        .map(r => r.getString(0) -> PartitionCensus.Counts(r.getLong(1), r.getLong(2)))
+        .toMap)
     }
 }

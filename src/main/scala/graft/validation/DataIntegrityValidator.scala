@@ -16,30 +16,31 @@ import graft.model.JobConfig
   *   - the predicate is applied as a composed `Column` directly on the
   *     sampled DataFrame — the reference's temp-view + SQL COUNT detour
   *     (DataIntegrityValidator.java:101-117) is unnecessary;
-  *   - the sample fraction sizing count and the violation count fold into
-  *     the natural two Spark actions (count + count over sample) and the
-  *     caller passes only partitions that still exist (the reference checks
-  *     structure for legitimately dropped partitions too — a false negative
-  *     we fix at the call site, SURVEY.md §7.4).
+  *   - the sample fraction is sized from the row count the caller's
+  *     post-deletion census already holds, so the violation count over
+  *     the sample is the only Spark action; the caller passes only
+  *     partitions that still exist (the reference checks structure for
+  *     legitimately dropped partitions too — a false negative we fix at
+  *     the call site, SURVEY.md §7.4).
   */
 final class DataIntegrityValidator(spark: SparkSession, config: JobConfig) {
   private val logger = LoggerFactory.getLogger(classOf[DataIntegrityValidator])
 
-  def validateIntegrity(partitions: Seq[String]): Boolean = {
+  /** `total` is the row count of `partitions`. */
+  def validateIntegrity(partitions: Seq[String], total: Long): Boolean = {
     logger.info("Starting data integrity validation")
     if (partitions.isEmpty) {
       logger.info("No surviving partitions to validate (all records deleted)")
       return true
     }
     try {
-      val (sampled, total) = sampleRetainedData(partitions)
-      // emptiness comes from the count sampleRetainedData already ran —
-      // an isEmpty probe here would re-scan every surviving partition
+      // emptiness comes from the caller's count — an isEmpty probe here
+      // would re-scan every surviving partition
       if (total == 0) {
         logger.info("No data to validate (all records deleted)")
         return true
       }
-      if (!verifyNoMatchingRecords(sampled)) return false
+      if (!verifyNoMatchingRecords(sampleRetainedData(partitions, total))) return false
       if (!verifyPartitionStructure(partitions)) return false
       logger.info("Data integrity validation passed")
       true
@@ -54,15 +55,12 @@ final class DataIntegrityValidator(spark: SparkSession, config: JobConfig) {
     * expected sample ≈ validationSampleSize; full data when small
     * (DataIntegrityValidator.java:82-96).
     */
-  private def sampleRetainedData(partitions: Seq[String]): (DataFrame, Long) = {
+  private def sampleRetainedData(partitions: Seq[String], total: Long): DataFrame = {
     val data = spark.table(config.fullTableName)
       .where(col(config.partitionColumn).isin(partitions: _*))
-    val total = data.count()
     val cap = config.validationSampleSize
-    val sampled =
-      if (total == 0 || total <= cap) data
-      else data.sample(withReplacement = false, cap.toDouble / total)
-    (sampled, total)
+    if (total <= cap) data
+    else data.sample(withReplacement = false, cap.toDouble / total)
   }
 
   private def verifyNoMatchingRecords(sampled: DataFrame): Boolean = {

@@ -42,7 +42,9 @@ final class ValidationManager(spark: SparkSession, config: JobConfig, metrics: M
   }
 
   /** C10: count-tolerance + sampled integrity + zero-matching-remain.
-    * Skippable via config (ValidationManager.java:75-78).
+    * Skippable via config (ValidationManager.java:75-78). One
+    * [[graft.core.PartitionCensus]] of `partitions` counts for all three
+    * checks; only the integrity check's Bernoulli sample scans again.
     *
     * `droppedPartitions` — partitions legitimately removed by the
     * whole-partition fast path; they are excluded from the structure check
@@ -61,11 +63,13 @@ final class ValidationManager(spark: SparkSession, config: JobConfig, metrics: M
     audit.info(s"POST_VALIDATION_START - Expected deleted: $recordsDeleted, " +
       s"Expected retained: $recordsRetained")
     try {
-      validateRecordCounts(partitions, recordsRetained)
+      val census = handler.census(partitions)
+      validateRecordCounts(census.total, recordsRetained)
       val surviving = partitions.filterNot(droppedPartitions.contains)
-      if (!integrity.validateIntegrity(surviving))
+      val survivors = census.over(surviving)
+      if (!integrity.validateIntegrity(surviving, survivors.total))
         throw new ValidationException("Data integrity validation failed")
-      validateNoMatchingRecordsRemain(surviving)
+      validateNoMatchingRecordsRemain(survivors.matching)
       logger.info("Post-deletion validation passed")
       audit.info("POST_VALIDATION_SUCCESS")
       metrics.markValidationPassed(true)
@@ -83,8 +87,7 @@ final class ValidationManager(spark: SparkSession, config: JobConfig, metrics: M
   /** Count within `expectedRetained ± tolerance%`
     * (ValidationManager.java:142-163).
     */
-  private def validateRecordCounts(partitions: Seq[String], expectedRetained: Long): Unit = {
-    val actual = handler.recordCount(partitions)
+  private def validateRecordCounts(actual: Long, expectedRetained: Long): Unit = {
     val tolerance = (expectedRetained * config.validationTolerancePercent / 100.0).toLong
     if (actual < expectedRetained - tolerance || actual > expectedRetained + tolerance)
       throw new ValidationException(
@@ -95,9 +98,7 @@ final class ValidationManager(spark: SparkSession, config: JobConfig, metrics: M
   /** Zero records still matching the delete predicate
     * (ValidationManager.java:181-194).
     */
-  private def validateNoMatchingRecordsRemain(partitions: Seq[String]): Unit = {
-    if (partitions.isEmpty) return
-    val matching = handler.matchingRecordCount(partitions)
+  private def validateNoMatchingRecordsRemain(matching: Long): Unit = {
     if (matching > 0)
       throw new ValidationException(
         s"Found $matching records still matching deletion criteria after deletion")

@@ -24,9 +24,12 @@ parent's own IQR/median exceeds the bound and not every change run beats
 every parent run. A `gain` note is added only when the change wins at least
 nine tenths of the pairs and the medians differ by more than the parent's
 IQR. With --trace 1 it diffs the per-layer counters (`*.spark.jobs`,
-`*.fs.*`, `*.sources.*`) by their medians. Every run's result line is kept in
-<scratch>/runs.jsonl. It reads BENCHMARK.json and perfbench/ and changes
-neither. Exit status is 0 when every run was correct, no more operations
+`*.fs.*`, `*.sources.*`) by their medians. Either way it then prints, per
+operation kind of the run's report line (`workflow_hive_s`,
+`workflow_versioned_s`, `dml_*_s`, `read_*_s`), the median over runs of
+each side's per-kind median, so a claim shows which operation moved. Every
+run's report and result lines are kept in <scratch>/runs.jsonl. It reads
+BENCHMARK.json and perfbench/ and changes neither. Exit status is 0 when every run was correct, no more operations
 failed on the change side, and no metric regressed.
 """
 import argparse
@@ -40,6 +43,7 @@ import tempfile
 
 ROOT = os.getcwd()
 COUNTERS = (".spark.jobs", ".fs.", ".sources.")
+KINDS = ("workflow_", "dml_", "read_")
 
 
 def export_parent(rev, scratch):
@@ -66,7 +70,9 @@ def run_once(root, workload, seed, seconds, trace):
     if not lines:
         sys.stderr.write(out.stderr[-2000:])
         sys.exit(f"{root}: perfbench/run.py exited {out.returncode} without a result line")
-    return json.loads(lines[-1])
+    # perfbench/run.py prints the report line, then the result line
+    report = json.loads(lines[-2]) if len(lines) > 1 else {}
+    return report, json.loads(lines[-1])
 
 
 def quartiles(xs):
@@ -128,6 +134,22 @@ def counter_rows(pairs):
     return rows
 
 
+def kind_rows(pairs):
+    """Per-kind medians of the report lines: the median over runs of each run's median."""
+    names = sorted({n for p, c in pairs for r in (p, c) for n in r.get("metrics", {})
+                    if n.startswith(KINDS) and n.endswith("_s") and not n.endswith("_tail_s")})
+    rows = []
+    for n in names:
+        pv, cv = values([p for p, _ in pairs], n), values([c for _, c in pairs], n)
+        if not pv or not cv:
+            rows.append(f"  {n}: missing on one side")
+            continue
+        pm, cm = statistics.median(pv), statistics.median(cv)
+        rows.append(f"  {n}: parent {pm:.4g} change {cm:.4g} (ratio {cm / pm:.3f})" if pm else
+                    f"  {n}: parent {pm:.4g} change {cm:.4g}")
+    return rows
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--parent", required=True, help="git revision to compare against")
@@ -146,21 +168,24 @@ def main():
     log = open(os.path.join(args.scratch, "runs.jsonl"), "a")
     all_ok = True
     for workload in args.workload:
-        pairs = []
+        pairs, reports = [], []
         for i in range(args.pairs):
             seed = args.seed + i
             sides = [("parent", parent_root), ("change", ROOT)]
             if i % 2:
                 sides.reverse()
-            got = {}
+            got, report = {}, {}
             for side, root in sides:
-                got[side] = run_once(root, workload, seed, spec["run_seconds"], args.trace)
+                report[side], got[side] = run_once(root, workload, seed, spec["run_seconds"],
+                                                   args.trace)
                 log.write(json.dumps({"workload": workload, "pair": i, "seed": seed, "side": side,
-                                      "parent": sha, "trace": args.trace, "result": got[side]}) + "\n")
+                                      "parent": sha, "trace": args.trace,
+                                      "report": report[side], "result": got[side]}) + "\n")
                 log.flush()
                 print(f"{workload} pair {i} seed {seed} {side}: correct={got[side]['correct']} "
                       f"failed={got[side]['failed']}/{got[side]['attempted']}", file=sys.stderr)
             pairs.append((got["parent"], got["change"]))
+            reports.append((report["parent"], report["change"]))
         correct = all(p["correct"] and c["correct"] for p, c in pairs)
         pf, cf = sum(p["failed"] for p, _ in pairs), sum(c["failed"] for _, c in pairs)
         print(f"{workload}: {len(pairs)} pairs vs parent {sha[:12]}, all correct {correct}, "
@@ -172,6 +197,8 @@ def main():
             rows, ok = e2e_rows(pairs, spec)
             print("\n".join(rows))
             all_ok &= ok
+        print("  per-kind medians (report line):")
+        print("\n".join(kind_rows(reports)))
     sys.exit(0 if all_ok else 1)
 
 
