@@ -164,13 +164,13 @@ object GraftProcedures {
       Array(param("table", StringType), param("min_leaf_bytes", LongType))
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val dir = input.getUTF8String(0).toString
-      val (packed, carried) =
-        VersionedTable.binpack(spark, dir, specOf(dir), input.getLong(1))
+      val fold = VersionedTable.binpackFold(spark, dir, specOf(dir),
+        input.getLong(1), None)
       oneRow(StructType(Seq(
         StructField("table", StringType),
         StructField("leaves_packed", IntegerType),
         StructField("leaves_carried", IntegerType))),
-        Seq(dir, packed, carried))
+        Seq(dir, fold.folded, fold.carried))
     }
   }
 

@@ -56,8 +56,13 @@ import graft.pipeline.Locking
   * [[CommitConflictException]] and the public mutators retry against the
   * new head (re-reading it, so a delete retried over a concurrent append
   * sees the appended rows). Loser-attempt dirs become orphans that
-  * [[vacuum]] sweeps. Only [[vacuum]]/[[compact]] remain
-  * single-writer-only maintenance ops (documented there).
+  * [[vacuum]] sweeps. The maintenance folds ([[compact]],
+  * [[convertFormat]], [[binpack]], [[optimizeZOrderCols]]) retry a lost
+  * CAS the same way and also hold the table's store `_LOCK`, so two
+  * maintainers never race each other. Only the retention sweeps
+  * ([[vacuum]], [[vacuumOlderThan]], [[maintain]]'s vacuum) remain
+  * single-writer-only: they erase bytes under the `_LOCK` and never
+  * retry (documented there).
   */
 object VersionedTable {
 
@@ -820,15 +825,28 @@ object VersionedTable {
       }: _*)
     }
 
+  /** A clustered add-dir write (OPTIMIZE ZORDER): RANGE-partition the
+    * rows on (spec values…, `key`) into `slices` tasks and sort each task
+    * the same way, so every output FILE covers a tight `key` range inside
+    * (mostly) one value tuple; `rowGroupBytes` bounds the format's
+    * intra-file statistics unit (`parquet.block.size` /
+    * `orc.stripe.size`). `key` references PHYSICAL column names — it is
+    * evaluated on the frame as written.
+    */
+  private final case class Clustering(key: Column, slices: Int,
+      rowGroupBytes: Int)
+
   /** Write a frame as a new immutable data dir landing as `version` and
     * return its leaf paths (relative to tableDir). `base` is the
     * manifest the commit derives from — its format, row-tracking flag
     * and column mapping shape the files; create and REPLACE pass the
     * manifest they are about to publish. The spec columns stay in the
-    * data; their duplicates drive the directory layout.
+    * data; their duplicates drive the directory layout — hash-clustered
+    * by value tuple, or range-clustered and sorted under `cluster`.
     */
   private def writeDataDirCols(df: DataFrame, tableDir: String,
-      version: Int, partCols: Seq[String], base: VManifest): Seq[String] = {
+      version: Int, partCols: Seq[String], base: VManifest,
+      cluster: Option[Clustering] = None): Seq[String] = {
     val fmt = base.fmt
     require(SupportedFormats.contains(fmt),
       s"unsupported versioned-table format '$fmt' — one of " +
@@ -858,22 +876,33 @@ object VersionedTable {
     // the (possibly nested) directory layout in spec order; TRANSFORM
     // fields derive the dir value from the source column (which itself
     // stays in the data) — the hidden-partitioning contract
-    fields.zip(pdirs).foldLeft(phys) { case (d, (fld, p)) =>
+    val laid = fields.zip(pdirs).foldLeft(phys) { case (d, (fld, p)) =>
       d.withColumn(p, fld.valueIn(phys))
     }
-      .repartition(pdirs.map(col): _*)
-      .write.mode("overwrite").partitionBy(pdirs: _*)
-      .format(fmt).save(s"$tableDir/$rel")
+    val w = cluster match {
+      case None => laid.repartition(pdirs.map(col): _*).write
+      case Some(c) =>
+        // the range partitioning and in-task sort survive the write (no
+        // exchange above them); with the footer-stats harvest below the
+        // connector skips whole files on the key's columns
+        val keys = pdirs.map(col) :+ c.key
+        val sizeKey =
+          if (fmt == "orc") "orc.stripe.size" else "parquet.block.size"
+        laid.repartitionByRange(c.slices, keys: _*)
+          .sortWithinPartitions(keys: _*).write
+          .option(sizeKey, c.rowGroupBytes.toString)
+    }
+    w.mode("overwrite").partitionBy(pdirs: _*).format(fmt)
+      .save(s"$tableDir/$rel")
     publishDataDir(spark, tableDir, rel, partCols, phys.schema, fmt,
       rowTracking = rt)
   }
 
-  /** Publication contract for a freshly-written add-dir — shared by
-    * [[writeDataDirCols]] and the layout writers ([[optimizeZOrder]])
-    * whose writer SHAPES differ but whose commit obligations are
-    * identical: enumerate leaves (one directory level per spec column),
-    * refuse NULL-sentinel leaves BEFORE the manifest commit, harvest the
-    * file-stats sidecars, return sorted tableDir-relative leaf paths.
+  /** Publication contract for a freshly-written add-dir (the tail of
+    * [[writeDataDirCols]]): enumerate leaves (one directory level per
+    * spec column), refuse NULL-sentinel leaves BEFORE the manifest
+    * commit, harvest the file-stats sidecars, return sorted
+    * tableDir-relative leaf paths.
     *
     * NULL partition values are REFUSED at EVERY level, not silently
     * written: hive's layout spells them
@@ -3763,124 +3792,147 @@ object VersionedTable {
       .toDF("constraint", "check_expr", "violations")
   }
 
-  /** Small-file maintenance: fold every live leaf into one fresh data dir
-    * (one leaf per partition value again) as a new version — delete
-    * vectors fold into the data here, so the new manifest carries none.
-    * Prior versions keep referencing the old leaves until [[vacuum]].
-    * Holds the table's `_LOCK` ([[graft.pipeline.Locking]]) — two
-    * concurrent compactions racing the same head would double-write.
+  /** What one maintenance fold did: head leaves folded (read through
+    * their delete vectors and rewritten), leaves the rewrite wrote, and
+    * head leaves carried into the new version by reference. A fold that
+    * selects nothing commits nothing and leaves every head leaf in place.
+    */
+  private[sources] final case class Fold(folded: Int, written: Int,
+      carried: Int)
+
+  /** The maintenance fold kernel (the public Delta OPTIMIZE shape):
+    * [[compact]], [[convertFormat]], [[binpack]] (with [[maintain]]'s
+    * fold) and [[optimizeZOrderCols]] differ only in the leaves `select`
+    * picks from the head. One commit, under [[withCommitRetry]] — a lost
+    * CAS re-selects against the new head:
+    *   - the chosen leaves' vector-applied view (row ids kept on a
+    *     tracked table) is rewritten as one fresh data dir, one leaf per
+    *     value tuple again, laid out by `cluster` when given;
+    *   - every other leaf carries BY REFERENCE, byte-untouched; `dirty`
+    *     keeps exactly the carried dirty leaves, whose vectors stay live,
+    *     and the delete dirs leave the manifest once no dirty leaf is
+    *     carried (every vector folded in);
+    *   - `toFormat` replaces the format head only, so feature markers
+    *     (row tracking) stay; a legacy manifest gains its schema.
+    * An empty selection commits nothing. Prior versions keep reading
+    * their own leaves until [[vacuum]]. Callers hold the store `_LOCK`.
+    */
+  private def foldCommit(spark: SparkSession, tableDir: String,
+      partCol: String, what: String, toFormat: Option[String] = None,
+      cluster: Option[(VManifest, DataFrame) => Clustering] = None)(
+      select: VManifest => Seq[String]): Fold =
+    withCommitRetry {
+      val v = latestVersion(spark, tableDir) + 1
+      val m = readManifestFull(spark, tableDir, v - 1)
+      val cols = specOf(partCol)
+      requireSpec(m, cols, what)
+      val fold = select(m)
+      if (fold.isEmpty) Fold(0, 0, m.leaves.size)
+      else {
+        val kept = m.leaves.filterNot(fold.toSet)
+        val keptDirty = m.dirty.filter(kept.contains)
+        val next = m.copy(partcol = cols,
+          format = toFormat.fold(m.format)(_ +: m.format.drop(1)))
+        val folded = readView(spark, tableDir, m, onlyLeaves = Some(fold),
+          withRowIds = m.rowTracking)
+        val written = writeDataDirCols(folded, tableDir, v, cols, next,
+          cluster.map(_(m, folded)))
+        writeManifest(spark, tableDir, v, next.copy(
+          leaves = (kept ++ written).sorted, dirty = keptDirty,
+          deletes = if (keptDirty.isEmpty) Nil else m.deletes,
+          schema =
+            if (m.schema.nonEmpty) m.schema else encodeSchema(folded.schema)))
+        Fold(fold.size, written.size, kept.size)
+      }
+    }
+
+  /** Small-file maintenance: fold EVERY live leaf — foreign-spec leaves
+    * migrate to the current spec and every delete vector folds into the
+    * data, so the new manifest carries none. No-op on a table with no
+    * leaves. Holds the table's `_LOCK` ([[graft.pipeline.Locking]]).
     */
   def compact(spark: SparkSession, tableDir: String, partCol: String): Unit =
-    Locking.withStoreLock(spark, tableDir)(compactLocked(spark, tableDir, partCol))
-
-  private def compactLocked(spark: SparkSession, tableDir: String,
-      partCol: String): Unit = {
-    val v = latestVersion(spark, tableDir) + 1
-    val m = readManifestFull(spark, tableDir, v - 1)
-    val cols = specOf(partCol)
-    requireSpec(m, cols, "compact")
-    val folded = readView(spark, tableDir, m, withRowIds = m.rowTracking)
-    writeManifest(spark, tableDir, v, m.copy(
-      leaves = writeDataDirCols(folded, tableDir, v, cols, m),
-      deletes = Nil, dirty = Nil,
-      schema = if (m.schema.nonEmpty) m.schema else encodeSchema(folded.schema),
-      partcol = cols))
-  }
+    Locking.withStoreLock(spark, tableDir)(
+      foldCommit(spark, tableDir, partCol, "compact")(_.leaves))
 
   /** FORMAT MIGRATION — rewrite the head into a new data-file format
     * as one versioned commit (the ORC-native-to-parquet-lakehouse move,
     * or the reverse): [[compact]]'s fold with the format switched, so
-    * delete vectors fold in, the schema carries, and every PRIOR
-    * snapshot keeps reading its own leaves in their own format (the
-    * manifest records the format per version — time travel across the
-    * migration boundary just works). Cost is one full rewrite, the
-    * honest price of changing bytes-on-disk; vacuum reclaims the old
-    * format's leaves under the normal retention rules.
+    * delete vectors fold in, the schema and feature markers carry, and
+    * every PRIOR snapshot keeps reading its own leaves in their own
+    * format (the manifest records the format per version — time travel
+    * across the migration boundary just works). Cost is one full
+    * rewrite, the honest price of changing bytes-on-disk; vacuum
+    * reclaims the old format's leaves under the normal retention rules.
     */
   def convertFormat(spark: SparkSession, tableDir: String, partCol: String,
-      newFormat: String): Unit =
-    Locking.withStoreLock(spark, tableDir)(withCommitRetry {
-      require(SupportedFormats.contains(newFormat),
-        s"unsupported versioned-table format '$newFormat' — one of " +
-          SupportedFormats.mkString("/"))
-      val v = latestVersion(spark, tableDir) + 1
-      val m = readManifestFull(spark, tableDir, v - 1)
-      val cols = specOf(partCol)
-      requireSpec(m, cols, "convertFormat")
+      newFormat: String): Unit = {
+    require(SupportedFormats.contains(newFormat),
+      s"unsupported versioned-table format '$newFormat' — one of " +
+        SupportedFormats.mkString("/"))
+    Locking.withStoreLock(spark, tableDir)(foldCommit(spark, tableDir,
+        partCol, "convertFormat", toFormat = Some(newFormat)) { m =>
       require(!(m.rowTracking && newFormat != "parquet"),
         "cannot convert a row-tracked table away from parquet — fresh " +
           "row-id derivation needs _metadata.row_index (parquet-only)")
-      val folded = readView(spark, tableDir, m, withRowIds = m.rowTracking)
-      writeManifest(spark, tableDir, v, m.copy(
-        leaves = writeDataDirCols(folded, tableDir, v, cols,
-          m.copy(format = newFormat +: m.format.drop(1))),
-        deletes = Nil, dirty = Nil,
-        schema =
-          if (m.schema.nonEmpty) m.schema else encodeSchema(folded.schema),
-        partcol = cols, format = Seq(newFormat)))
+      // an empty fold would commit nothing and leave the format as is
+      require(m.leaves.nonEmpty,
+        s"convertFormat: the table at $tableDir has no leaves to rewrite")
+      m.leaves
     })
+  }
 
   /** OPTIMIZE (bin-packing) — the Delta OPTIMIZE / Iceberg
     * rewriteDataFiles shape at THIS table's manifest granularity
-    * (leaves): per partition value, live same-spec leaves whose parquet
+    * (leaves): per partition value, live same-spec leaves whose data
     * bytes total under `minLeafBytes` are SMALL; a partition folds when
     * it has ≥ 2 small leaves (coalescing pays) or a small DIRTY leaf
     * (folding purges its delete vectors into the data). Folded leaves
     * rewrite into ONE fresh leaf per partition; everything else — large
     * leaves, single-small clean partitions, foreign-spec leaves (their
-    * migration is [[compact]]'s job) — is carried BY REFERENCE,
-    * byte-untouched. Unlike [[compact]], cost is proportional to the
-    * small-file debt, not the table: at 100 TB an ingestion cadence
-    * produces thousands of small leaves against a petabyte of settled
-    * ones, and only the debt is read or written. No-op (no new version)
-    * when nothing qualifies. Holds the store `_LOCK`. Returns
-    * (folded leaf count, new leaf count).
+    * migration is [[compact]]'s job), out-of-slice leaves under `where`
+    * — is carried BY REFERENCE, byte-untouched. Unlike [[compact]], cost
+    * is proportional to the small-file debt, not the table: at 100 TB an
+    * ingestion cadence produces thousands of small leaves against a
+    * petabyte of settled ones, and only the debt is read or written.
+    * No-op (no new version) when nothing qualifies. Holds the store
+    * `_LOCK`. Returns (folded leaf count, new leaf count).
     */
   def binpack(spark: SparkSession, tableDir: String, partCol: String,
-      minLeafBytes: Long, where: Option[String] = None): (Int, Int) =
-    Locking.withStoreLock(spark, tableDir)(
-      binpackLocked(spark, tableDir, partCol, minLeafBytes, where))
+      minLeafBytes: Long, where: Option[String] = None): (Int, Int) = {
+    val f = binpackFold(spark, tableDir, partCol, minLeafBytes, where)
+    (f.folded, f.written)
+  }
 
-  private def binpackLocked(spark: SparkSession, tableDir: String,
-      partCol: String, minLeafBytes: Long,
-      where: Option[String] = None): (Int, Int) = {
-      val v = latestVersion(spark, tableDir) + 1
-      val m = readManifestFull(spark, tableDir, v - 1)
-      val cols = specOf(partCol)
-      requireSpec(m, cols, "binpack")
-      // partition-scoped OPTIMIZE: only in-slice leaves are fold
-      // candidates; everything else carries by reference, byte-untouched
-      val slice = where.map(w => leavesInSlice(spark, m, cols, w))
-      val f = fs(spark, tableDir)
-      def leafBytes(l: String): Long =
-        f.listStatus(new Path(s"$tableDir/$l")).toSeq
-          .filter(st => st.isFile && FileStats.isDataFile(st.getPath.getName))
-          .map(_.getLen).sum
-      val fold = m.leaves
-        .filter(l => leafPartPairs(l).map(_._1) == specDirNames(cols) &&
-          slice.forall(_.contains(l)) &&
-          leafBytes(l) < minLeafBytes)
-        .groupBy(l => leafPartPairs(l).map(_._2))
-        .filter { case (_, ls) =>
-          ls.size >= 2 || ls.exists(m.dirtySet.contains)
-        }
-        .values.flatten.toSeq.sorted
-      if (fold.isEmpty) (0, 0)
-      else {
-        val kept = m.leaves.filterNot(fold.toSet)
-        // vectors of folded dirty leaves APPLY here (readView anti-joins
-        // them); vectors for still-kept dirty leaves remain live, so the
-        // delete dirs stay in the manifest — entries pointing at replaced
-        // files match nothing by construction
-        val folded = readView(spark, tableDir, m, onlyLeaves = Some(fold),
-          withRowIds = m.rowTracking)
-        val newLeaves = writeDataDirCols(folded, tableDir, v, cols, m)
-        writeManifest(spark, tableDir, v, m.copy(
-          leaves = (kept ++ newLeaves).sorted,
-          dirty = m.dirty.filter(kept.contains), partcol = cols))
-        (fold.size, newLeaves.size)
-      }
-    }
+  /** [[binpack]] with the whole [[Fold]] — `CALL graft.binpack` reports
+    * the carried count too.
+    */
+  private[sources] def binpackFold(spark: SparkSession, tableDir: String,
+      partCol: String, minLeafBytes: Long, where: Option[String]): Fold =
+    Locking.withStoreLock(spark, tableDir)(
+      foldCommit(spark, tableDir, partCol, "binpack")(
+        smallLeafDebt(spark, tableDir, specOf(partCol), minLeafBytes, where)))
+
+  /** [[binpack]]'s selector (see there): the small same-spec, in-slice
+    * leaves of every partition value with ≥ 2 of them or a dirty one.
+    */
+  private def smallLeafDebt(spark: SparkSession, tableDir: String,
+      cols: Seq[String], minLeafBytes: Long, where: Option[String])(
+      m: VManifest): Seq[String] = {
+    val slice = where.map(w => leavesInSlice(spark, m, cols, w))
+    val f = fs(spark, tableDir)
+    def leafBytes(l: String): Long =
+      f.listStatus(new Path(s"$tableDir/$l")).toSeq
+        .filter(st => st.isFile && FileStats.isDataFile(st.getPath.getName))
+        .map(_.getLen).sum
+    m.leaves
+      .filter(l => leafPartPairs(l).map(_._1) == specDirNames(cols) &&
+        slice.forall(_.contains(l)) &&
+        leafBytes(l) < minLeafBytes)
+      .groupBy(l => leafPartPairs(l).map(_._2))
+      .filter { case (_, ls) => ls.size >= 2 || ls.exists(m.dirtySet.contains) }
+      .values.flatten.toSeq.sorted
+  }
 
   /** OPTIMIZE ZORDER BY — [[compact]] with a layout upgrade (the public
     * Delta OPTIMIZE ZORDER shape on the snapshot table): every live leaf
@@ -3889,14 +3941,10 @@ object VersionedTable {
     * (parquet) / STRIPES (ORC) inside each leaf carry tight min/max on
     * BOTH columns — selective scans skip inside files the way
     * [[graft.sources.Layout]]'s multi-file layout skips files.
-    * `rowGroupBytes` bounds the skipping granularity
-    * (`parquet.block.size` / `orc.stripe.size` — each format's native
-    * intra-file statistics unit); delete vectors fold into the data as
-    * in [[compact]]. Works under ANY partition spec depth: the range
-    * repartition and sort key every spec level ahead of z, so each
-    * output file sits inside one value tuple with a tight z range.
-    * Holds the store `_LOCK`; prior versions keep reading their own
-    * leaves until [[vacuum]].
+    * `rowGroupBytes` bounds the skipping granularity and `numSlices` is
+    * the file granularity knob (at scale: slice bytes / target file
+    * size) — see [[Clustering]]. Works under ANY partition spec depth:
+    * the range repartition and sort key every spec level ahead of z.
     */
   def optimizeZOrder(spark: SparkSession, tableDir: String, partCol: String,
       c1: String, c2: String, rowGroupBytes: Int = 1 << 20,
@@ -3904,19 +3952,6 @@ object VersionedTable {
     optimizeZOrderCols(spark, tableDir, partCol, Seq(c1, c2),
       rowGroupBytes, numSlices)
 
-  /** N-column / partition-scoped OPTIMIZE ZORDER (Delta accepts any
-    * arity; a 100 TB table re-lays-out incrementally, never whole):
-    * `zcols` is the z-map column list (1–7 columns — the Morton code
-    * must fit a long at ≥ 8 bits per column; one column degenerates to a
-    * plain range-cluster, still a valid layout); `where`, when present,
-    * is a partition-column predicate selecting the ONLY leaves that
-    * fold and re-sort — every out-of-slice leaf carries by reference,
-    * byte-untouched, and the delete vectors of still-carried dirty
-    * leaves remain live exactly as [[binpack]] keeps them. The z domain
-    * (per-column min/max) is computed over the FOLDED slice: the layout
-    * decision is local to the bytes being rewritten. No-op (no new
-    * version) when the slice is empty.
-    */
   /** Rank-preserving long encoding of a z-column (Delta supports string
     * and date ZORDER; a bare `cast("long")` NULLs them silently).
     * Numerics/booleans/timestamps cast monotonically; dates map to
@@ -3941,89 +3976,54 @@ object VersionedTable {
           "date, timestamp, or string column")
     }
 
+  /** N-column / partition-scoped OPTIMIZE ZORDER (Delta accepts any
+    * arity; a 100 TB table re-lays-out incrementally, never whole):
+    * `zcols` is the z-map column list (1–7 columns — the Morton code
+    * must fit a long at ≥ 8 bits per column; one column degenerates to a
+    * plain range-cluster, still a valid layout); `where`, when present,
+    * is a partition-column predicate selecting the ONLY leaves that
+    * fold and re-sort — every out-of-slice leaf carries by reference,
+    * byte-untouched, and the delete vectors of still-carried dirty
+    * leaves remain live ([[foldCommit]]'s carry rule). No-op (no new
+    * version) when the slice is empty.
+    */
   def optimizeZOrderCols(spark: SparkSession, tableDir: String,
       partCol: String, zcols: Seq[String], rowGroupBytes: Int = 1 << 20,
-      numSlices: Int = 8, where: Option[String] = None): Unit =
-    Locking.withStoreLock(spark, tableDir) {
-      require(zcols.nonEmpty && zcols.size <= 7,
-        s"ZORDER BY takes 1 to 7 columns (the Morton code must fit a " +
-          s"long); got ${zcols.size}: ${zcols.mkString(", ")}")
-      val v = latestVersion(spark, tableDir) + 1
-      val m = readManifestFull(spark, tableDir, v - 1)
-      val cols = specOf(partCol)
-      requireSpec(m, cols, "optimizeZOrder")
-      val fold = where match {
-        case None => m.leaves
-        case Some(w) =>
-          val s = leavesInSlice(spark, m, cols, w); m.leaves.filter(s)
-      }
-      if (fold.nonEmpty) {
-      val kept = m.leaves.filterNot(fold.toSet)
-      val folded = readView(spark, tableDir, m, onlyLeaves = Some(fold),
-        withRowIds = m.rowTracking)
-      // Rank-preserving long encoding per z-column TYPE — a bare
-      // cast("long") silently NULLs strings and dates, committing a
-      // rewrite with no clustering benefit. Unsupported types refuse
-      // loudly instead.
-      val enc = zcols.map { c =>
-        val f = folded.schema.fields.find(_.name == c).getOrElse(
-          throw new IllegalArgumentException(
-            s"ZORDER BY column '$c' is not in the table schema: " +
-              folded.schema.fieldNames.mkString(", ")))
-        zEncode(f.dataType, col(c), c)
-      }
-      val aggs = enc.flatMap(e => Seq(min(e), max(e)))
-      val r = folded.agg(aggs.head, aggs.tail: _*).first()
-      def bound(i: Int): Column =
-        lit(if (r.isNullAt(i)) 0L else r.getLong(i)) // all-NULL column
-      val bits = math.min(8, 62 / zcols.size)
-      val z = Layout.zValueN(enc,
-        zcols.indices.map(i => bound(2 * i)),
-        zcols.indices.map(i => bound(2 * i + 1)), bits)
-      val rel = s"data/add-v$v-${nonce()}"
-      val zfields = cols.map(SpecField.parse)
-      val pdirs = zfields.map(f => partDirCol(f.dirName))
-      // RANGE repartition on (spec levels…, z): each task holds a
-      // contiguous z slice of (mostly) one value tuple, so every output
-      // FILE covers a tight range on ALL z-columns — with the
-      // footer-stats harvest in publishDataDir, the connector then skips
-      // whole files multi-dimensionally, not just row groups inside
-      // them. `numSlices` is the file granularity knob (at scale: slice
-      // bytes / target file size).
-      val sizeKey =
-        if (m.fmt == "orc") "orc.stripe.size" else "parquet.block.size"
-      val clustered = zfields.zip(pdirs).foldLeft(folded) {
-          case (d, (fld, p)) => d.withColumn(p, fld.valueIn(folded))
-        }
-        .withColumn("__vt_z", z)
-        .repartitionByRange(numSlices,
-          (pdirs.map(col) :+ col("__vt_z")): _*)
-        .sortWithinPartitions((pdirs :+ "__vt_z").map(col): _*)
-        .drop("__vt_z")
-      // the projection back to physical names preserves the range
-      // partitioning and in-task sort (no exchange above a deterministic
-      // alias-only select)
-      toPhysical(clustered, m.colMap)
-        .write.mode("overwrite")
-        .option(sizeKey, rowGroupBytes.toString)
-        .partitionBy(pdirs: _*).format(m.fmt).save(s"$tableDir/$rel")
-      val newLeaves = publishDataDir(spark, tableDir, rel, cols,
-        toPhysical(folded, m.colMap).schema, m.fmt,
-        rowTracking = m.rowTracking)
-      // vectors of folded dirty leaves APPLIED in readView; vectors for
-      // still-kept dirty leaves stay live (binpack's carry rule) — with
-      // no kept dirty leaf every vector folded in, so the delete dirs
-      // drop from the manifest (the whole-table case keeps its clean
-      // post-OPTIMIZE manifest)
-      val keptDirty = m.dirty.filter(kept.contains)
-      writeManifest(spark, tableDir, v, m.copy(
-        leaves = (kept ++ newLeaves).sorted,
-        deletes = if (keptDirty.isEmpty) Nil else m.deletes,
-        dirty = keptDirty,
-        schema = if (m.schema.nonEmpty) m.schema else encodeSchema(folded.schema),
-        partcol = cols))
-      }
-    }
+      numSlices: Int = 8, where: Option[String] = None): Unit = {
+    require(zcols.nonEmpty && zcols.size <= 7,
+      s"ZORDER BY takes 1 to 7 columns (the Morton code must fit a " +
+        s"long); got ${zcols.size}: ${zcols.mkString(", ")}")
+    Locking.withStoreLock(spark, tableDir)(foldCommit(spark, tableDir,
+        partCol, "optimizeZOrder",
+        cluster = Some(zCluster(zcols, rowGroupBytes, numSlices))) { m =>
+      where.fold(m.leaves)(w =>
+        m.leaves.filter(leavesInSlice(spark, m, specOf(partCol), w)))
+    })
+  }
+
+  /** The z-order [[Clustering]] of a fold: the Morton z-value of the
+    * type-wise encodings of `zcols`, each quantized against its min/max
+    * over the FOLDED rows — the layout decision is local to the bytes
+    * being rewritten.
+    */
+  private def zCluster(zcols: Seq[String], rowGroupBytes: Int,
+      numSlices: Int)(m: VManifest, folded: DataFrame): Clustering = {
+    val types = zcols.map(c => folded.schema.fields.find(_.name == c)
+      .getOrElse(throw new IllegalArgumentException(
+        s"ZORDER BY column '$c' is not in the table schema: " +
+          folded.schema.fieldNames.mkString(", "))).dataType)
+    def enc(name: String => String): Seq[Column] =
+      zcols.zip(types).map { case (c, t) => zEncode(t, col(name(c)), c) }
+    val aggs = enc(identity).flatMap(e => Seq(min(e), max(e)))
+    val r = folded.agg(aggs.head, aggs.tail: _*).first()
+    def bound(i: Int): Column =
+      lit(if (r.isNullAt(i)) 0L else r.getLong(i)) // all-NULL column
+    // the key runs on the frame as written: physical names
+    Clustering(Layout.zValueN(enc(c => m.colMap.getOrElse(c, c)),
+      zcols.indices.map(i => bound(2 * i)),
+      zcols.indices.map(i => bound(2 * i + 1)),
+      math.min(8, 62 / zcols.size)), numSlices, rowGroupBytes)
+  }
 
   /** Grace period before an unreferenced (orphan) dir is swept: a
     * CONCURRENT optimistic writer's staged dir is indistinguishable from
@@ -4038,6 +4038,58 @@ object VersionedTable {
     */
   val DefaultOrphanGraceMs: Long = 3600L * 1000
 
+  /** A retention rule: which versions a sweep keeps, beyond the head and
+    * the ref-pinned versions it always keeps. Each rule refuses
+    * parameters that could erase the head.
+    */
+  private sealed trait Retain
+  /** Keep the newest `n` versions. */
+  private final case class RetainLast(n: Int) extends Retain {
+    require(n >= 1, s"retainLast must be >= 1 (got $n): must retain at " +
+      "least the latest version")
+  }
+  /** Keep the versions committed at most `maxAgeMs` before `nowMs`. */
+  private final case class RetainYounger(maxAgeMs: Long, nowMs: Long)
+      extends Retain {
+    require(maxAgeMs >= 0, "maxAgeMs must be non-negative")
+  }
+
+  /** One retention decision: versions to drop and to keep (ascending),
+    * the paths the kept manifests reference (`live`), the dropped
+    * manifests' paths none of them shares (`dead`, sorted), and whether
+    * the head is row-tracked.
+    */
+  private final case class Retention(drop: Seq[Int], keep: Seq[Int],
+      live: Set[String], dead: Seq[String], rowTracking: Boolean)
+
+  /** The retention planner — the only source of (drop, keep, dead) for
+    * [[vacuum]], [[vacuumOlderThan]], [[vacuumDryRun]] and [[maintain]].
+    * The head is always kept (the table must stay readable), and so is
+    * every version a branch or tag names ([[refProtected]]) regardless
+    * of `rule`. Commit time is the manifest mtime ([[manifestMtime]]),
+    * read only for versions neither the head nor a ref decides. Each
+    * manifest is read once. Empty on a table with no versions.
+    */
+  private def retention(spark: SparkSession, tableDir: String,
+      rule: Retain): Retention = {
+    val vs = versions(spark, tableDir)
+    val pinned = refProtected(spark, tableDir)
+    val (keep, drop) = vs.indices.partition(i =>
+      i == vs.size - 1 || pinned(vs(i)) || (rule match {
+        case RetainLast(n) => i >= vs.size - n
+        case RetainYounger(age, now) =>
+          manifestMtime(spark, tableDir, vs(i)) >= now - age
+      })) match { case (k, d) => (k.map(vs), d.map(vs)) }
+    val kept = keep.map(readManifestFull(spark, tableDir, _))
+    val live = kept.flatMap(m => m.leaves ++ m.deletes).toSet
+    val dead = drop.flatMap { v =>
+      val m = readManifestFull(spark, tableDir, v)
+      m.leaves ++ m.deletes
+    }.toSet -- live
+    Retention(drop, keep, live, dead.toSeq.sorted,
+      kept.lastOption.exists(_.rowTracking))
+  }
+
   /** Drop all versions older than `retainLast` and physically delete every
     * leaf no retained manifest references — the erasure half of the
     * delete contract, and the metadata bound. Leaf set comparisons are
@@ -4046,18 +4098,8 @@ object VersionedTable {
     */
   def vacuum(spark: SparkSession, tableDir: String, retainLast: Int,
       orphanGraceMs: Long = DefaultOrphanGraceMs): Unit =
-    Locking.withStoreLock(spark, tableDir) {
-      require(retainLast >= 1, "must retain at least the latest version")
-      val vs = versions(spark, tableDir)
-      if (vs.nonEmpty) {
-        val (drop0, keep0) = vs.splitAt(math.max(0, vs.size - retainLast))
-        // ref'd versions are RETAINED regardless of position: a branch
-        // or tag names that snapshot, so retention cannot erase it
-        val pinned = refProtected(spark, tableDir)
-        val (save, drop) = drop0.partition(pinned.contains)
-        sweep(spark, tableDir, drop, save ++ keep0, orphanGraceMs)
-      }
-    }
+    Locking.withStoreLock(spark, tableDir)(sweep(spark, tableDir,
+      retention(spark, tableDir, RetainLast(retainLast)), orphanGraceMs))
 
   /** AGE-based retention (the reference's 7-day backup GC,
     * `HDFSBackupStrategy.java:100-129`, on the snapshot backend): drop
@@ -4069,38 +4111,9 @@ object VersionedTable {
   def vacuumOlderThan(spark: SparkSession, tableDir: String, maxAgeMs: Long,
       nowMs: Long = System.currentTimeMillis(),
       orphanGraceMs: Long = DefaultOrphanGraceMs): Unit =
-    Locking.withStoreLock(spark, tableDir) {
-      require(maxAgeMs >= 0, "maxAgeMs must be non-negative")
-      val f = fs(spark, tableDir)
-      val vs = versions(spark, tableDir)
-      if (vs.nonEmpty) {
-        val cutoff = nowMs - maxAgeMs
-        val pinned = refProtected(spark, tableDir)
-        val (drop, keep) = vs.partition(v => v != vs.last &&
-          !pinned.contains(v) &&
-          f.getFileStatus(new Path(s"${manifestsDir(tableDir)}/v$v.json"))
-            .getModificationTime < cutoff)
-        sweep(spark, tableDir, drop, keep, orphanGraceMs)
-      }
-    }
-
-  /** Shared physical sweep: erase dropped manifests' unshared leaves,
-    * then the manifests, then orphans past the grace period. Callers hold
-    * the store lock and guarantee the head is in `keep`.
-    *
-    * Orphans: `data/`/`deletes/` version dirs no RETAINED manifest
-    * references, plus stale `_staging_*` manifest files (a crash between
-    * staging a dir and the manifest CAS leaves both). Only dirs whose
-    * version number is ≤ the latest committed version AND whose mtime is
-    * older than `orphanGraceMs` are swept — the version bound keeps a
-    * fresh table's first commit invisible, the age bound protects an
-    * in-flight concurrent writer (see [[DefaultOrphanGraceMs]]).
-    */
-  private def manifestRefs(spark: SparkSession, tableDir: String,
-      v: Int): Seq[String] = {
-    val m = readManifestFull(spark, tableDir, v)
-    m.leaves ++ m.deletes
-  }
+    Locking.withStoreLock(spark, tableDir)(sweep(spark, tableDir,
+      retention(spark, tableDir, RetainYounger(maxAgeMs, nowMs)),
+      orphanGraceMs))
 
   /** Top-level data/deletes dirs the orphan rule would collect RIGHT
     * NOW: version-named, at or below `latest`, older than the grace
@@ -4123,33 +4136,42 @@ object VersionedTable {
     } yield rel
   }
 
-  private def sweep(spark: SparkSession, tableDir: String, drop: Seq[Int],
-      keep: Seq[Int], orphanGraceMs: Long): Unit = {
+  /** The physical sweep of a [[retention]] decision: erase the dead
+    * paths, then the dropped manifests, then orphans past the grace
+    * period. Callers hold the store lock; no-op on a table with no
+    * versions.
+    *
+    * Orphans: `data/`/`deletes/` version dirs no RETAINED manifest
+    * references, plus stale `_staging_*` manifest files (a crash between
+    * staging a dir and the manifest CAS leaves both). Only dirs whose
+    * version number is ≤ the latest committed version AND whose mtime is
+    * older than `orphanGraceMs` are swept — the version bound keeps a
+    * fresh table's first commit invisible, the age bound protects an
+    * in-flight concurrent writer (see [[DefaultOrphanGraceMs]]).
+    */
+  private def sweep(spark: SparkSession, tableDir: String, r: Retention,
+      orphanGraceMs: Long): Unit = if (r.keep.nonEmpty) {
     val f = fs(spark, tableDir)
     // row tracking: pin the id watermark BEFORE any sidecar-carrying
     // add-dir can be erased (callers hold the store lock, so the plain
     // overwrite is single-writer) — erasure must never regress the
     // watermark into handing out previously-assigned ids
-    if (keep.nonEmpty &&
-        readManifestFull(spark, tableDir, keep.max).rowTracking) {
+    if (r.rowTracking) {
       val w = rowIdHighWatermark(spark, tableDir)
       val out = f.create(rowIdFloorPath(tableDir), true)
       try out.write(w.toString.getBytes("UTF-8")) finally out.close()
     }
-    val live = keep.flatMap(manifestRefs(spark, tableDir, _)).toSet
-    val dead = drop.flatMap(manifestRefs(spark, tableDir, _)).toSet -- live
     // remove dead leaves first, manifests second: a crash in between
     // leaves old manifests pointing at missing leaves — unreadable, but
     // re-running vacuum completes; retained versions are never touched
-    dead.toSeq.sorted.foreach(l => f.delete(new Path(s"$tableDir/$l"), true))
-    drop.foreach(n =>
+    r.dead.foreach(l => f.delete(new Path(s"$tableDir/$l"), true))
+    r.drop.foreach(n =>
       f.delete(new Path(s"${manifestsDir(tableDir)}/v$n.json"), false))
-    val latest = (drop ++ keep).max
     val ageCutoff = System.currentTimeMillis() - orphanGraceMs
     // scanned AFTER the dead-leaf pass: deleting a child touches the
     // parent dir's mtime, so a dir fully emptied just now waits out a
     // fresh grace period before the orphan rule collects it
-    orphanDirs(f, tableDir, latest, ageCutoff, live)
+    orphanDirs(f, tableDir, r.keep.max, ageCutoff, r.live)
       .foreach(rel => f.delete(new Path(s"$tableDir/$rel"), true))
     val md = new Path(manifestsDir(tableDir))
     if (f.exists(md)) f.listStatus(md).foreach { st =>
@@ -4173,25 +4195,17 @@ object VersionedTable {
   def vacuumDryRun(spark: SparkSession, tableDir: String, retainLast: Int,
       orphanGraceMs: Long = DefaultOrphanGraceMs)
       : (Seq[String], Seq[Int], Seq[String]) = {
-    require(retainLast >= 1, "must retain at least the latest version")
-    val vs = versions(spark, tableDir)
-    if (vs.isEmpty) return (Nil, Nil, Nil)
-    val (drop0, keep0) = vs.splitAt(math.max(0, vs.size - retainLast))
-    val pinned = refProtected(spark, tableDir)
-    val (save, drop) = drop0.partition(pinned.contains)
-    val keep = save ++ keep0
-    val live = keep.flatMap(manifestRefs(spark, tableDir, _)).toSet
-    val dead = drop.flatMap(manifestRefs(spark, tableDir, _)).toSet -- live
-    val f = fs(spark, tableDir)
-    val ageCutoff = System.currentTimeMillis() - orphanGraceMs
-    (dead.toSeq.sorted, drop,
-      orphanDirs(f, tableDir, vs.max, ageCutoff, live).sorted)
+    val r = retention(spark, tableDir, RetainLast(retainLast))
+    if (r.keep.isEmpty) (Nil, Nil, Nil)
+    else (r.dead, r.drop, orphanDirs(fs(spark, tableDir), tableDir,
+      r.keep.max, System.currentTimeMillis() - orphanGraceMs, r.live).sorted)
   }
 
   /** Maintenance policy: fold leaf debt only when some partition's
     * count of live leaves exceeds `maxLeavesPerPartition`, then vacuum
-    * to `retainLast`. The check is pure manifest metadata (no data
-    * scan) — the cheap gate an ingestion scheduler calls after every
+    * to `retainLast` under [[vacuum]]'s retention rule (the head and
+    * ref-pinned versions stay). The check is pure manifest metadata (no
+    * data scan) — the cheap gate an ingestion scheduler calls after every
     * batch so small-file debt is bounded without paying a rewrite per
     * append. The fold is [[binpack]] with an unbounded size threshold,
     * NOT a full [[compact]]: only multi-leaf partitions (and dirty
@@ -4199,7 +4213,8 @@ object VersionedTable {
     * proportional to the debt the appends created — settled single-leaf
     * partitions are carried by reference untouched, which at 100 TB is
     * the difference between rewriting gigabytes and rewriting the
-    * table. Returns true if a fold ran.
+    * table. Both parameters are checked before anything runs. Returns
+    * true if a fold committed.
     *
     * The whole call holds the table's `_LOCK`: a second maintainer is
     * refused loudly instead of racing the compaction (round-7 advice,
@@ -4208,24 +4223,21 @@ object VersionedTable {
     */
   def maintain(spark: SparkSession, tableDir: String, partCol: String,
       maxLeavesPerPartition: Int = 4, retainLast: Int = 2,
-      orphanGraceMs: Long = DefaultOrphanGraceMs): Boolean =
+      orphanGraceMs: Long = DefaultOrphanGraceMs): Boolean = {
+    require(maxLeavesPerPartition >= 1, "maxLeavesPerPartition must be >= 1")
+    val rule = RetainLast(retainLast)
+    val cols = specOf(partCol)
     Locking.withStoreLock(spark, tableDir) {
-      require(maxLeavesPerPartition >= 1, "maxLeavesPerPartition must be >= 1")
-      val m = readHead(spark, tableDir)
-      requireSpec(m, specOf(partCol), "maintain")
-      val worst =
-        if (m.leaves.isEmpty) 0
-        else m.leaves.groupBy(leafPartPairs)
-          .values.map(_.size).max
-      val ran = worst > maxLeavesPerPartition
-      if (ran) binpackLocked(spark, tableDir, partCol, Long.MaxValue)
-      val vs = versions(spark, tableDir)
-      if (vs.nonEmpty) {
-        val (drop, keep) = vs.splitAt(math.max(0, vs.size - retainLast))
-        sweep(spark, tableDir, drop, keep, orphanGraceMs)
-      }
+      val ran = foldCommit(spark, tableDir, partCol, "maintain") { m =>
+        val sizes = m.leaves.groupBy(leafPartPairs).values.map(_.size)
+        if (sizes.exists(_ > maxLeavesPerPartition))
+          smallLeafDebt(spark, tableDir, cols, Long.MaxValue, None)(m)
+        else Nil
+      }.folded > 0
+      sweep(spark, tableDir, retention(spark, tableDir, rule), orphanGraceMs)
       ran
     }
+  }
 
   // --------------------------- surface entry
 

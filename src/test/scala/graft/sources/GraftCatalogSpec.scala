@@ -1064,6 +1064,15 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(vac.getAs[Long]("versions_dropped") === 2L)
     assert(VersionedTable.versions(spark, dir) === Seq(2))
     assert(ids(v1(dir)) === (1L to 4L)) // head intact after the sweep
+    // binpack: kind=a's two leaves pack into one; kind=b and kind=c
+    // carry by reference
+    spark.sql(s"INSERT INTO ${sqlTable(dir)} VALUES " +
+      "(5, 'a', 'ACTIVE', 50), (6, 'c', 'ACTIVE', 60)")
+    val bp = spark.sql(s"CALL graft.binpack('$dir', 1073741824)")
+      .collect().head
+    assert(bp.getAs[Int]("leaves_packed") === 2)
+    assert(bp.getAs[Int]("leaves_carried") === 2)
+    assert(ids(v1(dir)) === (1L to 6L))
     // Spark wraps the catalog's refusal in FAILED_TO_LOAD_ROUTINE; the
     // named surface list rides as the cause
     val unknown = intercept[Exception] {

@@ -143,6 +143,17 @@ class RowTrackingSpec extends AnyFunSuite {
     assert(idMap(dir) === before, "z-order must not renumber rows")
   }
 
+  test("convert_format to parquet keeps row tracking and every id") {
+    val dir = mk()
+    VersionedTable.append(Seq((5L, "a", "x", 50L))
+      .toDF("id", "kind", "src", "amount"), dir, "kind")
+    val before = idMap(dir)
+    spark.sql(s"CALL graft.convert_format('$dir', 'parquet')").collect()
+    assert(VersionedTable.rowTrackingEnabled(spark, dir),
+      "the format switch dropped the row-tracking marker")
+    assert(idMap(dir) === before, "convertFormat must not renumber rows")
+  }
+
   test("enableRowTracking backfills an existing table: ids dense over " +
       "live rows, stable through a later delete; idempotent") {
     val dir = mk(rowTracking = false)

@@ -106,6 +106,13 @@ class TableRefsSpec extends AnyFunSuite {
     VersionedTable.vacuumOlderThan(spark, dir, maxAgeMs = 0L,
       nowMs = System.currentTimeMillis() + 3600_000L)
     assert(VersionedTable.versions(spark, dir) === Seq(0, 2))
+    // so do the dry run and maintain's vacuum
+    assert(VersionedTable.vacuumDryRun(spark, dir, retainLast = 1)._2 === Nil)
+    VersionedTable.maintain(spark, dir, "kind", retainLast = 1)
+    assert(VersionedTable.versions(spark, dir) === Seq(0, 2))
+    assert(ids(spark.sql(
+      s"SELECT * FROM graft.`$dir` VERSION AS OF 'keep-v0'"))
+      === Seq(1L, 2L))
     // head reads stay intact throughout
     assert(ids(spark.sql(s"SELECT * FROM graft.`$dir`")) === (1L to 6L))
     // drop the tag: the pinned version re-enters retention and goes
