@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.functions.Hashes
 import graft.sources.Tables
 
@@ -246,10 +247,10 @@ object Dedup {
     // references it FOUR times (both band sides + both sig re-joins);
     // without materialization each reference recomputes the corpus scan +
     // shingle explode + aggregate (exchange reuse only covers the two
-    // identical band sides). materializeOnce runs it ONCE — guide §3.3's
+    // identical band sides). Materialize.once runs it ONCE — guide §3.3's
     // "materialise an intermediate referenced many times" — through the
     // reliable-checkpoint knob ([[CheckpointDirConf]]) on a cluster.
-    val sigArr = materializeOnce(
+    val sigArr = Materialize.once(
       minHashSignatures(Tables.documents(spark, sfDir)))
     val banded = bandedOf(sigArr)
     val a = banded.as("a"); val b = banded.as("b")
@@ -372,7 +373,7 @@ object Dedup {
     // the 64-vote fingerprint map is the expensive pass and the banded
     // self-join references it twice — materialize once (guide §3.3),
     // reliable-checkpoint on a cluster ([[CheckpointDirConf]])
-    val fps = materializeOnce(
+    val fps = Materialize.once(
       simHashFingerprints(Tables.documents(spark, sfDir)))
     val banded = fps.select(
       col("doc_id"), col("simhash"),
@@ -466,76 +467,34 @@ object Dedup {
       .orderBy("cluster_id", "doc_id")
   }
 
-  /** When set on the session, the propagation loop materializes each
-    * round with RELIABLE checkpoints into this directory (HDFS path on a
-    * real cluster) instead of `localCheckpoint`. localCheckpoint stores
-    * blocks on executors — fast, and the right local-mode default, but an
-    * executor loss mid-loop kills the job unrecoverably; a reliable
-    * checkpoint survives executor churn at the cost of a filesystem
-    * round-trip per round.
+  /** When set on the session, the propagation loop and the materialized
+    * signature/fingerprint frames checkpoint RELIABLY into this directory
+    * instead of `localCheckpoint` ([[graft.core.Materialize]]).
     */
-  val CheckpointDirConf = "spark.graft.dedup.checkpointDir"
-
-  /** Materialize an intermediate referenced many times (guide §3.3) with
-    * the SAME durability story as the propagation loop: local-mode
-    * default is `localCheckpoint` (fast, executor-held blocks), and
-    * setting [[CheckpointDirConf]] switches to a RELIABLE checkpoint —
-    * on a real cluster a localCheckpoint'd block lost to executor churn
-    * fails the query outright (the lineage is truncated, nothing can be
-    * recomputed), which the signature/fingerprint frames here must not
-    * inherit. persist-before-checkpoint keeps the reliable path at one
-    * compute (the checkpoint write reads cached blocks).
-    */
-  private[pipeline] def materializeOnce(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.getOption(CheckpointDirConf) match {
-      case Some(dir) =>
-        spark.sparkContext.setCheckpointDir(dir)
-        df.persist()
-        val cp = df.checkpoint(eager = true)
-        df.unpersist()
-        cp
-      case None => df.localCheckpoint()
-    }
-  }
+  val CheckpointDirConf: String = Materialize.CheckpointDirConf
 
   /** The propagation loop itself: (doc_id, cluster_id) rows, unordered. */
   def labelsOf(edges0: DataFrame): DataFrame = {
-    val spark = edges0.sparkSession
-    val reliableDir = spark.conf.getOption(CheckpointDirConf)
-    reliableDir.foreach(spark.sparkContext.setCheckpointDir)
-    // Reliable mode persists BEFORE checkpointing: a reliable checkpoint of
-    // an uncached plan runs the materializing action and then RE-EXECUTES
-    // the whole lineage in the checkpoint-write job; with the blocks cached,
-    // the write reads them instead, so each round stays one compute. The
-    // cache is released as soon as the checkpoint files exist. (Round dirs
-    // are GC'd by the ContextCleaner once unreferenced when
+    // each round is materialized: a local checkpoint, or a reliable one
+    // under CheckpointDirConf. Round dirs are GC'd by the ContextCleaner
+    // once unreferenced when
     // `spark.cleaner.referenceTracking.cleanCheckpoints=true`; on a long
     // loop set that, or point CheckpointDirConf at a run-scoped path and
-    // drop it after the labels are consumed.)
-    def materialize(df: DataFrame, eager: Boolean): DataFrame =
-      if (reliableDir.isDefined) {
-        df.persist()
-        val cp = df.checkpoint(eager = true)
-        df.unpersist()
-        cp
-      } else df.localCheckpoint(eager)
-    val edges = materialize(
+    // drop it after the labels are consumed.
+    val edges = Materialize.once( // reused every round — materialize once
       edges0.select(col("id_a").as("s"), col("id_b").as("d"))
-        .union(edges0.select(col("id_b").as("s"), col("id_a").as("d"))),
-      eager = true) // reused every round — materialize once
-    var labels = materialize(
-      edges.select(col("s").as("node")).distinct().withColumn("lbl", col("node")),
-      eager = true)
+        .union(edges0.select(col("id_b").as("s"), col("id_a").as("d"))))
+    var labels = Materialize.once(
+      edges.select(col("s").as("node")).distinct().withColumn("lbl", col("node")))
     var changed = 1L
     while (changed > 0) {
       val nbrMin = edges.join(labels, col("d") === col("node"))
         .groupBy(col("s").as("n2")).agg(min("lbl").as("nbr_lbl"))
       // local mode: lazy checkpoint — the count action below materializes
       // it, one job per round instead of an eager-checkpoint job plus a
-      // count job. Reliable mode is eager by construction (see materialize);
-      // its count then reads checkpointed rows.
-      val next = materialize(
+      // count job. Reliable mode is eager by construction; its count then
+      // reads checkpointed rows.
+      val next = Materialize.once(
         labels.join(nbrMin, col("node") === col("n2"), "left")
           .select(col("node"), least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"),
             (col("nbr_lbl") < col("lbl")).as("chg")),

@@ -1177,9 +1177,9 @@ object VersionedTable {
       selector: DataFrame => DataFrame): Seq[String] =
     if (leaves.isEmpty) Nil
     else {
-      val files = selector(readView(spark, tableDir, m,
-          onlyLeaves = Some(leaves), keepPositions = true))
-        .select(PosFile).distinct().collect().map(_.getString(0)).toSet
+      val files = distinctTuples(selector(readView(spark, tableDir, m,
+          onlyLeaves = Some(leaves), keepPositions = true)).select(PosFile))
+        .map(_.head)
       leaves.filter(l => files.exists(_.startsWith(l + "/")))
     }
 
@@ -1742,9 +1742,21 @@ object VersionedTable {
   private def specTuples(cols: Seq[String],
       frames: Seq[DataFrame]): Set[Seq[String]] =
     frames.map(specTupleFrame(cols)).reduceOption(_ union _)
-      .map(_.distinct().collect()
-        .map(r => cols.indices.map(r.getString): Seq[String]).toSet)
-      .getOrElse(Set.empty)
+      .fold(Set.empty[Seq[String]])(distinctTuples)
+
+  /** The distinct rows of an all-string frame as a driver set, in ONE
+    * job with no exchange: each task folds its rows into a set and the
+    * driver unions the per-task sets. Only for metadata-sized values
+    * (partition tuples, leaf or file paths), where a task returns at
+    * most one row per value; a `distinct()` would plan a shuffle that
+    * adaptive execution runs as a separate map job before the collect.
+    */
+  private def distinctTuples(df: DataFrame): Set[Seq[String]] = {
+    val n = df.columns.length
+    df.rdd.mapPartitions(rows =>
+        rows.map(r => (0 until n).map(r.getString): Seq[String]).toSet.iterator)
+      .collect().toSet
+  }
 
   /** The copy-on-write kernel every DML statement commits through: read
     * the head, let `plan` describe the statement over it ([[Rewrite]]),
@@ -1936,10 +1948,8 @@ object VersionedTable {
     // dirty leaves of THIS vector: parent dirs of the referenced files —
     // a manifest-bounded distinct, computed once at write time so reads
     // never run a discovery job
-    val touched = spark.read.parquet(s"$tableDir/$rel")
-      .select("file").distinct().collect()
-      .map(r => { val f = r.getString(0); f.substring(0, f.lastIndexOf('/')) })
-      .toSet
+    val touched = distinctTuples(readVectors(spark, tableDir, Seq(rel))
+      .select(regexp_extract(col("file"), "(?s)^(.*)/", 1))).map(_.head)
     if (touched.isEmpty) {
       fs(spark, tableDir).delete(new Path(s"$tableDir/$rel"), true)
       writeManifest(spark, tableDir, v, m)
@@ -1963,8 +1973,8 @@ object VersionedTable {
     * as nulls, schema sampling never decides anything) AND the scan gets
     * leaf-level partition pruning plus file-level min/max stats skipping
     * — the library read path and the `spark.read.format` path are the
-    * same machinery. Schema-less calls (delete-vector dirs, legacy
-    * tables without a recorded schema) stay plain multi-root parquet.
+    * same machinery. Schema-less calls (legacy tables without a
+    * recorded schema) stay plain multi-root parquet.
     */
   private def readLeaves(spark: SparkSession, tableDir: String,
       leaves: Seq[String], schema: Option[StructType] = None,
@@ -1980,6 +1990,18 @@ object VersionedTable {
         spark.read.format(fmt).load(leaves.map(l => s"$tableDir/$l"): _*)
     }
   }
+
+  /** Delete-vector dirs read with the engine's fixed vector schema —
+    * `(file STRING, pos BIGINT)`, what [[deleteMergeOnRead]] writes — so
+    * no read runs a footer-inference job. Vectors are ENGINE data, always
+    * parquet; only the user-visible leaves follow the table's format.
+    */
+  private def readVectors(spark: SparkSession, tableDir: String,
+      dirs: Seq[String]): DataFrame =
+    spark.read.schema(VectorSchema).parquet(dirs.map(d => s"$tableDir/$d"): _*)
+
+  private val VectorSchema =
+    StructType(Seq(StructField("file", StringType), StructField("pos", LongType)))
 
   // internal position column names — double-underscored to stay clear of
   // user schemas; dropped before any view leaves this object
@@ -2218,15 +2240,14 @@ object VersionedTable {
       return if (keepPositions) withPositions(plain, tableDir) else plain
     }
     val (dirty, clean) = leaves.partition(m.dirtySet.contains)
-    // delete-vector dirs are ENGINE data, always parquet — only the
-    // user-visible leaves follow the table's recorded format
-    val del = readLeaves(spark, tableDir, m.deletes)
-      .select(col("file").as(PosFile), col("pos").as(PosIdx))
+    // the vectors are read only where a dirty leaf is
     val dirtyView = if (dirty.isEmpty) None
       else Some(finish(withPositions(
         readLeaves(spark, tableDir, dirty, sch, m.fmt, m.colMap,
           m.specCols), tableDir)
-        .join(del, Seq(PosFile, PosIdx), "left_anti")))
+        .join(readVectors(spark, tableDir, m.deletes)
+            .select(col("file").as(PosFile), col("pos").as(PosIdx)),
+          Seq(PosFile, PosIdx), "left_anti")))
     val cleanView = if (clean.isEmpty) None
       else {
         val c = readLeaves(spark, tableDir, clean, sch, m.fmt, m.colMap,
@@ -3754,7 +3775,7 @@ object VersionedTable {
     val reason = coalesce(cs.map { case (n, e) =>
       when(!expr(e), lit(n))
     }: _*)
-    val marked = df.withColumn("__graft_viol", reason).localCheckpoint()
+    val marked = graft.core.Materialize.once(df.withColumn("__graft_viol", reason))
     val good = marked.filter(col("__graft_viol").isNull).drop("__graft_viol")
     val bad = marked.filter(col("__graft_viol").isNotNull)
       .withColumnRenamed("__graft_viol", "violated_constraint")
@@ -5980,8 +6001,7 @@ object VersionedTable {
     // count must too
     if (m.deletes.nonEmpty && m.dirty.nonEmpty) {
       val dirtySet = m.dirtySet
-      val perFile = readLeaves(spark, tableDir, m.deletes)
-        .select(col("file"), col("pos")).distinct()
+      val perFile = readVectors(spark, tableDir, m.deletes).distinct()
         .groupBy(col("file")).agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1))
       for ((file, n) <- perFile; leaf <- dirtySet.find(l => file.startsWith(l + "/")))

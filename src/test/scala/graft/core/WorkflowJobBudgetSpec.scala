@@ -1,16 +1,11 @@
 package graft.core
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.CatalogOps
 import graft.model.{DeletionCriteria, JobConfig, Metrics}
-import graft.testkit.SparkTestSession
+import graft.testkit.{SparkJobs, SparkTestSession}
 
 /** Pins the Spark job budget of the Hive deletion workflow: one
   * per-partition census before and one after the delete, and metastore
@@ -48,36 +43,9 @@ class WorkflowJobBudgetSpec extends AnyFunSuite with BeforeAndAfterEach {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
   }
 
-  private val Tag = "graft.test.jobBudget"
-
-  /** Spark jobs submitted by `body` — from this thread or threads it
-    * starts, which inherit the tag — while other suites share the context.
-    */
   private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val id = java.util.UUID.randomUUID().toString
-    val marker = s"$id-end"
-    val seen = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(Tag, id)
-      val result = body
-      // one listener queue delivers events in order: once a job started
-      // after `body` has been seen, so has every job `body` started
-      sc.setLocalProperty(Tag, marker)
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!seen.contains(marker) && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(seen.contains(marker), "the marker job never reached the listener")
-      (result, seen.asScala.count(_ == id))
-    } finally {
-      sc.setLocalProperty(Tag, null)
-      sc.removeSparkListener(listener)
-    }
+    val (result, jobs) = SparkJobs.jobsOf(spark)(body)
+    (result, jobs.size)
   }
 
   test(s"a workflow run that rewrites one partition and empties another takes at most $WorkflowBudget jobs") {

@@ -170,6 +170,23 @@ class ConstraintSpec extends AnyFunSuite {
       "a clean batch must not touch the quarantine table")
   }
 
+  test("under the checkpoint-dir conf a quarantine append checkpoints its batch reliably") {
+    val s = SparkTestSession.isolated()
+    val ckpt = Files.createTempDirectory("graft-ck-quar-ckpt").toString
+    val dir = mkTable("quar-ckpt")
+    val qDir = Files.createTempDirectory("graft-ck-quar-ckpt-q").toString + "/q"
+    s.conf.set(graft.core.Materialize.CheckpointDirConf, ckpt)
+    try {
+      val batch = s.createDataFrame(Seq((5L, "a", "2024-01-03", 50L),
+        (6L, "b", "2024-01-03", -6L))).toDF("id", "kind", "pdate", "amount")
+      assert(VersionedTable.appendQuarantine(batch, dir, "pdate", qDir) === ((1L, 1L)))
+    } finally s.conf.unset(graft.core.Materialize.CheckpointDirConf)
+    val files = Files.walk(java.nio.file.Paths.get(ckpt))
+    val written = try files.filter(p => Files.isRegularFile(p)).count() finally files.close()
+    assert(written > 0, s"the batch must be checkpointed into $ckpt")
+    assert(VersionedTable.readLatest(spark, qDir).select("id").as[Long].collect().toSeq === Seq(6L))
+  }
+
   test("the dry-run probe reports per-constraint counts without writing") {
     val dir = mkTable("probe")
     VersionedTable.addCheckConstraint(spark, dir, "kind_known", "kind IN ('a','b')")

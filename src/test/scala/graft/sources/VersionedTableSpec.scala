@@ -228,6 +228,10 @@ class VersionedTableSpec extends AnyFunSuite {
       else r))
     VersionedTable.deleteMergeOnRead(spark, dir, $"id" % 2L === 0L)
     commit(model.last.filterNot(_._1 % 2L == 0L))
+    // a delete whose affected tuples span every partition, so the probe's
+    // tuples come from more than one task
+    VersionedTable.delete(spark, dir, "p", $"id" > 10L)
+    commit(model.last.filterNot(_._1 > 10L))
     VersionedTable.compact(spark, dir, "p")
     commit(model.last)
     assert(VersionedTable.latestVersion(spark, dir) === model.size - 1)
