@@ -25,7 +25,7 @@ final class BackupManager(strategy: BackupStrategy, metrics: Metrics) {
     * against, and the workflow's pre-deletion census.
     */
   def createBackupWithCensus(spark: SparkSession, config: JobConfig,
-      partitions: Seq[String]): (String, PartitionCensus) = {
+      partitions: Seq[String]): (String, PartitionCensus[String]) = {
     logger.info(s"Starting backup creation for ${partitions.size} partitions")
     audit.info(s"BACKUP_START - Table: ${config.fullTableName}, Partitions: $partitions")
     val start = System.currentTimeMillis()
@@ -75,13 +75,12 @@ final class BackupManager(strategy: BackupStrategy, metrics: Metrics) {
     }
   }
 
-  /** C12: retention GC; failures logged, never fatal
-    * (BackupManager.java:143-151).
+  /** C12: retention GC. A failure propagates; the workflow's step-7 rule
+    * keeps it from failing the run (BackupManager.java:143-151).
     */
   def cleanupOldBackups(spark: SparkSession, config: JobConfig): Unit = {
     logger.info(s"Cleaning up old backups (retention: ${config.backupRetentionDays} days)")
-    try strategy.cleanupOldBackups(spark, config)
-    catch { case e: Exception => logger.warn(s"Failed to cleanup old backups: ${e.getMessage}") }
+    strategy.cleanupOldBackups(spark, config)
   }
 }
 

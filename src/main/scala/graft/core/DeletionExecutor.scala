@@ -25,17 +25,18 @@ final case class DeletionResult(recordsDeleted: Long, droppedPartitions: Set[Str
   *     builds the retained scan and counts it again — three full scans of
   *     the batch including the write. The executor takes the workflow's
   *     pre-deletion [[PartitionCensus]] (per-partition total and matching,
-  *     one grouped aggregate shared with the backup check and step 4), so
-  *     the write is its only scan.
+  *     one job shared with the backup check and step 4), so the write is
+  *     its only scan; the run's record and partition `Metrics` are
+  *     [[DeletionWorkflow]]'s, read off the same census.
   *   - **Per-partition branch, not per-batch.** The reference branches on
   *     batch-TOTAL retained: if a batch mixes a fully-emptied partition with
   *     partially-deleted ones, dynamic partition overwrite writes no rows
   *     for the emptied partition and therefore NEVER TOUCHES it — its
   *     doomed rows silently survive (latent reference bug; deliberate fix
   *     per SURVEY.md §7.4 policy "fix the outright bugs"). We decide
-  *     drop-vs-rewrite per partition: empty ⇒ metadata drop + directory
-  *     delete; partial ⇒ rewrite; untouched (retained == total) ⇒ skipped
-  *     entirely (the reference pointlessly rewrites those).
+  *     drop-vs-rewrite per partition ([[PartitionCensus.action]]): empty ⇒
+  *     metadata drop + directory delete; partial ⇒ rewrite; untouched ⇒
+  *     skipped entirely (the reference pointlessly rewrites those).
   *   - **No double execution of the retained plan** (§3.2): the retained
   *     DataFrame is executed exactly once, by the write; counts come from
   *     the census.
@@ -53,77 +54,32 @@ final class DeletionExecutor(spark: SparkSession, config: JobConfig, metrics: Me
 
   private def pc = config.partitionColumn
 
-  /** C3: entry. Returns records deleted plus the partitions removed by the
-    * whole-partition fast path (the post-validation structure check must
-    * not expect those to still exist — SURVEY.md §7.4 / C11). `census`
-    * is the pre-deletion census of `partitions`.
+  /** C3/C4: delete from `partitions` in batches of
+    * `partitionParallelism`; `census` is their pre-deletion census. Returns
+    * records deleted plus the partitions removed by the whole-partition
+    * fast path (the post-validation structure check must not expect those
+    * to still exist — SURVEY.md §7.4 / C11).
     */
-  def executeDeletion(partitions: Seq[String], census: PartitionCensus): DeletionResult = {
-    logger.info(s"Starting deletion execution for ${partitions.size} partitions")
-    audit.info(s"DELETION_START - Table: ${config.fullTableName}, " +
-      s"Partitions: $partitions, Criteria: ${config.deletionCriteria}")
-    val start = System.currentTimeMillis()
-    try {
-      val result =
-        if (config.dryRun) {
-          logger.info("DRY RUN MODE - no deletion performed")
-          DeletionResult(performDryRun(partitions, census), Set.empty)
-        } else performActualDeletion(partitions, census)
-      val ms = System.currentTimeMillis() - start
-      logger.info(s"Deletion completed. Records deleted: ${result.recordsDeleted}, Duration: $ms ms")
-      audit.info(s"DELETION_SUCCESS - Records deleted: ${result.recordsDeleted}, Duration: $ms ms")
-      metrics.recordRecordsDeleted(result.recordsDeleted)
-      result
-    } catch {
-      case e: Exception =>
-        audit.error(s"DELETION_FAILED - Error: ${e.getMessage}")
-        throw new RuntimeException("Failed to execute deletion", e)
-    }
-  }
-
-  /** C5: dry run — would-delete / would-retain counts, no mutation, read
-    * off the census (reference runs two COUNT queries —
-    * DeletionExecutor.java:84-96).
-    */
-  def performDryRun(partitions: Seq[String], census: PartitionCensus): Long = {
-    val toDelete = census.matching
-    val retained = census.retained
-    logger.info(s"DRY RUN RESULTS: delete=$toDelete retain=$retained partitions=$partitions")
-    audit.info(s"DRY_RUN - Would delete $toDelete records, retain $retained records")
-    toDelete
-  }
-
-  private def performActualDeletion(partitions: Seq[String], census: PartitionCensus): DeletionResult = {
+  def executeDeletion(partitions: Seq[String], census: PartitionCensus[String]): DeletionResult = {
     val batchSize = math.min(config.partitionParallelism, math.max(partitions.size, 1))
     val batches = partitions.grouped(batchSize).toSeq
     logger.info(s"Processing ${partitions.size} partitions in ${batches.size} batches")
     batches.zipWithIndex.map { case (batch, i) =>
       logger.info(s"Processing batch ${i + 1}/${batches.size} with ${batch.size} partitions")
-      val r = processBatch(batch, census)
-      // count PARTITIONS, not batches — the summary metric must agree with
-      // the per-partition detail entries
-      metrics.incrementPartitionsProcessed(batch.size)
-      r
+      processBatch(batch, census)
     }.foldLeft(DeletionResult(0, Set.empty))(_ + _)
   }
 
   /** C4: the deletion kernel for one batch of partitions. */
-  private def processBatch(batch: Seq[String], census: PartitionCensus): DeletionResult = {
+  private def processBatch(batch: Seq[String], census: PartitionCensus[String]): DeletionResult = {
+    // Per-partition decision (see class doc); absent partitions are skipped
+    val byAction = batch.groupBy(census.action).withDefaultValue(Nil)
+    val emptied = byAction(PartitionCensus.Action.drop)
+    val rewritten = byAction(PartitionCensus.Action.rewrite)
     val counts = census.over(batch)
-    val before = counts.total
-    metrics.recordRecordsRead(before)
-
-    // Per-partition decision (see class doc). Partitions absent from the
-    // census hold zero rows — nothing to delete or drop.
-    val emptied = batch.filter { p => val c = census(p); c.total > 0 && c.retained == 0 }
-    val rewritten = batch.filter { p => val c = census(p); c.retained > 0 && c.retained < c.total }
-    val untouched = batch.filter(p => census(p).matching == 0)
-
-    val retainedTotal = counts.retained
-    metrics.recordRecordsRetained(retainedTotal)
-    logger.info(s"Batch: $before records before, $retainedTotal to retain, " +
-      s"${before - retainedTotal} to delete " +
-      s"(${emptied.size} partitions emptied, ${rewritten.size} rewritten, ${untouched.size} untouched)")
+    logger.info(s"Batch: ${counts.total} records before, ${counts.retained} to retain, " +
+      s"${counts.matching} to delete (${emptied.size} partitions emptied, " +
+      s"${rewritten.size} rewritten, ${byAction(PartitionCensus.Action.skip).size} untouched)")
 
     emptied.foreach(dropPartitionWithData)
 
@@ -142,8 +98,7 @@ final class DeletionExecutor(spark: SparkSession, config: JobConfig, metrics: Me
       audit.info(s"PARTITIONS_REWRITTEN - ${rewritten.mkString(",")}")
     }
 
-    batch.foreach(p => metrics.recordPartitionMetric(p, census(p).retained))
-    DeletionResult(before - retainedTotal, emptied.toSet)
+    DeletionResult(counts.matching, emptied.toSet)
   }
 
   /** Whole-partition fast path: location lookup → metastore drop → physical

@@ -14,10 +14,9 @@ import graft.partition.PartitionId
   * Scale re-design: the reference probes each candidate partition with its
   * own serial `SELECT COUNT(*)` job (PartitionHandler.java:102-123) — at
   * thousands of partitions that is thousands of sequential Spark jobs. We
-  * replace the N probes with ONE grouped aggregation over all candidates
-  * (`groupBy(partitionColumn).count()` under the delete predicate): a single
-  * scan with map-side partial aggregation, no meaningful shuffle (one row
-  * per partition). The reference's per-partition error conservatism
+  * replace the N probes with ONE [[PartitionCensus]] of all candidates: a
+  * single scan, one job, no shuffle (one count pair per partition). The
+  * reference's per-partition error conservatism
   * ("on probe error include the partition", PartitionHandler.java:118-122)
   * becomes whole-probe conservatism: if the grouped probe fails we include
   * every candidate — a strict superset, still safe.
@@ -43,17 +42,10 @@ final class PartitionHandler(spark: SparkSession, config: JobConfig) {
 
     val affected = config.deletionCriteria.deletePredicate match {
       case None => candidates // no criteria ⇒ nothing to probe (validate() prevents this)
-      case Some(pred) =>
+      case Some(_) =>
         try {
-          val matched = table
-            .where(col(pc).isin(candidates: _*))
-            .where(pred)
-            .groupBy(col(pc))
-            .count()
-            .collect()
-            .map(_.getString(0))
-            .toSet
-          candidates.filter(matched.contains)
+          val matched = census(candidates).affected.toSet
+          candidates.filter(matched)
         } catch {
           // a malformed predicate (typo'd column, bad syntax) is permanent:
           // every later step would hit it again — fail NOW, before the
@@ -119,21 +111,15 @@ final class PartitionHandler(spark: SparkSession, config: JobConfig) {
     logger.info(s"All ${partitions.size} partitions validated successfully")
   }
 
-  /** A1: the [[PartitionCensus]] of the given partitions — one grouped
-    * aggregate, `count(1)` and `count(when(deletePredicate, 1))` per
-    * partition, in a single partition-pruned scan.
+  /** A1: the [[PartitionCensus]] of the given partitions, in a single
+    * partition-pruned scan.
     */
-  def census(partitions: Seq[String]): PartitionCensus =
-    if (partitions.isEmpty) PartitionCensus.Empty
+  def census(partitions: Seq[String]): PartitionCensus[String] =
+    if (partitions.isEmpty) PartitionCensus.empty
     else {
       val pred = config.deletionCriteria.deletePredicate
         .getOrElse(throw new IllegalStateException("Deletion criteria is empty"))
-      PartitionCensus(table
-        .where(col(pc).isin(partitions: _*))
-        .groupBy(col(pc))
-        .agg(count(lit(1)), count(when(pred, 1)))
-        .collect()
-        .map(r => r.getString(0) -> PartitionCensus.Counts(r.getLong(1), r.getLong(2)))
-        .toMap)
+      PartitionCensus.of(table.where(col(pc).isin(partitions: _*)), Seq(col(pc)), pred)
+        .map(_.head)
     }
 }

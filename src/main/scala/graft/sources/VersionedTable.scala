@@ -159,8 +159,10 @@ object VersionedTable {
     * value, matching the leaf directory rendering).
     */
   private def specTupleFrame(cols: Seq[String])(df: DataFrame): DataFrame =
-    df.select(cols.map(c =>
-      SpecField.parse(c).valueIn(df).cast("string")): _*)
+    df.select(specValues(cols, df): _*)
+
+  private def specValues(cols: Seq[String], df: DataFrame): Seq[Column] =
+    cols.map(c => SpecField.parse(c).valueIn(df).cast("string"))
 
   /** Hive's directory spelling for a NULL partition value. The write
     * path refuses to create such a leaf ([[writeDataDirCols]]); readers
@@ -1521,6 +1523,24 @@ object VersionedTable {
     rewriteCommit(spark, tableDir, partCol, "delete")(
       deletePlan(spark, tableDir, Membership(pred)))
 
+  /** [[delete]] for a caller that has already found `affected`, the
+    * tuples ([[specKeys]]) of version `base` holding a matching row. When
+    * the head is still `base` the kernel takes them instead of probing
+    * again; when it is not (a commit landed in between, or a lost CAS is
+    * retried) it probes as [[delete]] does.
+    */
+  private[graft] def deleteAt(spark: SparkSession, tableDir: String,
+      partCol: String, pred: Column, base: Int,
+      affected: Set[Seq[String]]): Unit =
+    rewriteCommit(spark, tableDir, partCol, "delete", Some(base -> affected))(
+      deletePlan(spark, tableDir, Membership(pred)))
+
+  /** The spec-value tuple columns of `df` (spec order, as strings) — the
+    * projection the copy-on-write kernels key affected tuples on.
+    */
+  private[graft] def specKeys(partCol: String, df: DataFrame): Seq[Column] =
+    specValues(specOf(partCol), df)
+
   /** Copy-on-write delete keyed on MEMBERSHIP: rows whose `keys`
     * column tuples each appear in the paired frame (AND all residual
     * conjuncts) disappear — the SQL
@@ -1768,14 +1788,20 @@ object VersionedTable {
     * A lost CAS re-runs the whole kernel, `plan` included.
     */
   private def rewriteCommit(spark: SparkSession, tableDir: String,
-      partCol: String, what: String)(plan: VManifest => Rewrite): Unit =
+      partCol: String, what: String,
+      known: Option[(Int, Set[Seq[String]])] = None)(
+      plan: VManifest => Rewrite): Unit =
     withCommitRetry {
       val v = latestVersion(spark, tableDir) + 1
       val m = readManifestFull(spark, tableDir, v - 1)
       val cols = specOf(partCol)
       requireSpec(m, cols, what)
       val r = plan(m)
-      val affected = specTuples(cols, r.probe)
+      // tuples found on an earlier read count only while that read is
+      // still the head; a lost CAS means another commit took version v,
+      // so a retry always probes
+      val affected = known.collect { case (base, tuples) if base == v - 1 => tuples }
+        .getOrElse(specTuples(cols, r.probe))
       if (affected.isEmpty && r.add.isEmpty) {
         writeManifest(spark, tableDir, v, m)
         return

@@ -180,6 +180,47 @@ class DeletionJobIntegrationSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(after == before, "auto-restore must leave the table byte-identical")
   }
 
+  /** One run through the workflow driver with a throw injected at `step`. */
+  private def runFailingAt(step: String, criteria: DeletionCriteria): (Boolean, Metrics) = {
+    val metrics = new Metrics
+    val cfg = config(criteria)
+    val ok = DeletionWorkflow.execute(new HiveDeletion(spark, cfg, metrics), metrics, cfg.dryRun,
+      onPhase = s => if (s == step) throw new RuntimeException(s"injected failure at $s"))
+    (ok, metrics)
+  }
+
+  /** 20260101: 3 of 10 rows INACTIVE (rewritten); 20260102: all INACTIVE (emptied). */
+  private def loadTwoPartitions(): Unit = {
+    loadSampleData(10, "20260101")
+    val rows = (11 to 14).map(i => s"($i, 'U$i', 'INACTIVE', TIMESTAMP '2026-02-13 09:00:00')")
+    spark.sql(s"INSERT INTO $table PARTITION (partition_id='20260102') VALUES ${rows.mkString(", ")}")
+  }
+
+  test("a failure at post-validation restores the table byte-identically") {
+    loadTwoPartitions()
+    val before = spark.sql(s"SELECT * FROM $table ORDER BY id").collect().toSeq
+    val (ok, metrics) = runFailingAt("6_post_validation",
+      DeletionCriteria(whereClause = Some("status = 'INACTIVE'")))
+    assert(!ok, "workflow must report failure")
+    assert(metrics.backupCreated && metrics.totalRecordsDeleted == 7,
+      "the failure came after the deletion")
+    val after = spark.sql(s"SELECT * FROM $table ORDER BY id").collect().toSeq
+    assert(after == before, "auto-restore must leave the table byte-identical")
+    assert(catalog.listPartitions(table).sorted == Seq("20260101", "20260102"))
+  }
+
+  test("a failure at step 7 keeps the deletion and restores nothing") {
+    loadTwoPartitions()
+    val (ok, metrics) = runFailingAt("7_cleanup_backups",
+      DeletionCriteria(whereClause = Some("status = 'INACTIVE'")))
+    assert(ok, "a cleanup-only failure must not fail the run")
+    assert(metrics.validationPassed)
+    assert(count() == 7, "the deletion stands")
+    assert(spark.sql(s"SELECT count(*) FROM $table WHERE status='INACTIVE'").first().getLong(0) == 0)
+    assert(catalog.listPartitions(table) == Seq("20260101"))
+    assert(spark.table(metrics.backupLocation.get).count() == 14, "the backup is kept as made")
+  }
+
   test("mixed batch: emptied and partially-deleted partitions in ONE batch both resolve") {
     // This is the latent reference bug our per-partition branch fixes
     // (SURVEY.md §7.4): batch-total retained > 0 would leave the emptied

@@ -1,5 +1,6 @@
 package graft.core
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions.col
@@ -9,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.CatalogOps
 import graft.model.{DeletionCriteria, JobConfig, Metrics}
+import graft.sources.VersionedTable
 import graft.testkit.{PropertyChecks, SparkTestSession}
 
 /** Property-based deletion invariants over random predicates and random
@@ -24,8 +26,10 @@ import graft.testkit.{PropertyChecks, SparkTestSession}
   * including the per-partition drop/rewrite/skip branches and batching) —
   * not a model of it. Statuses are sometimes NULL, so predicates over
   * them yield NULL for some rows: those rows do not match and survive.
-  * A second property runs the whole DeletionWorkflow, dry and real, and
-  * checks its Metrics against per-partition counts modelled row by row.
+  * A second property runs the whole workflow, dry and real, on both
+  * backends — the Hive table and a versioned copy of the same fixture —
+  * and checks that both keep the same rows and report the same Metrics,
+  * and that both match per-partition counts modelled row by row.
   */
 class DeletionPropertySpec extends AnyFunSuite with PropertyChecks with BeforeAndAfterAll {
   private lazy val spark = SparkTestSession.spark
@@ -168,36 +172,56 @@ class DeletionPropertySpec extends AnyFunSuite with PropertyChecks with BeforeAn
     }
   }
 
+  /** A run's `Metrics` as the workflow contract defines them: record
+    * counts, partitions, per-partition retained rows, backup and
+    * validation flags (the backup's location differs per backend).
+    */
+  private def contract(m: Metrics) =
+    (m.totalRecordsRead, m.totalRecordsDeleted, m.totalRecordsRetained,
+      m.partitionsProcessed, m.partitionMetrics.toMap, m.backupCreated, m.validationPassed)
+
+  private def versionedIds(dir: String): Set[Long] =
+    VersionedTable.readLatest(spark, dir).select("id").collect().map(_.getLong(0)).toSet
+
   test("workflow metrics match the per-row model, dry run and real run") {
     forAll(fixtureGen, whereGen, windowGen) { (fx, where, window) =>
       loadFixture(fx)
       val criteria = criteriaOf(where, window)
+      val pred = criteria.deletePredicate.get
       val model = modelCounts(criteria)
       val before = ids()
-      val clue = s"where=[$where] window=$window rows=${fx.rows.size}"
       // a partition is affected when a row in it matches
       val affected = model.collect { case (p, (_, m)) if m > 0 => p }.toSet
       val read = affected.toSeq.map(model(_)._1).sum
       val deleted = model.values.map(_._2).sum
+      val survivors = before -- spark.table(table).where(pred)
+        .select("id").collect().map(_.getLong(0)).toSet
 
-      val dry = new Metrics
-      assert(DeletionWorkflow.run(spark, configOf(fx, criteria, dryRun = true), dry), clue)
-      assert(ids() == before, clue)
-      assert(dry.totalRecordsDeleted == deleted, clue)
-      assert((dry.totalRecordsRead, dry.totalRecordsRetained, dry.partitionsProcessed) == ((0, 0, 0)), clue)
-      assert(dry.partitionMetrics.isEmpty && !dry.backupCreated, clue)
+      // the same fixture as a versioned table, copied before any run
+      val dir = Files.createTempDirectory("graft-prop-vt").toString
+      VersionedTable.create(spark.table(table), dir, "partition_id")
+      val backends = Seq[(String, (Boolean, Metrics) => Boolean, () => Set[Long])](
+        ("hive", (dryRun, m) => DeletionWorkflow.run(spark, configOf(fx, criteria, dryRun), m),
+          () => ids()),
+        ("versioned", (dryRun, m) => VersionedDeletionWorkflow.run(spark, dir, "partition_id",
+          pred, m, dryRun = dryRun), () => versionedIds(dir)))
 
-      val real = new Metrics
-      assert(DeletionWorkflow.run(spark, configOf(fx, criteria), real), clue)
-      assert(real.totalRecordsRead == read, clue)
-      assert(real.totalRecordsDeleted == deleted, clue)
-      assert(real.totalRecordsRetained == read - deleted, clue)
-      assert(real.partitionsProcessed == affected.size, clue)
-      assert(real.partitionMetrics.toMap ==
-        affected.map(p => p -> (model(p)._1 - model(p)._2)).toMap, clue)
-      assert(real.backupCreated == affected.nonEmpty, clue)
-      assert(real.validationPassed == affected.nonEmpty, clue)
-      assert(spark.table(table).count() == before.size - deleted, clue)
+      val outcomes = backends.map { case (backend, run, survivingIds) =>
+        val clue = s"backend=$backend where=[$where] window=$window rows=${fx.rows.size}"
+        val dry = new Metrics
+        assert(run(true, dry), clue)
+        assert(survivingIds() == before, clue)
+        assert(contract(dry) == ((0L, deleted, 0L, 0, Map.empty[String, Long], false, false)), clue)
+
+        val real = new Metrics
+        assert(run(false, real), clue)
+        assert(contract(real) == ((read, deleted, read - deleted, affected.size,
+          affected.map(p => p -> (model(p)._1 - model(p)._2)).toMap,
+          affected.nonEmpty, affected.nonEmpty)), clue)
+        assert(survivingIds() == survivors, clue)
+        (contract(dry), contract(real), survivingIds())
+      }
+      assert(outcomes.distinct.size == 1, s"backends disagree: where=[$where] window=$window")
       dropBackups()
     }
   }

@@ -139,6 +139,23 @@ class VersionedWorkflowSpec extends AnyFunSuite {
     assert(VersionedTable.versions(spark, dir) === Seq(0, 1, 2))
   }
 
+  test("a matching row committed between the census and the delete is deleted too") {
+    val dir = newTable(sampleData())
+    val metrics = new Metrics
+    // a new partition value the step-1 census never saw; the kernel must
+    // notice the head moved past the census version and probe again
+    val late = Seq((11L, "User11", "INACTIVE", Timestamp.valueOf("2026-02-14 09:00:00"),
+      "20260214")).toDF("id", "name", "status", "row_create_ts", "partition_id")
+    val ok = VersionedDeletionWorkflow.run(spark, dir, "partition_id",
+      col("status") === "INACTIVE", metrics,
+      onPhase = step => if (step == "5_deletion")
+        VersionedTable.append(late, dir, "partition_id"))
+    assert(ok, "the run must succeed")
+    assert(VersionedTable.readLatest(spark, dir).filter(col("status") === "INACTIVE").isEmpty,
+      "no matching row may survive")
+    assert(ids(dir) === Seq(1L, 3L, 4L, 6L, 7L, 9L, 10L))
+  }
+
   test("a step-7 cleanup failure does NOT roll back a validated deletion") {
     // round-7 advice (medium): a vacuum failure after the deletion had
     // committed and validated used to trigger rollback, resurrecting the
