@@ -1,14 +1,17 @@
 package graft.backup
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.lit
 import org.slf4j.LoggerFactory
 
 import graft.core.{PartitionCensus, PartitionHandler}
 import graft.model.{JobConfig, Metrics}
 
 /** Backup facade: validate partitions exist → strategy backup → source
-  * census → count equality check → metrics (reference:
-  * backup/BackupManager.java; SURVEY.md §2.7 C6/C7/C12).
+  * census and backup count in one job → count equality check → metrics
+  * (reference: backup/BackupManager.java; SURVEY.md §2.7 C6/C7/C12). The
+  * totals are compared, not per-partition counts: a path backup reads
+  * numeric-looking partition values back as numbers.
   */
 final class BackupManager(strategy: BackupStrategy, metrics: Metrics) {
   private val logger = LoggerFactory.getLogger(classOf[BackupManager])
@@ -33,11 +36,15 @@ final class BackupManager(strategy: BackupStrategy, metrics: Metrics) {
     try {
       handler.validatePartitionsExist(partitions)
       val location = strategy.createBackup(spark, config, partitions)
-      val census =
-        try handler.census(partitions)
-        catch {
+      // the source census and the backup's row count, in one job
+      val (census, backedUp) =
+        try {
+          val Seq(source, backup) = PartitionCensus.ofEach(Seq(handler.censusInput(partitions),
+            (strategy.read(spark, config, location), Nil, lit(false))))
+          (source.map(_.head), backup.total)
+        } catch {
           case e: Exception =>
-            // The copy has committed and nothing is deleted yet. A census
+            // The copy has committed and nothing is deleted yet. A count
             // that cannot be taken (e.g. a predicate that fails at run
             // time) fails the run after the backup: the copy is recorded
             // as the run's backup, so the workflow restores from it.
@@ -45,8 +52,11 @@ final class BackupManager(strategy: BackupStrategy, metrics: Metrics) {
             throw e
         }
       val expected = census.total
-      if (!strategy.validateBackup(spark, config, location, expected))
+      if (backedUp != expected) {
+        logger.error(s"Backup validation failed. Expected: $expected, Actual: $backedUp")
         throw new RuntimeException("Backup validation failed")
+      }
+      logger.info(s"Backup validation passed. Record count: $backedUp")
       val ms = System.currentTimeMillis() - start
       logger.info(s"Backup created successfully in $ms ms. Location: $location")
       audit.info(s"BACKUP_SUCCESS - Location: $location, Records: $expected, Duration: $ms ms")

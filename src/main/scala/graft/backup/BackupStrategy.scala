@@ -1,6 +1,6 @@
 package graft.backup
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model.JobConfig
 
 /** Pluggable backup strategy (reference: backup/BackupStrategy.java).
@@ -17,9 +17,10 @@ trait BackupStrategy {
     */
   def restoreFromBackup(spark: SparkSession, config: JobConfig, backupLocation: String): Unit
 
-  /** Verify the backup holds exactly `expectedRecordCount` rows. */
-  def validateBackup(spark: SparkSession, config: JobConfig,
-      backupLocation: String, expectedRecordCount: Long): Boolean
+  /** The backup's rows, for the manager's count check (counted in one job
+    * with the source partitions' census).
+    */
+  def read(spark: SparkSession, config: JobConfig, backupLocation: String): DataFrame
 
   /** Remove backups older than the configured retention. Never fatal. */
   def cleanupOldBackups(spark: SparkSession, config: JobConfig): Unit

@@ -3,7 +3,7 @@ package graft.backup
 import java.text.SimpleDateFormat
 import java.util.Date
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.slf4j.LoggerFactory
 
@@ -69,7 +69,7 @@ final class PathBackupStrategy extends BackupStrategy {
     // positionally with no implicit cast guarantee — realign to the target
     // table's column order AND types explicitly.
     val targetSchema = spark.table(config.fullTableName).schema
-    spark.read.format("orc").load(backupLocation)
+    read(spark, config, backupLocation)
       .select(targetSchema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
       .write
       .mode(SaveMode.Overwrite)
@@ -77,17 +77,8 @@ final class PathBackupStrategy extends BackupStrategy {
     logger.info("Data restored successfully from path backup")
   }
 
-  override def validateBackup(spark: SparkSession, config: JobConfig,
-      backupLocation: String, expectedRecordCount: Long): Boolean =
-    try {
-      val n = spark.read.format("orc").load(backupLocation).count()
-      if (n != expectedRecordCount) {
-        logger.error(s"Backup validation failed. Expected: $expectedRecordCount, Actual: $n")
-        false
-      } else { logger.info(s"Backup validation passed. Record count: $n"); true }
-    } catch {
-      case e: Exception => logger.error(s"Error validating backup: ${e.getMessage}"); false
-    }
+  override def read(spark: SparkSession, config: JobConfig, backupLocation: String): DataFrame =
+    spark.read.format("orc").load(backupLocation)
 
   override def cleanupOldBackups(spark: SparkSession, config: JobConfig): Unit =
     try {

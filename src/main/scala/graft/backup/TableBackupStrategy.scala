@@ -3,7 +3,7 @@ package graft.backup
 import java.text.SimpleDateFormat
 import java.util.Date
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.slf4j.LoggerFactory
 
@@ -51,34 +51,27 @@ final class TableBackupStrategy extends BackupStrategy {
     logger.info(s"Restoring from backup table: $backupLocation")
     // insertInto + dynamic overwrite: only partitions present in the backup
     // are replaced; never combine with partitionBy (reference TEST_FIX.md).
-    spark.table(backupLocation)
+    read(spark, config, backupLocation)
       .write
       .mode(SaveMode.Overwrite)
       .insertInto(config.fullTableName)
     logger.info("Data restored successfully from backup table")
   }
 
-  override def validateBackup(spark: SparkSession, config: JobConfig,
-      backupLocation: String, expectedRecordCount: Long): Boolean =
-    try {
-      val n = spark.table(backupLocation).count()
-      if (n != expectedRecordCount) {
-        logger.error(s"Backup validation failed. Expected: $expectedRecordCount, Actual: $n")
-        false
-      } else { logger.info(s"Backup validation passed. Record count: $n"); true }
-    } catch {
-      case e: Exception => logger.error(s"Error validating backup: ${e.getMessage}"); false
-    }
+  override def read(spark: SparkSession, config: JobConfig, backupLocation: String): DataFrame =
+    spark.table(backupLocation)
 
   override def cleanupOldBackups(spark: SparkSession, config: JobConfig): Unit =
     try {
       val catalog = new CatalogOps(spark)
       val prefix = s"${config.tableName}_backup_"
       val cutoff = System.currentTimeMillis() - config.backupRetentionDays * 24L * 60 * 60 * 1000
-      catalog.listTables(config.database).filter(_.startsWith(prefix)).foreach { t =>
+      // one listing and one properties read for every backup table
+      val backups = catalog.listTables(config.database).filter(_.startsWith(prefix))
+      catalog.tableProperties(config.database, backups).foreach { case (t, props) =>
         val full = s"${config.database}.$t"
         try {
-          catalog.tableProperty(full, "backup_timestamp").foreach { ts =>
+          props.get("backup_timestamp").foreach { ts =>
             if (propFormat.parse(ts).getTime < cutoff) {
               logger.info(s"Dropping old backup table: $full")
               catalog.dropTable(full)

@@ -2,20 +2,32 @@ package graft.catalog
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{CatalogUtils, ExternalCatalogUtils}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, Literal}
+import org.apache.spark.sql.types.StringType
 import org.slf4j.LoggerFactory
 
 import graft.partition.PartitionId
 
-/** Thin wrappers over the "metastore algebra" — the catalog DDL surface the
+/** Thin wrappers over the "metastore algebra" — the catalog surface the
   * reference drives via raw SQL strings (SURVEY.md §2.6 D1–D11) — plus the
   * Hadoop FileSystem operations (S7–S9).
   *
-  * Everything here is driver-side metadata work: single-digit-row results,
-  * NameNode/metastore RPCs. None of it touches table data, so it is
-  * scale-independent — correctness-first, no tuning needed. A command's
-  * rows are collected and filtered on the driver: collecting an eagerly
-  * run command's result schedules no Spark job, while a Catalyst
-  * `count`/`filter`/`select` over it schedules one per lookup.
+  * Everything here is driver-side metadata work: NameNode/metastore RPCs
+  * that never touch table data and run no Spark job. Lookups go through
+  * the session catalog (`sessionState.catalog`), not SQL text: a
+  * `spark.sql` command pays for parse, analysis, an execution id with its
+  * plan string and several metastore client calls on top of the one
+  * lookup it wraps. Each lookup takes a set of partitions or tables and
+  * costs one catalog call for the set, so a run's metastore traffic grows
+  * with its steps, not with its partition count. DDL (drop, set
+  * properties, refresh) stays SQL, because the commands also refresh the
+  * session's cached relation; partition values reach their `PARTITION
+  * (...)` clauses only through `PartitionId.partitionSpec`.
+  *
+  * Partition lookups assume one STRING partition column, like the
+  * reference (deletion/PartitionHandler.java:63-74).
   */
 final class CatalogOps(spark: SparkSession) {
   private val logger = LoggerFactory.getLogger(classOf[CatalogOps])
@@ -23,24 +35,16 @@ final class CatalogOps(spark: SparkSession) {
   private def q(ident: String): String =
     ident.split('.').map(p => s"`$p`").mkString(".")
 
-  /** D1: list partition values of a single-string-partition-column table.
-    * Reference parses `partition_id=20260213` with `split("=")(1)`
-    * (deletion/PartitionHandler.java:63-74); we keep the single-column
-    * assumption but unescape via the same split.
+  private def catalog = spark.sessionState.catalog
+  private def ident(table: String): TableIdentifier =
+    spark.sessionState.sqlParser.parseTableIdentifier(table)
+
+  /** D1: the partition values of a single-partition-column table, from the
+    * catalog's partition names (`partition_id=20260213`), unescaped.
     */
   def listPartitions(table: String): Seq[String] =
-    spark.sql(s"SHOW PARTITIONS ${q(table)}")
-      .collect()
-      .map(_.getString(0).split("=", 2)(1))
-      .toSeq
-
-  /** D2: probe a single partition's existence. */
-  def partitionExists(table: String, partitionColumn: String, value: String): Boolean =
-    try {
-      spark.sql(
-        s"SHOW PARTITIONS ${q(table)} PARTITION (${PartitionId.partitionSpec(partitionColumn, value)})")
-        .collect().nonEmpty
-    } catch { case _: Exception => false }
+    catalog.listPartitionNames(ident(table))
+      .map(n => ExternalCatalogUtils.unescapePathName(n.split("=", 2)(1)))
 
   /** D3: table existence/access probe (reference issues DESCRIBE TABLE —
     * validation/ValidationManager.java:110-117; the catalog API is the
@@ -48,25 +52,35 @@ final class CatalogOps(spark: SparkSession) {
     */
   def tableExists(table: String): Boolean = spark.catalog.tableExists(table)
 
-  /** D4: physical location of a partition via
-    * `DESCRIBE FORMATTED t PARTITION (pc='v')` → row `col_name='Location'`
-    * (reference: deletion/DeletionExecutor.java:173-186). Must be read
-    * BEFORE the partition is dropped — unreadable after (SURVEY.md §7.4).
+  /** D4: the physical location of each of `values` that exists, as
+    * `DESCRIBE FORMATTED … PARTITION` shows it (reference:
+    * deletion/DeletionExecutor.java:173-186), in one filtered partition
+    * listing. Must be read BEFORE the partitions are dropped — unreadable
+    * after (SURVEY.md §7.4).
     */
-  def partitionLocation(table: String, partitionColumn: String, value: String): Option[String] =
-    spark.sql(
-      s"DESCRIBE FORMATTED ${q(table)} PARTITION (${PartitionId.partitionSpec(partitionColumn, value)})")
-      .collect()
-      .collectFirst { case r if r.getAs[String]("col_name") == "Location" => r.getAs[String]("data_type") }
-      .filter(_.nonEmpty)
+  def partitionLocations(table: String, partitionColumn: String,
+      values: Seq[String]): Map[String, String] =
+    if (values.isEmpty) Map.empty
+    else {
+      val id = ident(table)
+      // the catalog binds the filter by the column's name as it stores it
+      val pc = catalog.getTableMetadata(id).partitionColumnNames
+        .find(_.equalsIgnoreCase(partitionColumn)).getOrElse(partitionColumn)
+      val in = In(AttributeReference(pc, StringType)(), values.map(Literal(_)))
+      catalog.listPartitionsByFilter(id, Seq(in)).flatMap { p =>
+        p.storage.locationUri.map(u => p.spec(pc) -> CatalogUtils.URIToString(u))
+      }.toMap
+    }
 
-  /** D5: drop a partition's metastore entry. For EXTERNAL tables this does
-    * NOT remove data files — pair with [[deleteDirectory]]
+  /** D5: drop the metastore entries of `values` with ONE `ALTER TABLE …
+    * DROP IF EXISTS PARTITION (…), PARTITION (…)`. For EXTERNAL tables this
+    * does NOT remove data files — pair with [[deleteDirectory]]
     * (reference: DeletionExecutor.java:189-197).
     */
-  def dropPartition(table: String, partitionColumn: String, value: String): Unit =
-    spark.sql(
-      s"ALTER TABLE ${q(table)} DROP IF EXISTS PARTITION (${PartitionId.partitionSpec(partitionColumn, value)})")
+  def dropPartitions(table: String, partitionColumn: String, values: Seq[String]): Unit =
+    if (values.nonEmpty)
+      spark.sql(s"ALTER TABLE ${q(table)} DROP IF EXISTS " +
+        values.map(v => s"PARTITION (${PartitionId.partitionSpec(partitionColumn, v)})").mkString(", "))
 
   /** D6: set table properties (backup provenance tagging —
     * backup/HiveTableBackupStrategy.java:46-52).
@@ -84,16 +98,16 @@ final class CatalogOps(spark: SparkSession) {
     * backup/HiveTableBackupStrategy.java:100-109).
     */
   def listTables(database: String): Seq[String] =
-    spark.sql(s"SHOW TABLES IN `$database`")
-      .collect().map(_.getAs[String]("tableName")).toSeq
+    catalog.externalCatalog.listTables(database)
 
-  /** D8: read one table property (backup timestamp for retention GC —
+  /** D8: the properties of each of `tables` in `database` that exists, in
+    * one catalog call (backup timestamps for retention GC —
     * backup/HiveTableBackupStrategy.java:117-128).
     */
-  def tableProperty(table: String, key: String): Option[String] =
-    spark.sql(s"SHOW TBLPROPERTIES ${q(table)}")
-      .collect()
-      .collectFirst { case r if r.getAs[String]("key") == key => r.getAs[String]("value") }
+  def tableProperties(database: String, tables: Seq[String]): Map[String, Map[String, String]] =
+    if (tables.isEmpty) Map.empty
+    else catalog.externalCatalog.getTablesByName(database, tables)
+      .map(t => t.identifier.table -> t.properties).toMap
 
   /** D9 */
   def dropTable(table: String): Unit =

@@ -81,7 +81,7 @@ final class DeletionExecutor(spark: SparkSession, config: JobConfig, metrics: Me
       s"${counts.matching} to delete (${emptied.size} partitions emptied, " +
       s"${rewritten.size} rewritten, ${byAction(PartitionCensus.Action.skip).size} untouched)")
 
-    emptied.foreach(dropPartitionWithData)
+    dropPartitionsWithData(emptied)
 
     if (rewritten.nonEmpty) {
       val retain = config.deletionCriteria.retainPredicate.get
@@ -101,26 +101,35 @@ final class DeletionExecutor(spark: SparkSession, config: JobConfig, metrics: Me
     DeletionResult(counts.matching, emptied.toSet)
   }
 
-  /** Whole-partition fast path: location lookup → metastore drop → physical
-    * directory delete, strictly in that order (the location is unreadable
-    * after the drop; SURVEY.md §7.4). A physical shortcut Spark will not do
-    * on its own (SURVEY.md §4.1).
+  /** Whole-partition fast path for a batch's emptied partitions: one
+    * location lookup → one metastore drop → the physical directory
+    * deletes, strictly in that order (the locations are unreadable after
+    * the drop; SURVEY.md §7.4). A physical shortcut Spark will not do on
+    * its own (SURVEY.md §4.1). The metastore calls take the whole set, so
+    * their count does not grow with the partitions emptied.
     */
-  private def dropPartitionWithData(partition: String): Unit = {
-    try {
-      val location = catalog.partitionLocation(config.fullTableName, pc, partition)
-      catalog.dropPartition(config.fullTableName, pc, partition)
-      audit.info(s"PARTITION_DROPPED - Partition: $pc=$partition")
-      location.foreach { loc =>
-        catalog.deleteDirectory(loc)
+  private def dropPartitionsWithData(partitions: Seq[String]): Unit = if (partitions.nonEmpty) {
+    val locations = failingAs(partitions.mkString(",")) {
+      val locs = catalog.partitionLocations(config.fullTableName, pc, partitions)
+      catalog.dropPartitions(config.fullTableName, pc, partitions)
+      locs
+    }
+    partitions.foreach { p =>
+      audit.info(s"PARTITION_DROPPED - Partition: $pc=$p")
+      locations.get(p).foreach { loc =>
+        failingAs(p)(catalog.deleteDirectory(loc))
         logger.info(s"Deleted partition directory: $loc")
         audit.info(s"DATA_DELETED - Location: $loc")
       }
-    } catch {
+    }
+  }
+
+  private def failingAs[A](partition: String)(body: => A): A =
+    try body
+    catch {
       case e: Exception =>
         metrics.incrementPartitionsFailed()
         audit.error(s"PARTITION_DELETE_FAILED - Partition: $pc=$partition, Error: ${e.getMessage}")
         throw new RuntimeException(s"Failed to drop partition and delete data: $partition", e)
     }
-  }
 }

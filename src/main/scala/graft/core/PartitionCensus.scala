@@ -3,16 +3,17 @@ package graft.core
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions.{coalesce, lit, struct}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.{array, coalesce, lit}
 
 /** Per-partition row counts of one table state: every row, and the rows
   * the delete predicate matches (TRUE only — a NULL predicate result does
-  * not match). Taken once per state by [[PartitionCensus.of]], it is the
-  * only source of the workflow's record counts: the backup check, the
-  * step-4 figures, the drop/rewrite/skip decision, the dry-run plan, the
-  * run's `Metrics` and the post-deletion checks all read it instead of
-  * scanning the table again.
+  * not match). Taken once per state by [[PartitionCensus.of]], or by
+  * [[PartitionCensus.ofEach]] in the same job as the check that reads
+  * that state, it is the only source of the workflow's record counts: the
+  * backup check, the step-4 figures, the drop/rewrite/skip decision, the
+  * dry-run plan, the run's `Metrics` and the post-deletion checks all read
+  * it instead of scanning the table again.
   *
   * `retained` is exactly `total - matching`, because the rewrite keeps
   * `NOT coalesce(pred, false)` — the complement of the matched rows.
@@ -57,37 +58,62 @@ object PartitionCensus {
 
   def empty[K]: PartitionCensus[K] = PartitionCensus(Map.empty[K, Counts])
 
-  /** The census of `df` keyed on the string values of `keys`, in ONE job
-    * with no exchange: each task folds its rows into a per-key map and
-    * the driver sums the per-task maps. Rows stay in Spark's internal
-    * form (`queryExecution.toRdd`): the key is one struct value, compared
-    * by its bytes against the previous row's (a file's rows share one
-    * partition), so a row costs a hash lookup only when its key changes.
-    * A grouped aggregate would plan a shuffle that adaptive execution
-    * runs as a separate map job before the collect.
+  /** One input of [[ofEach]]: a frame, its key columns and the delete
+    * predicate.
     */
-  def of(df: DataFrame, keys: Seq[Column], pred: Column): PartitionCensus[Seq[String]] = {
-    val n = keys.length
-    val rows = df.select(struct(keys.map(_.cast("string")): _*), coalesce(pred, lit(false)))
+  type Input = (DataFrame, Seq[Column], Column)
+
+  /** The census of `df` keyed on the string values of `keys`, in ONE job
+    * with no exchange (see [[ofEach]]).
+    */
+  def of(df: DataFrame, keys: Seq[Column], pred: Column): PartitionCensus[Seq[String]] =
+    ofEach(Seq((df, keys, pred))).head
+
+  /** One census per input, all from ONE job with no exchange: each input
+    * is tagged with its index and the inputs are unioned; each task folds
+    * its rows into a per-(tag, key) map and the driver sums the per-task
+    * maps. Rows stay in Spark's internal form (`queryExecution.toRdd`):
+    * the key is one string array, compared by its bytes against the
+    * previous row's (a file's rows share one partition), so a row costs a
+    * hash lookup only when its key changes. A grouped aggregate would plan
+    * a shuffle that adaptive execution runs as a separate map job before
+    * the collect, and a job per input would pay each job's fixed cost
+    * again. An input with no keys yields one entry, its total and
+    * matching rows, under the empty key.
+    */
+  def ofEach(inputs: Seq[Input]): Seq[PartitionCensus[Seq[String]]] = {
+    val n = inputs.length
+    val rows = inputs.zipWithIndex.map { case ((df, keys, pred), i) =>
+      df.select(lit(i), array(keys.map(_.cast("string")): _*).cast("array<string>"),
+        coalesce(pred, lit(false)))
+    }.reduce(_ union _)
     val perTask = rows.queryExecution.toRdd.mapPartitions { it =>
-      val acc = new java.util.HashMap[InternalRow, Array[Long]]
-      var key: InternalRow = null
+      val acc = Array.fill(n)(new java.util.HashMap[ArrayData, Array[Long]])
+      var tag = -1
+      var key: ArrayData = null
       var c: Array[Long] = null
       it.foreach { r =>
-        val k = r.getStruct(0, n)
-        if (c == null || k != key) {
+        val t = r.getInt(0)
+        val k = r.getArray(1)
+        if (c == null || t != tag || k != key) {
+          tag = t
           key = k.copy()
-          c = acc.computeIfAbsent(key, _ => Array(0L, 0L))
+          c = acc(t).computeIfAbsent(key, _ => Array(0L, 0L))
         }
         c(0) += 1
-        if (r.getBoolean(1)) c(1) += 1
+        if (r.getBoolean(2)) c(1) += 1
       }
-      acc.asScala.iterator.map { case (k, c) =>
-        ((0 until n).map(i => if (k.isNullAt(i)) null else k.getUTF8String(i).toString): Seq[String]) ->
-          Counts(c(0), c(1))
+      acc.iterator.zipWithIndex.flatMap { case (m, t) =>
+        m.asScala.iterator.map { case (k, c) =>
+          (t, (0 until k.numElements()).map(i =>
+            if (k.isNullAt(i)) null else k.getUTF8String(i).toString): Seq[String], Counts(c(0), c(1)))
+        }
       }
     }.collect()
-    PartitionCensus(perTask.groupMapReduce(_._1)(_._2)((a, b) =>
-      Counts(a.total + b.total, a.matching + b.matching)))
+    val byTag = perTask.groupBy(_._1)
+    (0 until n).map { t =>
+      PartitionCensus(byTag.getOrElse(t, Array.empty).groupMapReduce(_._2)(_._3)((a, b) =>
+        Counts(a.total + b.total, a.matching + b.matching)))
+    }
   }
 }

@@ -116,10 +116,15 @@ final class PartitionHandler(spark: SparkSession, config: JobConfig) {
     */
   def census(partitions: Seq[String]): PartitionCensus[String] =
     if (partitions.isEmpty) PartitionCensus.empty
-    else {
-      val pred = config.deletionCriteria.deletePredicate
-        .getOrElse(throw new IllegalStateException("Deletion criteria is empty"))
-      PartitionCensus.of(table.where(col(pc).isin(partitions: _*)), Seq(col(pc)), pred)
-        .map(_.head)
-    }
+    else PartitionCensus.ofEach(Seq(censusInput(partitions))).head.map(_.head)
+
+  /** The census input of the given partitions, for a caller that takes
+    * their census in one job with another count ([[PartitionCensus.ofEach]]);
+    * its keys are one-element partition-value tuples.
+    */
+  def censusInput(partitions: Seq[String]): PartitionCensus.Input = {
+    val pred = config.deletionCriteria.deletePredicate
+      .getOrElse(throw new IllegalStateException("Deletion criteria is empty"))
+    (table.where(col(pc).isin(partitions: _*)), Seq(col(pc)), pred)
+  }
 }

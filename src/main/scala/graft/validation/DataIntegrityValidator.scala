@@ -1,10 +1,11 @@
 package graft.validation
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.slf4j.LoggerFactory
 
 import graft.catalog.CatalogOps
+import graft.core.PartitionCensus
 import graft.model.JobConfig
 
 /** Sampling-based post-deletion integrity check (reference:
@@ -16,18 +17,40 @@ import graft.model.JobConfig
   *   - the predicate is applied as a composed `Column` directly on the
   *     sampled DataFrame — the reference's temp-view + SQL COUNT detour
   *     (DataIntegrityValidator.java:101-117) is unnecessary;
-  *   - the sample fraction is sized from the row count the caller's
-  *     post-deletion census already holds, so the violation count over
-  *     the sample is the only Spark action; the caller passes only
-  *     partitions that still exist (the reference checks structure for
-  *     legitimately dropped partitions too — a false negative we fix at
-  *     the call site, SURVEY.md §7.4).
+  *   - the validator plans the sample ([[sample]]) and the caller counts
+  *     its matching rows in the same job as its post-deletion census, so
+  *     the check adds no Spark job of its own. The fraction is sized from
+  *     the expected survivor count, because the census total is not known
+  *     while the job is planned;
+  *   - the caller passes only partitions that still exist (the reference
+  *     checks structure for legitimately dropped partitions too — a false
+  *     negative we fix at the call site, SURVEY.md §7.4), and the
+  *     structure check reads one partition listing for all of them.
   */
 final class DataIntegrityValidator(spark: SparkSession, config: JobConfig) {
   private val logger = LoggerFactory.getLogger(classOf[DataIntegrityValidator])
 
-  /** `total` is the row count of `partitions`. */
-  def validateIntegrity(partitions: Seq[String], total: Long): Boolean = {
+  /** O1: the census input of the check — a Bernoulli sample without
+    * replacement of `partitions`, fraction sized so the expected sample ≈
+    * validationSampleSize when they hold `expected` rows; full data when
+    * small (DataIntegrityValidator.java:82-96). None when there is nothing
+    * to sample or no predicate to check.
+    */
+  def sample(partitions: Seq[String], expected: Long): Option[PartitionCensus.Input] =
+    for (pred <- config.deletionCriteria.deletePredicate if partitions.nonEmpty) yield {
+      val data = spark.table(config.fullTableName)
+        .where(col(config.partitionColumn).isin(partitions: _*))
+      val cap = config.validationSampleSize
+      val sampled =
+        if (expected <= cap) data
+        else data.sample(withReplacement = false, cap.toDouble / expected)
+      (sampled, Nil, pred)
+    }
+
+  /** `total` is the row count of `partitions`; `sampledMatching` is the
+    * number of [[sample]]'s rows that match the delete predicate.
+    */
+  def validateIntegrity(partitions: Seq[String], total: Long, sampledMatching: Long): Boolean = {
     logger.info("Starting data integrity validation")
     if (partitions.isEmpty) {
       logger.info("No surviving partitions to validate (all records deleted)")
@@ -40,7 +63,10 @@ final class DataIntegrityValidator(spark: SparkSession, config: JobConfig) {
         logger.info("No data to validate (all records deleted)")
         return true
       }
-      if (!verifyNoMatchingRecords(sampleRetainedData(partitions, total))) return false
+      if (sampledMatching > 0) {
+        logger.error(s"Found $sampledMatching sampled records matching deletion criteria")
+        return false
+      }
       if (!verifyPartitionStructure(partitions)) return false
       logger.info("Data integrity validation passed")
       true
@@ -51,35 +77,13 @@ final class DataIntegrityValidator(spark: SparkSession, config: JobConfig) {
     }
   }
 
-  /** O1: Bernoulli sample without replacement, fraction sized so the
-    * expected sample ≈ validationSampleSize; full data when small
-    * (DataIntegrityValidator.java:82-96).
-    */
-  private def sampleRetainedData(partitions: Seq[String], total: Long): DataFrame = {
-    val data = spark.table(config.fullTableName)
-      .where(col(config.partitionColumn).isin(partitions: _*))
-    val cap = config.validationSampleSize
-    if (total <= cap) data
-    else data.sample(withReplacement = false, cap.toDouble / total)
-  }
-
-  private def verifyNoMatchingRecords(sampled: DataFrame): Boolean = {
-    val pred = config.deletionCriteria.deletePredicate
-      .getOrElse(return true)
-    val matching = sampled.where(pred).count()
-    if (matching > 0) {
-      logger.error(s"Found $matching sampled records matching deletion criteria")
-      false
-    } else true
-  }
-
-  /** D2-based partition existence probe, one catalog call per partition —
+  /** Partition existence, from one catalog listing for all partitions —
     * metadata-only, no data scan.
     */
   private def verifyPartitionStructure(partitions: Seq[String]): Boolean = {
-    val catalog = new CatalogOps(spark)
+    val existing = new CatalogOps(spark).listPartitions(config.fullTableName).toSet
     partitions.forall { p =>
-      val ok = catalog.partitionExists(config.fullTableName, config.partitionColumn, p)
+      val ok = existing.contains(p)
       if (!ok) logger.error(s"Partition structure validation failed for: $p")
       ok
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.slf4j.LoggerFactory
 
 import graft.catalog.CatalogOps
-import graft.core.PartitionHandler
+import graft.core.{PartitionCensus, PartitionHandler}
 import graft.model.{JobConfig, Metrics}
 
 /** Validation failure — fail the job, trigger recovery
@@ -42,9 +42,10 @@ final class ValidationManager(spark: SparkSession, config: JobConfig, metrics: M
   }
 
   /** C10: count-tolerance + sampled integrity + zero-matching-remain.
-    * Skippable via config (ValidationManager.java:75-78). One
-    * [[graft.core.PartitionCensus]] of `partitions` counts for all three
-    * checks; only the integrity check's Bernoulli sample scans again.
+    * Skippable via config (ValidationManager.java:75-78). ONE job takes
+    * the [[graft.core.PartitionCensus]] of `partitions`, which counts for
+    * all three checks, and the matching rows of the integrity check's
+    * Bernoulli sample; the sample is sized from `recordsRetained`.
     *
     * `droppedPartitions` — partitions legitimately removed by the
     * whole-partition fast path; they are excluded from the structure check
@@ -63,11 +64,14 @@ final class ValidationManager(spark: SparkSession, config: JobConfig, metrics: M
     audit.info(s"POST_VALIDATION_START - Expected deleted: $recordsDeleted, " +
       s"Expected retained: $recordsRetained")
     try {
-      val census = handler.census(partitions)
-      validateRecordCounts(census.total, recordsRetained)
       val surviving = partitions.filterNot(droppedPartitions.contains)
+      val sample = integrity.sample(surviving, recordsRetained)
+      val censuses = PartitionCensus.ofEach(handler.censusInput(partitions) +: sample.toSeq)
+      val census = censuses.head.map(_.head)
+      validateRecordCounts(census.total, recordsRetained)
       val survivors = census.over(surviving)
-      if (!integrity.validateIntegrity(surviving, survivors.total))
+      val sampledMatching = censuses.lift(1).fold(0L)(_.matching)
+      if (!integrity.validateIntegrity(surviving, survivors.total, sampledMatching))
         throw new ValidationException("Data integrity validation failed")
       validateNoMatchingRecordsRemain(survivors.matching)
       logger.info("Post-deletion validation passed")

@@ -2,13 +2,15 @@ package graft.backup
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.CatalogOps
 import graft.model.{DeletionCriteria, JobConfig, Metrics}
 import graft.recovery.RecoveryManager
-import graft.testkit.SparkTestSession
+import graft.testkit.{AuditLines, MetastoreCalls, SparkTestSession}
 
 /** Direct coverage for the backup strategies, the facade's validation
   * semantics, retention GC, and the failure→restore recovery loop
@@ -53,9 +55,9 @@ class BackupRecoverySpec extends AnyFunSuite with BeforeAndAfterEach {
     val location = mgr.createBackup(spark, config(), Seq("20260101", "20260102"))
 
     assert(metrics.backupCreated && metrics.backupLocation.contains(location))
-    assert(catalog.tableProperty(location, "backup_source").contains(table))
-    assert(catalog.tableProperty(location, "backup_partitions")
-      .contains("20260101,20260102"))
+    val props = catalog.tableProperties(db, Seq(location.stripPrefix(s"$db."))).values.head
+    assert(props.get("backup_source").contains(table))
+    assert(props.get("backup_partitions").contains("20260101,20260102"))
     assert(spark.table(location).count() === 10)
 
     // simulate a botched deletion, then recover
@@ -82,6 +84,22 @@ class BackupRecoverySpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(catalog.tableExists(fresh), "fresh backup must survive GC")
   }
 
+  test("table strategy: retention GC reads every backup's timestamp in one catalog call") {
+    val mgr = BackupManager.create(config(), new Metrics)
+    val now = new java.text.SimpleDateFormat("yyyy-MM-dd HH:mm:ss").format(new java.util.Date)
+    def gcWith(backups: Int): MetastoreCalls.Calls = {
+      (1 to backups).foreach(i => spark.sql(
+        s"CREATE TABLE IF NOT EXISTS $db.bk_source_backup_gc$i (id BIGINT) STORED AS ORC " +
+          s"TBLPROPERTIES ('backup_timestamp'='$now')"))
+      MetastoreCalls.of(spark)(mgr.cleanupOldBackups(spark, config()))._2
+    }
+    val one = gcWith(1)
+    val four = gcWith(4)
+    assert(one.sqlExecutions == four.sqlExecutions, s"1 backup: $one, 4 backups: $four")
+    assert((1 to 4).forall(i => catalog.tableExists(s"$db.bk_source_backup_gc$i")),
+      "fresh backups must survive GC")
+  }
+
   test("path strategy: ORC backup with metadata file round-trips") {
     val base = Files.createTempDirectory("graft-bk").toString
     val cfg = config("path", Some(base))
@@ -106,10 +124,38 @@ class BackupRecoverySpec extends AnyFunSuite with BeforeAndAfterEach {
       mgr.createBackup(spark, config(), Seq("20260101", "29990101")))
     assert(e.getCause.getMessage.contains("29990101"))
 
-    val strat = new TableBackupStrategy
-    val loc = strat.createBackup(spark, config(), Seq("20260101"))
-    assert(strat.validateBackup(spark, config(), loc, expectedRecordCount = 5))
-    assert(!strat.validateBackup(spark, config(), loc, expectedRecordCount = 99))
+    // the manager's count check: a copy that lost a row fails the backup,
+    // and the run records no backup to restore from
+    val metrics = new Metrics
+    val (outcome, audit) = AuditLines.of(
+      new BackupManager(new LossyCopy, metrics).createBackupWithCensus(spark, config(), Seq("20260101")))
+    assert(outcome.failed.get.getCause.getMessage == "Backup validation failed")
+    assert(audit.exists(_.startsWith("BACKUP_FAILED")), audit)
+    assert(metrics.backupLocation.isEmpty && !metrics.backupCreated)
+
+    // an exact copy passes the same check
+    val exact = new Metrics
+    val (loc, census) = new BackupManager(new TableBackupStrategy, exact)
+      .createBackupWithCensus(spark, config(), Seq("20260101"))
+    assert(census.total == 5 && exact.backupLocation.contains(loc))
+  }
+
+  /** A table backup whose copy loses the row with id 101. */
+  private final class LossyCopy extends BackupStrategy {
+    private val table = new TableBackupStrategy
+    def createBackup(spark: SparkSession, config: JobConfig, partitions: Seq[String]): String = {
+      val loc = s"${config.fullTableName}_backup_lossy"
+      spark.table(config.fullTableName)
+        .where(col(config.partitionColumn).isin(partitions: _*) && col("id") =!= 101)
+        .write.format("orc").partitionBy(config.partitionColumn).saveAsTable(loc)
+      loc
+    }
+    def restoreFromBackup(spark: SparkSession, config: JobConfig, location: String): Unit =
+      table.restoreFromBackup(spark, config, location)
+    def read(spark: SparkSession, config: JobConfig, location: String): DataFrame =
+      table.read(spark, config, location)
+    def cleanupOldBackups(spark: SparkSession, config: JobConfig): Unit =
+      table.cleanupOldBackups(spark, config)
   }
 
   test("recovery: disabled auto-recovery, missing backup, and exhausted retries") {

@@ -40,22 +40,25 @@ class CatalogOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(partitionSpec("p", "a\\'b") == "p='a\\\\\\'b'")
   }
 
-  test("partitionExists handles a quote-bearing partition value") {
-    assert(catalog.partitionExists(table, "partition_id", evil))
-    assert(catalog.partitionExists(table, "partition_id", "plain"))
-    assert(!catalog.partitionExists(table, "partition_id", "it's-missing"))
+  test("listPartitions unescapes a quote-bearing partition value") {
+    // the catalog stores the value path-escaped (it%27s-20260101)
+    assert(catalog.listPartitions(table).toSet == Set("plain", evil))
   }
 
-  test("partitionLocation resolves a quote-bearing partition value") {
-    val loc = catalog.partitionLocation(table, "partition_id", evil)
-    assert(loc.isDefined)
-    assert(loc.get.nonEmpty)
+  test("partitionLocations resolves quote-bearing partition values in one lookup") {
+    val locs = catalog.partitionLocations(table, "partition_id", Seq(evil, "plain", "it's-missing"))
+    assert(locs.keySet == Set(evil, "plain"))
+    assert(locs.values.forall(_.nonEmpty))
+    assert(catalog.pathExists(locs("plain")))
   }
 
-  test("dropPartition drops a quote-bearing partition without SQL breakage") {
-    catalog.dropPartition(table, "partition_id", evil)
-    assert(!catalog.partitionExists(table, "partition_id", evil))
+  test("dropPartitions drops quote-bearing partitions in one command without SQL breakage") {
+    val backslashed = "v\\"
+    spark.sql(s"ALTER TABLE $table ADD PARTITION " +
+      s"(${graft.partition.PartitionId.partitionSpec("partition_id", backslashed)})")
+    assert(catalog.listPartitions(table).toSet == Set("plain", evil, backslashed))
+    catalog.dropPartitions(table, "partition_id", Seq(evil, backslashed, "it's-missing"))
     // sibling untouched
-    assert(catalog.partitionExists(table, "partition_id", "plain"))
+    assert(catalog.listPartitions(table) == Seq("plain"))
   }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.CatalogOps
 import graft.model.{DeletionCriteria, JobConfig, Metrics}
-import graft.testkit.SparkTestSession
+import graft.testkit.{AuditLines, SparkTestSession}
 
 /** End-to-end parity suite — reproduces the reference's four golden
   * integration scenarios (HiveTableDeletionJobIntegrationTest.java, expected
@@ -144,7 +144,7 @@ class DeletionJobIntegrationSpec extends AnyFunSuite with BeforeAndAfterEach {
   test("safety: fully-emptied partition takes the drop+delete fast path") {
     loadSampleData(10, "20260101")
     loadSampleData(10, "20260102")
-    val loc02 = catalog.partitionLocation(table, "partition_id", "20260102")
+    val loc02 = catalog.partitionLocations(table, "partition_id", Seq("20260102")).get("20260102")
     assert(loc02.isDefined)
 
     // criteria matches ALL rows of 20260102; no time window (the coarse
@@ -158,7 +158,6 @@ class DeletionJobIntegrationSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(count() == 10)
     assert(catalog.listPartitions(table) == Seq("20260101"), "partition 20260102 must be dropped")
     assert(!catalog.pathExists(loc02.get.stripPrefix("file:")), "partition directory must be deleted")
-    assert(catalog.partitionExists(table, "partition_id", "20260101"))
   }
 
   test("failure after backup triggers auto-restore and leaves data intact") {
@@ -181,11 +180,14 @@ class DeletionJobIntegrationSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   /** One run through the workflow driver with a throw injected at `step`. */
-  private def runFailingAt(step: String, criteria: DeletionCriteria): (Boolean, Metrics) = {
+  private def runFailingAt(step: String, criteria: DeletionCriteria): (Boolean, Metrics) =
+    runWith(config(criteria), step)(throw new RuntimeException(s"injected failure at $step"))
+
+  /** One run through the workflow driver with `hook` run before `step`. */
+  private def runWith(cfg: JobConfig, step: String)(hook: => Unit): (Boolean, Metrics) = {
     val metrics = new Metrics
-    val cfg = config(criteria)
     val ok = DeletionWorkflow.execute(new HiveDeletion(spark, cfg, metrics), metrics, cfg.dryRun,
-      onPhase = s => if (s == step) throw new RuntimeException(s"injected failure at $s"))
+      onPhase = s => if (s == step) hook)
     (ok, metrics)
   }
 
@@ -204,6 +206,27 @@ class DeletionJobIntegrationSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(!ok, "workflow must report failure")
     assert(metrics.backupCreated && metrics.totalRecordsDeleted == 7,
       "the failure came after the deletion")
+    val after = spark.sql(s"SELECT * FROM $table ORDER BY id").collect().toSeq
+    assert(after == before, "auto-restore must leave the table byte-identical")
+    assert(catalog.listPartitions(table).sorted == Seq("20260101", "20260102"))
+  }
+
+  test("a matching row that reaches a surviving partition fails the integrity check and restores the table") {
+    loadTwoPartitions()
+    val before = spark.sql(s"SELECT * FROM $table ORDER BY id").collect().toSeq
+    // a tolerance of one row lets the count check pass, so the sampled
+    // integrity check (the full data at this size) is the one that fires
+    val cfg = config(DeletionCriteria(whereClause = Some("status = 'INACTIVE'")))
+      .copy(validationTolerancePercent = 20.0)
+    val (outcome, audit) = AuditLines.of(runWith(cfg, "6_post_validation") {
+      spark.sql(s"INSERT INTO $table PARTITION (partition_id='20260101') " +
+        "VALUES (99, 'U99', 'INACTIVE', TIMESTAMP '2026-02-13 09:00:00')")
+    })
+    val (ok, metrics) = outcome.get
+    assert(!ok, "workflow must report failure")
+    assert(metrics.backupCreated && !metrics.validationPassed)
+    assert(audit.exists(_.contains("POST_VALIDATION_FAILED - Error: Data integrity validation failed")),
+      audit.mkString("\n"))
     val after = spark.sql(s"SELECT * FROM $table ORDER BY id").collect().toSeq
     assert(after == before, "auto-restore must leave the table byte-identical")
     assert(catalog.listPartitions(table).sorted == Seq("20260101", "20260102"))

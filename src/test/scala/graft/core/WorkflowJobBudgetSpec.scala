@@ -9,13 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.CatalogOps
 import graft.model.{DeletionCriteria, JobConfig, Metrics}
 import graft.sources.VersionedTable
-import graft.testkit.{SparkJobs, SparkTestSession}
+import graft.testkit.{MetastoreCalls, SparkJobs, SparkTestSession}
 
 /** Pins the Spark job budget of the deletion workflow on both backends:
-  * one per-partition census before and one after the delete, and
-  * metastore lookups that run no job. A refactor that quietly brings back
-  * a separate count scan, a second probe of the affected tuples or a
-  * Catalyst query over a command result fails here.
+  * one per-partition census before and one after the delete, each sharing
+  * its job with the safety check that reads the same state, and metastore
+  * lookups that run no job. A refactor that quietly brings back a separate
+  * count scan, a second probe of the affected tuples or a Catalyst query
+  * over a command result fails here. It also pins the Hive path's
+  * metastore round-trips per emptied partition: a lookup or a drop that
+  * goes back to one SQL command per partition fails here.
   */
 class WorkflowJobBudgetSpec extends AnyFunSuite with BeforeAndAfterEach {
   private lazy val spark = SparkTestSession.spark
@@ -24,11 +27,16 @@ class WorkflowJobBudgetSpec extends AnyFunSuite with BeforeAndAfterEach {
   private def catalog = new CatalogOps(spark)
 
   /** Jobs of one `DeletionWorkflow.run` that empties one partition and
-    * rewrites another: identify 1 (census), backup 4 (copy 1, census 1,
-    * backup count 2), deletion 1 (the rewrite), post-validation 3 (census
-    * 1, sample check 2).
+    * rewrites another: identify 1 (census), backup 2 (copy 1, census with
+    * the backup count 1), deletion 1 (the rewrite), post-validation 1
+    * (census with the sample check).
     */
-  private val WorkflowBudget = 9
+  private val WorkflowBudget = 5
+
+  /** Hive client calls one more emptied partition may add to a run; one
+    * SQL command per emptied partition costs ~32.
+    */
+  private val ClientCallsPerEmptied = 12
 
   /** Jobs of one `VersionedDeletionWorkflow.run` that rewrites one leaf,
     * empties one and leaves one untouched: census 1, the rewrite's write,
@@ -36,16 +44,21 @@ class WorkflowJobBudgetSpec extends AnyFunSuite with BeforeAndAfterEach {
     */
   private val VersionedBudget = 5
 
-  override def beforeEach(): Unit = {
+  override def beforeEach(): Unit = load()
+
+  /** 20260101: 2 of 6 rows INACTIVE (rewritten); 20260102 and the
+    * `moreEmptied` partitions after it: all INACTIVE (emptied).
+    */
+  private def load(moreEmptied: Int = 0): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(
       s"""CREATE TABLE $table (id BIGINT, status STRING)
          |PARTITIONED BY (partition_id STRING) STORED AS ORC""".stripMargin)
-    // 20260101: 2 of 6 rows INACTIVE (rewritten); 20260102: all INACTIVE (emptied)
     val mixed = (1 to 6).map(i => s"($i, '${if (i % 3 == 0) "INACTIVE" else "ACTIVE"}')")
     spark.sql(s"INSERT INTO $table PARTITION (partition_id='20260101') VALUES ${mixed.mkString(", ")}")
-    spark.sql(s"INSERT INTO $table PARTITION (partition_id='20260102') VALUES (7, 'INACTIVE'), (8, 'INACTIVE')")
+    (2 to 2 + moreEmptied).foreach(d =>
+      spark.sql(s"INSERT INTO $table PARTITION (partition_id='2026010$d') VALUES (7, 'INACTIVE'), (8, 'INACTIVE')"))
   }
 
   override def afterEach(): Unit = {
@@ -53,6 +66,10 @@ class WorkflowJobBudgetSpec extends AnyFunSuite with BeforeAndAfterEach {
     catalog.listTables(db).filter(_.startsWith("budget_table_backup_"))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
   }
+
+  private def config =
+    JobConfig(db, "budget_table",
+      DeletionCriteria(whereClause = Some("status = 'INACTIVE'")), validationSampleSize = 100)
 
   private def jobsOf[A](body: => A): (A, Int) = {
     val (result, jobs) = SparkJobs.jobsOf(spark)(body)
@@ -69,8 +86,6 @@ class WorkflowJobBudgetSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   test(s"a workflow run that rewrites one partition and empties another takes at most $WorkflowBudget jobs") {
-    val config = JobConfig(db, "budget_table",
-      DeletionCriteria(whereClause = Some("status = 'INACTIVE'")), validationSampleSize = 100)
     val metrics = new Metrics
     withinBudget(WorkflowBudget)(DeletionWorkflow.run(spark, config, metrics))
     assert(metrics.validationPassed)
@@ -94,6 +109,30 @@ class WorkflowJobBudgetSpec extends AnyFunSuite with BeforeAndAfterEach {
       Seq(1L, 2L, 4L, 5L, 9L))
   }
 
+  test(s"each extra emptied partition adds at most $ClientCallsPerEmptied Hive client calls and no SQL execution") {
+    // one untouched partition besides the emptied ones and the rewritten
+    // one; the run that empties more goes first, so any warm-up it pays
+    // only widens the gap it is held to
+    def calls(emptied: Int): MetastoreCalls.Calls = {
+      afterEach()
+      load(emptied - 1)
+      spark.sql(s"INSERT INTO $table PARTITION (partition_id='20260109') VALUES (9, 'ACTIVE')")
+      val metrics = new Metrics
+      val (ok, c) = MetastoreCalls.of(spark)(DeletionWorkflow.run(spark, config, metrics))
+      assert(ok && metrics.totalRecordsDeleted == 2 + 2 * emptied)
+      assert(catalog.listPartitions(table).sorted == Seq("20260101", "20260109"))
+      info(s"$emptied emptied: $c")
+      c
+    }
+    val three = calls(3)
+    val one = calls(1)
+    val perEmptied = (three.hiveClient - one.hiveClient) / 2.0
+    assert(perEmptied <= ClientCallsPerEmptied,
+      s"each extra emptied partition cost $perEmptied Hive client calls ($one vs $three)")
+    assert(three.sqlExecutions == one.sqlExecutions,
+      s"emptying more partitions ran more SQL executions ($one vs $three)")
+  }
+
   test("metastore lookups run no Spark job") {
     catalog.setTableProperties(table, Map("budget_key" -> "v"))
     def noJobs[A](name: String)(lookup: => A): A = {
@@ -101,11 +140,14 @@ class WorkflowJobBudgetSpec extends AnyFunSuite with BeforeAndAfterEach {
       assert(jobs == 0, s"$name ran $jobs Spark jobs")
       r
     }
-    assert(noJobs("partitionExists")(catalog.partitionExists(table, "partition_id", "20260101")))
-    assert(!noJobs("partitionExists")(catalog.partitionExists(table, "partition_id", "29990101")))
-    assert(noJobs("partitionLocation")(catalog.partitionLocation(table, "partition_id", "20260102"))
-      .exists(_.endsWith("partition_id=20260102")))
+    assert(noJobs("listPartitions")(catalog.listPartitions(table)).sorted ==
+      Seq("20260101", "20260102"))
+    val locations = noJobs("partitionLocations")(
+      catalog.partitionLocations(table, "partition_id", Seq("20260102", "29990101")))
+    assert(locations.keySet == Set("20260102"))
+    assert(locations("20260102").endsWith("partition_id=20260102"))
     assert(noJobs("listTables")(catalog.listTables(db)).contains("budget_table"))
-    assert(noJobs("tableProperty")(catalog.tableProperty(table, "budget_key")).contains("v"))
+    assert(noJobs("tableProperties")(catalog.tableProperties(db, Seq("budget_table", "no_such")))
+      .get("budget_table").flatMap(_.get("budget_key")).contains("v"))
   }
 }
